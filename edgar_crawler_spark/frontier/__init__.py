@@ -10,7 +10,7 @@ Re-expresses the reference's single-process crawl loop
 - priority.py    reference crawl ordering + salted priority queue
 - politeness.py  per-host token bucket on a virtual clock
 - fetch.py       applyInPandas fetch stage (simulated network)
-- state.py       atomic snapshot store (checkpoint / exact resume)
+- state.py       incremental snapshot store (checkpoint / exact resume)
 - crawler.py     wave-loop driver with per-partition lineage metrics
 """
 

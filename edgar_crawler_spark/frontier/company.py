@@ -16,16 +16,17 @@ Spark-first model:
 - per wave, `new_ciks = wave CIKs LEFT ANTI dim` (the "not in dict"
   check as a set operation, not a per-row lookup), only those are
   fetched+parsed — an Arrow-batched mapInPandas stage mirroring the
-  reference's requests+parse stage — and the MERGE is
-  `dim UNION new` (insert-if-absent; existing rows are never
-  rewritten, which the `fetched_at_version` lineage column proves);
+  reference's requests+parse stage — and the MERGE appends just the
+  new rows to the dim as a snapshot delta (insert-if-absent; existing
+  rows are never rewritten, which the `fetched_at_version` lineage
+  column proves);
 - enrichment fills missing fact fields from the dim via a broadcast
   left join + coalesce (download_filings.py:648-656).
 
 Scale: the dim is tiny relative to the fact (#companies ≪ #filings)
 — the anti-join broadcasts the dim's cik column, the fetch touches
-only NEW ciks (zero per wave at steady state), and the merge rewrites
-a dim that is metadata-sized. No fact-table shuffle anywhere.
+only NEW ciks (zero per wave at steady state), and the merge writes
+only those. No fact-table shuffle anywhere.
 """
 
 from __future__ import annotations
@@ -148,18 +149,15 @@ def merge_company_info(
     transport_factory=None,
 ) -> DataFrame:
     """Grow-only upsert: fetch info only for ciks NOT already in the
-    dim, union them in. Existing rows pass through untouched (the
-    reference's `if cik not in company_info_dict`)."""
-    spark = wave_ciks.sparkSession
-    if dim is None:
-        dim = spark.createDataFrame([], COMPANY_INFO_SCHEMA)
-    new_ciks = (
-        wave_ciks.select("cik")
-        .distinct()
-        .join(F.broadcast(dim.select("cik")), on="cik", how="left_anti")
-    )
-    fetched = fetch_company_info(new_ciks, version, transport_factory)
-    return dim.unionByName(fetched)
+    dim (the reference's `if cik not in company_info_dict`) and return
+    just those new rows — the caller appends them, so existing rows are
+    never rewritten."""
+    new_ciks = wave_ciks.select("cik").distinct()
+    if dim is not None:
+        new_ciks = new_ciks.join(
+            F.broadcast(dim.select("cik")), on="cik", how="left_anti"
+        )
+    return fetch_company_info(new_ciks, version, transport_factory)
 
 
 def enrich_pages(pages: DataFrame, dim: DataFrame) -> DataFrame:

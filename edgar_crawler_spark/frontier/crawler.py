@@ -6,17 +6,25 @@ loop — the Structured-Streaming dual is foreachBatch over the frontier
 table, but an explicit loop keeps each wave = one atomic snapshot,
 which is the exact-resume contract of the north rule.
 
-Per wave:
- 1. reload state from the last committed snapshot (lineage stays one
-    wave deep — iterative Spark jobs must cut lineage or plans grow
-    unboundedly),
- 2. URL-seen: sharded bloom pre-filter + exact anti-join (seen.py),
- 3. priority + politeness waves (priority.py — salted host buckets),
- 4. fetch the front wave via applyInPandas (fetch.py),
- 5. derive per-partition lineage metrics,
- 6. commit {seen, bloom, frontier, pages, metrics} atomically
-    (state.py). Kill the process anywhere; rerun resumes from the
-    last commit with no double-fetch and no missed URL.
+Per wave, every computation runs once and every table is written once
+(state.py has the store layout):
+ 1. read frontier and seen from the last committed snapshot (lineage
+    stays one wave deep — iterative Spark jobs must cut lineage or
+    plans grow unboundedly); the manifest's row counts answer "is the
+    frontier empty" and size the bloom without a counting job,
+ 2. schedule: URL-seen (sharded bloom pre-filter + exact anti-join,
+    seen.py) then priority + politeness waves (priority.py), written
+    once as the version's scratch `schedule` table,
+ 3. fetch the `wave == 0` rows via applyInPandas (fetch.py), written
+    once as the version's `pages` — nothing re-runs the fetch,
+ 4. one aggregate over that parquet gives n_ok, n_failed and the
+    per-bucket lineage metrics,
+ 5. commit: frontier = the scratch rows with `wave > 0` (every wave-0
+    row produced exactly one page row, so that is unseen minus this
+    wave's fetches, with no join), seen += the wave's urls,
+    company_info += the wave's new CIKs, plus pages and metrics. Kill
+    the process anywhere; rerun resumes from the last commit with no
+    double-fetch and no missed URL.
 
 Failed-after-retries URLs are committed to `seen` with status=failed
 in the pages table (so a bounded run terminates); the reference's
@@ -34,15 +42,16 @@ from pyspark.sql import functions as F
 from .canon import canonicalize_url
 from .company import enrich_pages, merge_company_info
 from .fetch import RobotsPolicy, SimulatedTransport, fetch_wave
-from .priority import assign_waves
+from .priority import assign_waves, bucket_partitioned
 from .seen import build_sharded_bloom, filter_unseen
-from .state import SnapshotStore
+from .state import SnapshotStore, files_for
 
 FRONTIER_COLS = ["url", "cik", "company", "form_type", "filing_date", "accession"]
 
-METRICS_SCHEMA_DOC = (
-    "wave, host_bucket, partition_id, n_urls, n_ok, n_failed, "
-    "sum_attempts, sum_bytes, t_first, t_last, urls_per_sec"
+METRICS_SCHEMA = (
+    "wave long, host_bucket int, partition_id int, n_urls long, n_ok long, "
+    "n_failed long, sum_attempts long, sum_bytes long, t_first double, "
+    "t_last double, urls_per_sec double"
 )
 
 
@@ -52,6 +61,35 @@ class CrawlResult:
     n_fetched: int
     n_failed: int
     versions: list[int] = field(default_factory=list)
+
+
+def wave_metrics(pages: DataFrame) -> list:
+    """Per-(wave, host_bucket) lineage rows of a written pages table.
+    `partition_id` is the fetch task that wrote the rows, read from
+    its part-file name."""
+    pid = F.regexp_extract(F.col("_metadata.file_name"), r"^part-(\d+)", 1)
+    return (
+        pages.withColumn("_pid", pid.cast("int"))
+        .groupBy("wave", "host_bucket")
+        .agg(
+            F.min("_pid").alias("partition_id"),
+            F.count(F.lit(1)).alias("n_urls"),
+            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
+            F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias(
+                "n_failed"
+            ),
+            F.sum("attempts").alias("sum_attempts"),
+            F.sum("fetched_bytes").alias("sum_bytes"),
+            F.min("sched_ts").alias("t_first"),
+            F.max("sched_ts").alias("t_last"),
+        )
+        .withColumn(
+            "urls_per_sec",
+            F.col("n_urls")
+            / F.greatest(F.col("t_last") - F.col("t_first"), F.lit(1e-9)),
+        )
+        .collect()
+    )
 
 
 class CrawlJob:
@@ -94,94 +132,75 @@ class CrawlJob:
             summary={"stage": "seed"},
         )
 
-    def _load_state(self) -> tuple[DataFrame, DataFrame] | None:
-        v = self.store.latest()
-        if v is None:
-            return None
-        frontier = self.store.read(self.spark, "frontier", v)
-        seen = self.store.read(self.spark, "seen", v)
-        return frontier, seen
-
     # -- one wave ------------------------------------------------------
 
     def run_wave(self) -> tuple[int, int, int] | None:
         """Run exactly one wave. Returns (n_ok, n_failed, version) or
         None if the frontier is exhausted."""
-        state = self._load_state()
-        if state is None:
+        store, spark = self.store, self.spark
+        if store.latest() is None:
             raise RuntimeError("no snapshot; call seed(frontier) first")
-        frontier, seen = state
-        if not frontier.head(1):
+        if not store.rows("frontier"):
             return None
+        frontier = store.read(spark, "frontier")
+        seen = store.read(spark, "seen")
 
         bloom = build_sharded_bloom(
-            seen, n_shards=self.bloom_shards, fpp=self.bloom_fpp
+            seen, n_shards=self.bloom_shards, fpp=self.bloom_fpp,
+            n=store.rows("seen"),
         )
-        unseen = filter_unseen(frontier, seen, bloom)
+        version = store.begin()
+        sched, n_sched = store.write(
+            version, "schedule",
+            assign_waves(
+                filter_unseen(frontier, seen, bloom), self.n_buckets, self.wave_size
+            ),
+            scratch=True,
+        )
         # A merged/replayed frontier can consist ENTIRELY of already-seen
         # urls; without this check run() would loop forever committing
         # empty waves (frontier non-empty but no fetchable work).
-        if not unseen.head(1):
+        if n_sched == 0:
+            store.abort(version)
             return None
-        waved = assign_waves(unseen, self.n_buckets, self.wave_size)
-        front = waved.filter(F.col("wave") == 0)
 
-        fetched = fetch_wave(
-            front,
-            host_budget_per_sec=self.host_budget_per_sec,
-            n_buckets=self.n_buckets,
-            transport_factory=self.transport_factory,
-            robots=self.robots,
-        ).cache()
-
-        metrics = (
-            fetched.withColumn("_pid", F.spark_partition_id())
-            .groupBy("wave", "host_bucket")
-            .agg(
-                F.min("_pid").alias("partition_id"),
-                F.count(F.lit(1)).alias("n_urls"),
-                F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
-                F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias(
-                    "n_failed"
-                ),
-                F.sum("attempts").alias("sum_attempts"),
-                F.sum("fetched_bytes").alias("sum_bytes"),
-                F.min("sched_ts").alias("t_first"),
-                F.max("sched_ts").alias("t_last"),
-            )
-            .withColumn(
-                "urls_per_sec",
-                F.col("n_urls")
-                / F.greatest(F.col("t_last") - F.col("t_first"), F.lit(1e-9)),
-            )
+        # reading the scratch back drops assign_waves' partitioning:
+        # restore one host bucket per fetch task
+        front = bucket_partitioned(sched.filter(F.col("wave") == 0), self.n_buckets)
+        pages, n_front = store.write(
+            version, "pages",
+            fetch_wave(
+                front,
+                host_budget_per_sec=self.host_budget_per_sec,
+                n_buckets=self.n_buckets,
+                transport_factory=self.transport_factory,
+                robots=self.robots,
+            ),
         )
+        stats = wave_metrics(pages)
+        n_ok = sum(r.n_ok for r in stats)
+        n_failed = sum(r.n_failed for r in stats)
 
         # lazy company-info dim upsert (download_filings.py:572-646):
-        # only ciks NOT already in the dim are "fetched"; the merged
-        # dim rides the same atomic commit as the rest of the state.
-        dim = self.store.read_any(self.spark, "company_info")
-        next_version = (self.store.latest() or 0) + 1
-        new_dim = merge_company_info(
-            dim, fetched.select("cik"), next_version,
+        # only ciks NOT already in the dim are "fetched", and only they
+        # are appended, in the same atomic commit as the rest.
+        new_ciks = merge_company_info(
+            store.read(spark, "company_info"), pages.select("cik"), version,
             self.company_transport_factory,
         )
-
-        done_urls = fetched.select("url")
-        new_seen = seen.unionByName(done_urls).dropDuplicates(["url"])
-        # next frontier = this round's UNSEEN minus this wave's fetches:
-        # already-seen rows drain out of the frontier here instead of
-        # being carried (and re-bloom-filtered) forever.
-        new_frontier = unseen.join(done_urls, on="url", how="left_anti")
-
-        n_ok = fetched.filter(F.col("status") == "ok").count()
-        n_failed = fetched.filter(F.col("status") != "ok").count()
-        version = self.store.commit(
+        # every wave-0 row became exactly one page row, so the rows
+        # left for later waves are the next frontier — no join needed
+        store.commit(
             {
-                "frontier": new_frontier.select(*FRONTIER_COLS),
-                "seen": new_seen,
-                "pages": fetched,
-                "metrics": metrics,
-                "company_info": new_dim,
+                "frontier": sched.filter(F.col("wave") > 0)
+                .select(*FRONTIER_COLS)
+                .coalesce(files_for(n_sched - n_front)),
+                "pages": pages,
+                "metrics": spark.createDataFrame(stats, METRICS_SCHEMA).coalesce(1),
+            },
+            append={
+                "seen": pages.select("url").coalesce(files_for(n_front)),
+                "company_info": new_ciks.coalesce(files_for(n_front)),
             },
             summary={
                 "stage": "wave",
@@ -191,8 +210,8 @@ class CrawlJob:
                 "wave_size": self.wave_size,
                 "host_budget_per_sec": self.host_budget_per_sec,
             },
+            version=version,
         )
-        fetched.unpersist()
         return n_ok, n_failed, version
 
     # -- full run ------------------------------------------------------
@@ -248,7 +267,7 @@ class CrawlJob:
     def company_info(self) -> DataFrame:
         """The company-info dim from the newest snapshot carrying it
         (grow-only across waves; survives kill/resume)."""
-        dim = self.store.read_any(self.spark, "company_info")
+        dim = self.store.read(self.spark, "company_info")
         if dim is None:
             raise RuntimeError("no company_info committed yet")
         return dim
@@ -261,8 +280,7 @@ class CrawlJob:
     def requeue_failed(self) -> int:
         """Reference 'rerun to retry failed' idiom: move failed URLs
         from seen back into the frontier in a new snapshot."""
-        v = self.store.latest()
-        if v is None:
+        if self.store.latest() is None:
             return 0
         pages = self.pages()
         # pages() is the all-versions union: a url that failed once and
@@ -278,8 +296,8 @@ class CrawlJob:
         n = failed.count()
         if n == 0:
             return 0
-        frontier = self.store.read(self.spark, "frontier", v)
-        seen = self.store.read(self.spark, "seen", v)
+        frontier = self.store.read(self.spark, "frontier")
+        seen = self.store.read(self.spark, "seen")
         self.store.commit(
             {
                 "frontier": frontier.unionByName(failed).dropDuplicates(["url"]),

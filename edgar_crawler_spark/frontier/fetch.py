@@ -153,120 +153,22 @@ def _group_key(wave_df: DataFrame) -> str:
     return "_pslot" if "_pslot" in wave_df.columns else "host_bucket"
 
 
-def fetch_extract_wave(
+def _fetch_buckets(
     wave_df: DataFrame,
-    host_budget_per_sec: float = 10.0,
-    n_buckets: int = 8,
-    transport_factory: Callable[[], SimulatedTransport] | None = None,
-    extraction_options=None,
-    robots: RobotsPolicy | None = None,
-    real_pace: bool = False,
+    schema: str,
+    emit: Callable,
+    host_budget_per_sec: float,
+    n_buckets: int,
+    transport_factory: Callable[[], SimulatedTransport] | None,
+    robots: RobotsPolicy | None,
+    real_pace: bool,
 ) -> DataFrame:
-    """Fused fetch + extract: one applyInPandas stage that fetches a
-    URL and runs ExtractItems on the body in the SAME python worker,
-    emitting only the (small) extraction result.
-
-    Why fuse: the page body is the big payload (KBs-MBs); a separate
-    fetch stage materializes it through Arrow → JVM → table → Arrow →
-    python again before extraction ever sees it. When the downstream
-    is extraction (the common case), fusing removes both transfers —
-    at 10^10 pages that is the difference between moving the corpus
-    through the executor twice and zero times. The un-fused
-    `fetch_wave` remains for when raw pages must land in the pages
-    table first (archival crawls); `CrawlJob` uses that path.
-    Politeness, retries and scheduling are identical to `fetch_wave`.
-    """
-    import hashlib as _hashlib  # noqa: PLC0415
-
-    from ..extraction import ExtractionOptions, extract_filing  # noqa: PLC0415
-
-    rate = per_bucket_rate(effective_budget(host_budget_per_sec, robots), n_buckets)
-    tf = transport_factory or SimulatedTransport
-    opts = extraction_options or ExtractionOptions()
-
-    def run_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        import time  # noqa: PLC0415
-
-        transport = tf() if not isinstance(tf, SimulatedTransport) else tf
-        pdf = pdf.sort_values("bucket_rank", kind="mergesort")
-        bucket = TokenBucket(rate=rate, burst=1.0)
-        anchor = time.monotonic()
-        out = []
-        for row in pdf.itertuples(index=False):
-            attempts, body, t = 0, None, 0.0
-            denied = robots is not None and not robots.allows(row.url)
-            while not denied and attempts <= MAX_RETRIES and body is None:
-                attempts += 1
-                t = bucket.acquire()
-                if real_pace:
-                    delay = (anchor + t) - time.monotonic()
-                    if delay > 0:
-                        time.sleep(delay)
-                body = transport.get(row.url, row.form_type, attempts)
-                if body is None and attempts <= MAX_RETRIES:
-                    bucket.now += BACKOFF_FACTOR * (2 ** (attempts - 1))
-            n_items, digest = 0, None
-            if body is not None:
-                md = {
-                    "CIK": row.cik, "Company": row.company,
-                    "Type": row.form_type, "Date": row.filing_date,
-                    "filename": None,
-                }
-                try:
-                    result = extract_filing(body, md, opts) or {}
-                except Exception:  # noqa: BLE001 - quarantine bad rows
-                    result = {}
-                items = sorted(
-                    (k, v) for k, v in result.items()
-                    if (k.startswith(("item_", "part_")) or k == "SIGNATURE")
-                    and isinstance(v, str) and v
-                )
-                n_items = len(items)
-                digest = _hashlib.md5(
-                    "\x00".join(f"{k}\x01{v}" for k, v in items).encode("utf-8")
-                ).hexdigest()
-            out.append(
-                {
-                    "url": row.url, "cik": row.cik, "form_type": row.form_type,
-                    "filing_date": row.filing_date, "accession": row.accession,
-                    "host_bucket": int(row.host_bucket), "wave": int(row.wave),
-                    "attempts": attempts,
-                    "status": ("robots_denied" if denied
-                               else "ok" if body is not None else "failed"),
-                    "sched_ts": float(t),
-                    "fetched_bytes": len(body) if body is not None else 0,
-                    "n_items": n_items, "items_digest": digest,
-                }
-            )
-        return pd.DataFrame(out)
-
-    return wave_df.groupBy(_group_key(wave_df)).applyInPandas(
-        run_bucket, FETCH_EXTRACT_SCHEMA
-    )
-
-
-def fetch_wave(
-    wave_df: DataFrame,
-    host_budget_per_sec: float = 10.0,
-    n_buckets: int = 8,
-    transport_factory: Callable[[], SimulatedTransport] | None = None,
-    robots: RobotsPolicy | None = None,
-    real_pace: bool = False,
-) -> DataFrame:
-    """Fetch one wave. Input needs (url, cik, company, form_type,
-    filing_date, accession, host_bucket, bucket_rank, wave); output is
-    FETCH_SCHEMA — page rows + embedded fetch log (sched_ts is the
-    virtual send time in seconds since the wave start; politeness
-    tests assert the per-host rate from it).
-
-    real_pace=True is the production mode: each task sleeps until the
-    token bucket's scheduled send time (monotonic clock anchored at
-    task start), so the wave's WALL time equals the politeness
-    schedule — the end-to-end rate-cap test asserts
-    wall ≈ n_urls/host_budget on this path. Default off: tests and
-    benches exercise identical scheduling logic without 10-req/s
-    wall-clock waits.
-    """
+    """The retry/politeness loop shared by `fetch_wave` and
+    `fetch_extract_wave`: one task per host bucket, urls in
+    bucket_rank order, every attempt paced by the bucket's token
+    bucket and every retry backed off on its clock. `emit(row, body,
+    attempts, sched_ts, status)` turns one url's outcome into its
+    output row (a dict matching `schema`)."""
     rate = per_bucket_rate(effective_budget(host_budget_per_sec, robots), n_buckets)
     tf = transport_factory or SimulatedTransport
 
@@ -294,29 +196,125 @@ def fetch_wave(
                     bucket.now += BACKOFF_FACTOR * (2 ** (attempts - 1))
             status = ("robots_denied" if denied
                       else "ok" if body is not None else "failed")
-            year = (row.filing_date or "0000")[:4]
-            out.append(
-                {
-                    "url": row.url,
-                    "warc_ts": EPOCH + pd.Timedelta(seconds=t),
-                    "html": body,
-                    "text": "",
-                    "lang": "en",
-                    "cik": row.cik,
-                    "company": row.company,
-                    "form_type": row.form_type,
-                    "filing_date": row.filing_date,
-                    "accession": row.accession,
-                    "filename": f"{row.cik}_{str(row.form_type).replace('-', '')}"
-                                f"_{year}_{row.accession}.htm",
-                    "host_bucket": int(row.host_bucket),
-                    "wave": int(row.wave),
-                    "attempts": attempts,
-                    "status": status,
-                    "sched_ts": float(t),
-                    "fetched_bytes": len(body) if body is not None else 0,
-                }
-            )
+            out.append(emit(row, body, attempts, float(t), status))
         return pd.DataFrame(out)
 
-    return wave_df.groupBy(_group_key(wave_df)).applyInPandas(run_bucket, FETCH_SCHEMA)
+    return wave_df.groupBy(_group_key(wave_df)).applyInPandas(run_bucket, schema)
+
+
+def fetch_extract_wave(
+    wave_df: DataFrame,
+    host_budget_per_sec: float = 10.0,
+    n_buckets: int = 8,
+    transport_factory: Callable[[], SimulatedTransport] | None = None,
+    extraction_options=None,
+    robots: RobotsPolicy | None = None,
+    real_pace: bool = False,
+) -> DataFrame:
+    """Fused fetch + extract: one applyInPandas stage that fetches a
+    URL and runs ExtractItems on the body in the SAME python worker,
+    emitting only the (small) extraction result.
+
+    Why fuse: the page body is the big payload (KBs-MBs); a separate
+    fetch stage materializes it through Arrow → JVM → table → Arrow →
+    python again before extraction ever sees it. When the downstream
+    is extraction (the common case), fusing removes both transfers —
+    at 10^10 pages that is the difference between moving the corpus
+    through the executor twice and zero times. The un-fused
+    `fetch_wave` remains for when raw pages must land in the pages
+    table first (archival crawls); `CrawlJob` uses that path.
+    Politeness, retries and scheduling are `fetch_wave`'s: both run
+    `_fetch_buckets`.
+    """
+    import hashlib as _hashlib  # noqa: PLC0415
+
+    from ..extraction import ExtractionOptions, extract_filing  # noqa: PLC0415
+
+    opts = extraction_options or ExtractionOptions()
+
+    def emit(row, body, attempts, t, status):
+        n_items, digest = 0, None
+        if body is not None:
+            md = {
+                "CIK": row.cik, "Company": row.company,
+                "Type": row.form_type, "Date": row.filing_date,
+                "filename": None,
+            }
+            try:
+                result = extract_filing(body, md, opts) or {}
+            except Exception:  # noqa: BLE001 - quarantine bad rows
+                result = {}
+            items = sorted(
+                (k, v) for k, v in result.items()
+                if (k.startswith(("item_", "part_")) or k == "SIGNATURE")
+                and isinstance(v, str) and v
+            )
+            n_items = len(items)
+            digest = _hashlib.md5(
+                "\x00".join(f"{k}\x01{v}" for k, v in items).encode("utf-8")
+            ).hexdigest()
+        return {
+            "url": row.url, "cik": row.cik, "form_type": row.form_type,
+            "filing_date": row.filing_date, "accession": row.accession,
+            "host_bucket": int(row.host_bucket), "wave": int(row.wave),
+            "attempts": attempts, "status": status, "sched_ts": t,
+            "fetched_bytes": len(body) if body is not None else 0,
+            "n_items": n_items, "items_digest": digest,
+        }
+
+    return _fetch_buckets(
+        wave_df, FETCH_EXTRACT_SCHEMA, emit, host_budget_per_sec, n_buckets,
+        transport_factory, robots, real_pace,
+    )
+
+
+def fetch_wave(
+    wave_df: DataFrame,
+    host_budget_per_sec: float = 10.0,
+    n_buckets: int = 8,
+    transport_factory: Callable[[], SimulatedTransport] | None = None,
+    robots: RobotsPolicy | None = None,
+    real_pace: bool = False,
+) -> DataFrame:
+    """Fetch one wave. Input needs (url, cik, company, form_type,
+    filing_date, accession, host_bucket, bucket_rank, wave); output is
+    FETCH_SCHEMA — page rows + embedded fetch log (sched_ts is the
+    virtual send time in seconds since the wave start; politeness
+    tests assert the per-host rate from it).
+
+    real_pace=True is the production mode: each task sleeps until the
+    token bucket's scheduled send time (monotonic clock anchored at
+    task start), so the wave's WALL time equals the politeness
+    schedule — the end-to-end rate-cap test asserts
+    wall ≈ n_urls/host_budget on this path. Default off: tests and
+    benches exercise identical scheduling logic without 10-req/s
+    wall-clock waits.
+    """
+
+    def emit(row, body, attempts, t, status):
+        year = (row.filing_date or "0000")[:4]
+        return {
+            "url": row.url,
+            "warc_ts": EPOCH + pd.Timedelta(seconds=t),
+            "html": body,
+            "text": "",
+            "lang": "en",
+            "cik": row.cik,
+            "company": row.company,
+            "form_type": row.form_type,
+            "filing_date": row.filing_date,
+            "accession": row.accession,
+            "filename": f"{row.cik}_{str(row.form_type).replace('-', '')}"
+                        f"_{year}_{row.accession}.htm",
+            "host_bucket": int(row.host_bucket),
+            "wave": int(row.wave),
+            "attempts": attempts,
+            "status": status,
+            "sched_ts": t,
+            "fetched_bytes": len(body) if body is not None else 0,
+        }
+
+    return _fetch_buckets(
+        wave_df, FETCH_SCHEMA, emit, host_budget_per_sec, n_buckets,
+        transport_factory, robots, real_pace,
+    )

@@ -169,6 +169,14 @@ def bucket_slot_col(host_bucket: Column | str, n_buckets: int) -> Column | None:
     return F.element_at(F.array(*[F.lit(int(s)) for s in slots]), c + 1)
 
 
+def bucket_partitioned(df: DataFrame, n_buckets: int) -> DataFrame:
+    """One host bucket per partition: repartition on `_pslot` when
+    present (see partition_slots), else on raw `host_bucket`. The fetch
+    groups on the same key, so it reuses this exchange."""
+    key = "_pslot" if "_pslot" in df.columns else "host_bucket"
+    return df.repartition(n_buckets, F.col(key))
+
+
 def assign_waves(
     frontier: DataFrame,
     n_buckets: int,
@@ -195,10 +203,10 @@ def assign_waves(
     # partitioner places every bucket on its OWN partition (see
     # partition_slots); groups are identical either way.
     slot = bucket_slot_col("host_bucket", n_buckets)
-    key = "host_bucket" if slot is None else "_pslot"
     if slot is not None:
         df = df.withColumn("_pslot", slot)
-    df = df.repartition(n_buckets, F.col(key))
+    df = bucket_partitioned(df, n_buckets)
+    key = "_pslot" if slot is not None else "host_bucket"
     w = Window.partitionBy(key).orderBy(
         F.col("form_weight").desc(),
         F.col("filing_date").desc(),

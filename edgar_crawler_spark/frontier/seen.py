@@ -34,14 +34,18 @@ def build_sharded_bloom(
     n_shards: int = 16,
     expected_per_shard: int | None = None,
     fpp: float = 0.01,
+    n: int | None = None,
 ) -> ShardedBloom:
     """Build the sharded bloom distributed: every input partition folds
     its rows into per-shard bitmaps (map-side), then bitmaps OR-merge
     per shard in a tiny shuffle of `n_shards × partitions` rows. The
-    driver only ever sees finished bitmaps.
+    driver only ever sees finished bitmaps. `n` is the row count of
+    `seen` when the caller knows it (it sizes the shards; otherwise a
+    count job does).
     """
     if expected_per_shard is None:
-        n = seen.count()
+        if n is None:
+            n = seen.count()
         expected_per_shard = max(64, (n + n_shards - 1) // n_shards)
     exp, p, ns = expected_per_shard, fpp, n_shards
 

@@ -1,30 +1,48 @@
-"""Snapshot store: atomic checkpoint of frontier/seen/pages/metrics.
+"""Snapshot store: atomic, incremental checkpoints of the crawl state.
 
 The reference's resume mechanism is "whole ledger CSV rewritten to a
 tmp file then moved into place after every filing"
 (/root/reference/download_filings.py:196-215) plus skip-if-on-disk
 checks. Here the same exact-resume guarantee is table snapshots with
-an Iceberg-style commit protocol, implemented on plain parquet (the
-Iceberg runtime jar is not in this sandbox; the protocol is what
-matters and it is identical in spirit):
+an Iceberg-style commit protocol on plain parquet, and a commit writes
+only the state that changed (Flink's incremental checkpoints):
 
-  snapshot directory  <root>/v<k>/<table>/*.parquet   (data, written first)
-  manifest            <root>/v<k>/MANIFEST.json       (commit point)
+  data        <root>/v<k>/<table>/part-*.parquet   (written first)
+  scratch     <root>/v<k>/scratch/<name>/          (deleted before the commit point)
+  manifest    <root>/v<k>/MANIFEST.json            (commit point)
 
 A snapshot is visible iff its MANIFEST.json exists; the manifest is
 written via tmp-file + atomic rename, LAST. Readers resolve
 `latest()` = max committed version, so a crash mid-write leaves a
-dangling uncommitted directory that the next writer ignores/overwrites
-— exactly Iceberg's snapshot isolation, and the property the
-kill/resume test exercises. On a real deployment swap this class for
-`df.writeTo("catalog.db.t")` Iceberg commits; callers don't change.
+dangling uncommitted directory that the next writer removes —
+Iceberg's snapshot isolation, and the property the kill/resume tests
+exercise. On a real deployment swap this class for Iceberg commits;
+callers don't change.
 
-Tables per snapshot:
-  seen      (url)                          — the URL-seen set
-  bloom     (shard, bitmap)                — its sharded bloom bitmaps
-  frontier  (remaining scheduled rows)     — queue state
-  pages     (FETCH_SCHEMA rows, appended)  — the crawl output
-  metrics   (per-partition lineage rows)   — see crawler.py
+The manifest maps each table the commit writes to its data
+directories, row count and schema:
+
+  "tables": {"seen": {"dirs": ["v1/seen", "v2/seen", "v3/seen"],
+                      "rows": 80, "schema": {...}}}
+
+A table's contents are the union of its directories. A commit writes
+a table one of two ways:
+  overwrite   the commit's own directory becomes the whole list (a new base)
+  append      the commit's directory is added to the list of the
+              table's newest carrier (a delta); after MAX_DELTAS
+              deltas the next append folds the list into a new base
+Tables a commit does not name are not carried; reading a table
+without a version reads its newest carrier. Row counts come from the
+parquet footers and reads take the recorded schema, so neither a
+commit nor a read runs a counting or schema-inference job.
+
+Tables the crawl writes (crawler.py):
+  frontier      overwritten each wave: the rows still to fetch
+  seen          appended each wave (that wave's urls); seed,
+                requeue_failed and the stream merge overwrite it
+  company_info  appended each wave (the wave's new CIKs)
+  pages         one per wave: the fetched rows (FETCH_SCHEMA)
+  metrics       one per wave: per-bucket lineage rows
 """
 
 from __future__ import annotations
@@ -35,7 +53,44 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# Deltas an appended table may list before the next append folds
+# them into one base. Reading more than 32 paths makes Spark list them
+# with a distributed job (parallelPartitionDiscovery.threshold); 16
+# keeps every read a driver-side listing of a few small files.
+MAX_DELTAS = 16
+# One output file per this many rows: the wave's small tables (seen
+# and company_info deltas, metrics, a small frontier) land as one file.
+ROWS_PER_FILE = 1 << 20
+SCRATCH = "scratch"
+
+
+def files_for(rows: int) -> int:
+    """Output files for a table of `rows` rows."""
+    return max(1, -(-rows // ROWS_PER_FILE))
+
+
+def _write(df: DataFrame, path: str) -> int:
+    """Write `df` as parquet at `path` and return its row count. The
+    manifest is the commit point, so no _SUCCESS marker is written."""
+    (
+        df.write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(path)
+    )
+    return _parquet_rows(path)
+
+
+def _parquet_rows(path: str) -> int:
+    """Row count of a parquet directory, from the file footers."""
+    return sum(
+        pq.read_metadata(os.path.join(path, name)).num_rows
+        for name in os.listdir(path)
+        if name.endswith(".parquet") and not name.startswith((".", "_"))
+    )
 
 
 @dataclass
@@ -62,30 +117,114 @@ class SnapshotStore:
 
     def manifest(self, version: int) -> dict:
         with open(os.path.join(self._vdir(version), "MANIFEST.json")) as f:
-            return json.load(f)
+            manifest = json.load(f)
+        if not isinstance(manifest["tables"], dict):
+            raise ValueError(
+                f"{self._vdir(version)} predates per-table directory lists; "
+                "seed a new store"
+            )
+        return manifest
+
+    def _entry(self, table: str, version: int | None = None) -> dict | None:
+        """`table`'s manifest entry {dirs, rows} at `version`, or at
+        its newest carrier when `version` is None."""
+        committed = self.versions()
+        if version is not None:
+            committed = [version] if version in committed else []
+        for v in reversed(committed):
+            entry = self.manifest(v)["tables"].get(table)
+            if entry is not None:
+                return entry
+        return None
+
+    def rows(self, table: str, version: int | None = None) -> int | None:
+        """Row count of `table` as committed (no Spark job)."""
+        entry = self._entry(table, version)
+        return None if entry is None else entry["rows"]
+
+    def read(
+        self, spark: SparkSession, table: str, version: int | None = None
+    ) -> DataFrame | None:
+        """`table` at `version` (its newest carrier when None); None if
+        that version does not carry it or its data was expired."""
+        entry = self._entry(table, version)
+        if entry is None:
+            return None
+        paths = [os.path.join(self.root, d) for d in entry["dirs"]]
+        if not all(os.path.isdir(p) for p in paths):
+            return None
+        return spark.read.schema(StructType.fromJson(entry["schema"])).parquet(*paths)
+
+    def read_any(self, spark: SparkSession, table: str) -> DataFrame | None:
+        """`table` from the newest committed version that carries it."""
+        return self.read(spark, table)
+
+    # -- writing -------------------------------------------------------
+
+    def begin(self) -> int:
+        """Claim the next version: remove any uncommitted debris a
+        crash left there and return its number."""
+        version = (self.latest() or 0) + 1
+        vdir = self._vdir(version)
+        if os.path.isdir(vdir):
+            shutil.rmtree(vdir)
+        os.makedirs(vdir)
+        return version
+
+    def abort(self, version: int) -> None:
+        """Drop an uncommitted version."""
+        shutil.rmtree(self._vdir(version), ignore_errors=True)
+
+    def write(
+        self, version: int, table: str, df: DataFrame, scratch: bool = False
+    ) -> tuple[DataFrame, int]:
+        """Write `df` into uncommitted `version` ahead of its commit and
+        return (the written table read back, its row count). A scratch
+        table is deleted by the commit, before the commit point."""
+        path = os.path.join(self._vdir(version), SCRATCH if scratch else "", table)
+        rows = _write(df, path)
+        return df.sparkSession.read.schema(df.schema).parquet(path), rows
 
     def commit(
         self,
         tables: dict[str, DataFrame],
         summary: dict | None = None,
+        append: dict[str, DataFrame] | None = None,
+        version: int | None = None,
     ) -> int:
-        """Write all tables of the next snapshot, then commit by
-        atomically renaming the manifest into place. Anything that
-        dies before the rename is invisible to readers."""
-        version = (self.latest() or 0) + 1
+        """Write `tables` (overwrite) and `append` (deltas) into
+        `version` (claimed by `begin`, or the next one), delete its
+        scratch, then commit by atomically renaming the manifest into
+        place. A table `write` already put into the version is not
+        rewritten. Anything that dies before the rename is invisible
+        to readers."""
+        if version is None:
+            version = self.begin()
         vdir = self._vdir(version)
-        if os.path.isdir(vdir):  # uncommitted debris from a crash
-            shutil.rmtree(vdir)
-        os.makedirs(vdir, exist_ok=True)
-        counts = {}
+        entries = {}
         for name, df in tables.items():
             path = os.path.join(vdir, name)
-            df.write.mode("overwrite").parquet(path)
-            counts[name] = None  # filled lazily by readers; avoid extra jobs
+            rows = _parquet_rows(path) if os.path.isdir(path) else _write(df, path)
+            entries[name] = {
+                "dirs": [f"v{version}/{name}"], "rows": rows,
+                "schema": df.schema.jsonValue(),
+            }
+        for name, df in (append or {}).items():
+            base = self._entry(name)
+            if base is not None and len(base["dirs"]) >= MAX_DELTAS:
+                df = self.read(df.sparkSession, name).unionByName(df)
+                base = None
+            rows = _write(df, os.path.join(vdir, name))
+            entries[name] = {
+                "dirs": (base["dirs"] if base else []) + [f"v{version}/{name}"],
+                "rows": (base["rows"] if base else 0) + rows,
+                "schema": df.schema.jsonValue(),
+            }
+        shutil.rmtree(os.path.join(vdir, SCRATCH), ignore_errors=True)
         manifest = {
             "version": version,
             "committed_at": time.time(),
-            "tables": sorted(tables.keys()),
+            "tables": entries,
             "summary": summary or {},
         }
         tmp = os.path.join(vdir, ".MANIFEST.json.tmp")
@@ -94,63 +233,71 @@ class SnapshotStore:
         os.replace(tmp, os.path.join(vdir, "MANIFEST.json"))
         return version
 
-    def read(
-        self, spark: SparkSession, table: str, version: int | None = None
-    ) -> DataFrame | None:
-        v = version if version is not None else self.latest()
-        if v is None:
-            return None
-        path = os.path.join(self._vdir(v), table)
-        if not os.path.isdir(path):
-            return None
-        return spark.read.parquet(path)
+    # -- maintenance ---------------------------------------------------
 
-    def read_any(self, spark: SparkSession, table: str) -> DataFrame | None:
-        """Read `table` from the NEWEST committed version that carries
-        it — for tables (e.g. the company_info dim) that not every
-        commit rewrites (a requeue commit writes only frontier+seen)."""
+    def _current(self) -> dict[str, dict]:
+        """Every table's entry at its newest carrier."""
+        out: dict[str, dict] = {}
         for v in reversed(self.versions()):
-            df = self.read(spark, table, v)
-            if df is not None:
-                return df
-        return None
+            for name, entry in self.manifest(v)["tables"].items():
+                out.setdefault(name, entry)
+        return out
 
-    # Superseded-state tables: each commit REPLACES these wholesale, so
-    # old copies only serve time travel. Append-log tables (pages,
-    # metrics) hold data that exists nowhere else and are never expired.
-    STATE_TABLES = ("frontier", "seen", "bloom", "company_info")
+    def compact(self) -> int | None:
+        """Compaction commit: fold every table whose newest carrier
+        lists several directories into one base (Iceberg's
+        rewrite_data_files). Returns the version, or None when there
+        was nothing to fold."""
+        folded = {
+            name: entry for name, entry in self._current().items()
+            if len(entry["dirs"]) > 1
+        }
+        if not folded:
+            return None
+        spark = SparkSession.active()
+        return self.commit(
+            {
+                name: self.read(spark, name).coalesce(files_for(entry["rows"]))
+                for name, entry in folded.items()
+            },
+            summary={"stage": "compact"},
+        )
+
+    # Superseded-state tables: old copies only serve time travel.
+    # Per-wave tables (pages, metrics) hold data that exists nowhere
+    # else and are never expired.
+    STATE_TABLES = ("frontier", "seen", "company_info")
 
     def expire_state(self, keep_last: int = 2) -> list[int]:
-        """Iceberg-style snapshot expiry: drop the superseded STATE
-        tables from all but the newest `keep_last` committed versions.
+        """Iceberg-style snapshot expiry: compact, then delete every
+        STATE table directory that none of the table's newest
+        `keep_last` carriers lists.
 
-        The append-only tables (pages, metrics) survive in every
-        version — they are the crawl's output log, unioned by
-        `CrawlJob.pages()`. Old manifests stay committed (the version
-        history is intact; a time-travel read of expired state returns
-        None, mirroring Iceberg's expire_snapshots). Resume semantics
-        are untouched because `_load_state`/`read_any` only ever read
-        the newest version carrying a table.
+        The per-wave tables (pages, metrics) survive in every version —
+        they are the crawl's output log, unioned by `CrawlJob.pages()`.
+        Old manifests stay committed (the version history is intact; a
+        time-travel read of expired state returns None, mirroring
+        Iceberg's expire_snapshots). Resume is untouched: it reads each
+        table's newest carrier, whose directories are all kept.
 
-        At 10^10 URLs the seen+bloom state is the dominant storage
-        cost per snapshot; without expiry a W-wave crawl stores W
-        copies. Returns the versions whose state was expired."""
-        vs = self.versions()
+        Without expiry a W-wave crawl stores W frontier copies; the
+        seen deltas are stored once, and compaction keeps their number
+        per read bounded. Returns the versions whose state was
+        expired."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
+        self.compact()
+        manifests = [(v, self.manifest(v)["tables"]) for v in self.versions()]
         expired: set[int] = set()
         for t in self.STATE_TABLES:
-            # not every commit carries every state table (a requeue
-            # writes only frontier+seen; company_info rides wave
-            # commits) — keep the newest `keep_last` versions that
-            # actually CARRY this table, so read_any never loses it
-            carriers = [
-                v for v in vs
-                if os.path.isdir(os.path.join(self._vdir(v), t))
-            ]
-            for v in carriers[:-keep_last]:
-                shutil.rmtree(os.path.join(self._vdir(v), t))
-                expired.add(v)
+            carriers = [(v, tabs[t]["dirs"]) for v, tabs in manifests if t in tabs]
+            live = {d for _, dirs in carriers[-keep_last:] for d in dirs}
+            for v, dirs in carriers[:-keep_last]:
+                dead = [d for d in dirs if d not in live]
+                for d in dead:
+                    shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
+                if dead:
+                    expired.add(v)
         return sorted(expired)
 
 

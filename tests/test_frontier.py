@@ -740,3 +740,225 @@ class TestRealPaceEndToEnd:
         # and ~n/budget when balanced (schedule says so too)
         sched = max(r.sched_ts for r in rows)
         assert abs(sched - expect) < 1e-6
+
+
+class TestWriteOnceWave:
+    """A wave schedules once, fetches once and commits only new data:
+    seen and company_info grow by one delta directory per wave, an
+    overwrite commit resets a table's list, and a crash anywhere before
+    the manifest rename leaves nothing visible."""
+
+    @staticmethod
+    def _job(spark, store, **kw):
+        kw.setdefault("transport_factory", lambda: SimulatedTransport(transient_pct=0))
+        return CrawlJob(spark, store, n_buckets=2, wave_size=10, **kw)
+
+    @staticmethod
+    def _urls(df):
+        return sorted(r.url for r in df.select("url").collect())
+
+    def test_old_manifest_format_fails_loudly(self, tmp_path):
+        import json
+        import os
+
+        store = SnapshotStore(str(tmp_path / "old"))
+        os.makedirs(store._vdir(1))
+        with open(os.path.join(store._vdir(1), "MANIFEST.json"), "w") as f:
+            json.dump({"version": 1, "tables": ["frontier", "seen"]}, f)
+        with pytest.raises(ValueError, match="seed a new store"):
+            store.rows("frontier")
+
+    def test_jobs_and_files_per_wave(self, spark, tmp_path):
+        """Regression guard: a steady-state wave (seen and company_info
+        already non-empty) runs exactly this many Spark jobs and
+        commits exactly this many files. The counts only move if the
+        wave gains or loses work — update them deliberately."""
+        import os
+
+        store = SnapshotStore(str(tmp_path / "guard"))
+        job = CrawlJob(
+            spark, store, n_buckets=4, wave_size=10,
+            transport_factory=lambda: SimulatedTransport(transient_pct=10),
+        )
+        job.run(_frontier_df(spark, 160), max_waves=1)
+        sc = spark.sparkContext
+        sc.setJobGroup("wave-guard", "one crawl wave")
+        try:
+            _, _, v = job.run_wave()
+        finally:
+            sc.setJobGroup("", "")
+        jobs = len(sc.statusTracker().getJobIdsForGroup("wave-guard"))
+        files = sum(len(names) for _, _, names in os.walk(store._vdir(v)))
+        # bloom 2, schedule 3, pages 2, metrics 2, frontier/metrics/seen
+        # writes 1 each, company_info 3
+        assert jobs == 15
+        # 4 fetch partitions of pages + 4 one-file tables, each parquet
+        # with its .crc, + MANIFEST.json
+        assert files == 2 * 4 + 2 * 4 + 1
+
+    def test_fetch_once_under_cache_eviction(self, spark, tmp_path, monkeypatch):
+        """Against a transport whose every answer is fresh (random
+        failures, a unique body per call) and with the cache cleared
+        around every write, the transport sees exactly the attempts
+        the pages record, and pages, the manifest counts and seen
+        agree."""
+        import collections
+        import random
+        import uuid
+
+        from edgar_crawler_spark.frontier import state as state_mod
+
+        log = str(tmp_path / "calls.log")
+
+        class FreshTransport:
+            def get(self, url, form_type, attempt):
+                with open(log, "a") as f:
+                    f.write(url + "\n")
+                if random.SystemRandom().random() < 0.5:
+                    return None
+                return f"<html>{url} {uuid.uuid4().hex}</html>".encode()
+
+        write = state_mod._write
+
+        def evicting_write(df, path):
+            spark.catalog.clearCache()
+            rows = write(df, path)
+            spark.catalog.clearCache()
+            return rows
+
+        monkeypatch.setattr(state_mod, "_write", evicting_write)
+        store = SnapshotStore(str(tmp_path / "once"))
+        job = self._job(spark, store, transport_factory=FreshTransport)
+        res = job.run(_frontier_df(spark, 60))
+        pages = job.pages().select("url", "status", "attempts").collect()
+        with open(log) as f:
+            calls = collections.Counter(f.read().split())
+        assert calls == {r.url: r.attempts for r in pages}
+        assert len(pages) == 60 and res.n_fetched + res.n_failed == 60
+        for v in store.versions():
+            m = store.manifest(v)
+            if m["summary"].get("stage") != "wave":
+                continue
+            status = [r.status for r in store.read(spark, "pages", v).collect()]
+            assert m["summary"]["n_ok"] == status.count("ok")
+            assert m["summary"]["n_failed"] == len(status) - status.count("ok")
+        assert self._urls(store.read(spark, "seen")) == sorted(r.url for r in pages)
+        assert store.rows("seen") == 60 and store.rows("frontier") == 0
+
+    def test_crash_anywhere_in_a_wave_is_invisible(self, spark, tmp_path, monkeypatch):
+        """Kill the wave after the scratch schedule, after pages and
+        after each table of the commit: the committed snapshot never
+        changes, and the resumed crawl fetches every url exactly once."""
+        import os
+
+        from edgar_crawler_spark.frontier import state as state_mod
+
+        class Crash(Exception):
+            pass
+
+        n = 60
+        store = SnapshotStore(str(tmp_path / "crash"))
+        self._job(spark, store).run(_frontier_df(spark, n), max_waves=1)
+        committed = store.latest()
+        state = {t: self._urls(store.read(spark, t)) for t in ("frontier", "seen")}
+        write = state_mod._write
+        for point in ("schedule", "pages", "frontier", "metrics", "seen", "company_info"):
+            def crash_after(df, path, point=point):
+                rows = write(df, path)
+                if os.path.basename(path) == point:
+                    raise Crash(point)
+                return rows
+
+            monkeypatch.setattr(state_mod, "_write", crash_after)
+            with pytest.raises(Crash):
+                self._job(spark, store).run_wave()
+            assert os.path.isdir(store._vdir(committed + 1))
+            assert store.latest() == committed
+            assert {
+                t: self._urls(store.read(spark, t)) for t in ("frontier", "seen")
+            } == state
+        monkeypatch.setattr(state_mod, "_write", write)
+        job = self._job(spark, store)
+        job.run()
+        urls = [r.url for r in job.pages().select("url").collect()]
+        assert len(urls) == n and len(set(urls)) == n
+        assert self._urls(store.read(spark, "seen")) == sorted(urls)
+        assert store.rows("frontier") == 0
+
+    def test_requeue_resets_the_seen_list(self, spark, tmp_path):
+        """requeue_failed after several waves overwrites seen: its
+        version lists one base directory, and the recovered crawl
+        fetches each failed url once more and nothing else twice."""
+        root = str(tmp_path / "rq")
+        store = SnapshotStore(root)
+        self._job(
+            spark, store,
+            transport_factory=lambda: SimulatedTransport(transient_pct=0, permanent_pct=10),
+        ).run(_frontier_df(spark, 80))
+        assert len(store.manifest(store.latest())["tables"]["seen"]["dirs"]) > 2
+        job = self._job(spark, SnapshotStore(root))
+        n_req = job.requeue_failed()
+        assert n_req > 0
+        v = store.latest()
+        seen = store.manifest(v)["tables"]["seen"]
+        assert seen["dirs"] == [f"v{v}/seen"] and seen["rows"] == 80 - n_req
+        job.run()
+        pages = job.pages()
+        ok = [r.url for r in pages.filter(F.col("status") == "ok").collect()]
+        assert len(ok) == 80 and len(set(ok)) == 80
+        assert pages.count() == 80 + n_req
+        assert store.rows("seen") == 80
+        assert self._urls(store.read(spark, "seen")) == sorted(ok)
+
+    def test_compaction_bounds_the_delta_list(self, spark, tmp_path, monkeypatch):
+        from edgar_crawler_spark.frontier import state as state_mod
+        from edgar_crawler_spark.frontier.state import snapshot_diff
+
+        monkeypatch.setattr(state_mod, "MAX_DELTAS", 2)
+        store = SnapshotStore(str(tmp_path / "cmp"))
+        job = self._job(spark, store)
+        res = job.run(_frontier_df(spark, 60))
+        assert res.waves_run >= 3  # enough appends to fold at least once
+        for v in store.versions():
+            for entry in store.manifest(v)["tables"].values():
+                assert len(entry["dirs"]) <= 2
+        urls = self._urls(job.pages())
+        assert self._urls(store.read(spark, "seen")) == urls
+        # the changelog of an appended table is the later waves' urls
+        waves = res.versions
+        inserted = snapshot_diff(
+            spark, store, "seen", waves[0], waves[-1], ["url"]
+        ).collect()
+        want = sorted(u for v in waves[1:] for u in self._urls(store.read(spark, "pages", v)))
+        assert sorted(r.url for r in inserted) == want
+        assert {r._change for r in inserted} == {"insert"}
+        # a compaction commit folds every multi-directory list into one
+        # base (seen and company_info alternate between one and two)
+        multi = {t for t, e in store._current().items() if len(e["dirs"]) > 1}
+        assert multi
+        v = store.compact()
+        tables = store.manifest(v)["tables"]
+        assert set(tables) == multi
+        for t, entry in tables.items():
+            assert entry["dirs"] == [f"v{v}/{t}"]
+        assert store.rows("seen") == 60
+        assert self._urls(store.read(spark, "seen")) == urls
+        assert store.compact() is None
+
+    def test_expire_keeps_every_listed_directory(self, spark, tmp_path):
+        """Expiry never deletes a directory that one of a table's kept
+        carriers lists, so every kept version stays readable."""
+        store = SnapshotStore(str(tmp_path / "exp"))
+        self._job(spark, store).run(_frontier_df(spark, 60), max_waves=2)
+        assert store.expire_state(keep_last=2)
+        for t in store.STATE_TABLES:
+            carriers = [
+                v for v in store.versions() if t in store.manifest(v)["tables"]
+            ]
+            for v in carriers[-2:]:
+                assert store.read(spark, t, v) is not None
+        job = self._job(spark, store)
+        job.run()
+        urls = self._urls(job.pages())
+        assert len(urls) == 60 and len(set(urls)) == 60
+        assert self._urls(store.read(spark, "seen")) == urls

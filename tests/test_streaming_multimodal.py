@@ -125,6 +125,43 @@ class TestStreamFrontier:
         assert pages.count() == 90
         assert pages.select("url").distinct().count() == 90
 
+    def test_stream_merge_after_waves_resets_seen(self, spark, tmp_path):
+        """A stream merge landing after several appended waves is an
+        overwrite commit of seen: its version lists one base directory
+        holding every fetched url, and the waves after it fetch only
+        the new urls."""
+        from tests.test_frontier import _frontier_df
+
+        urls_dir = str(tmp_path / "urls")
+        ckpt = str(tmp_path / "ckpt")
+        store = SnapshotStore(str(tmp_path / "store"))
+        job = CrawlJob(
+            spark, store, n_buckets=4, wave_size=5,
+            transport_factory=lambda: SimulatedTransport(transient_pct=0),
+        )
+        _frontier_df(spark, 60, seed=23).write.mode("append").parquet(urls_dir)
+        q = stream_frontier_foreachbatch(spark, urls_dir, ckpt, job)
+        assert q.awaitTermination(180), "stream query did not terminate"
+        before = store.latest()
+        assert len(store.manifest(before)["tables"]["seen"]["dirs"]) > 2
+
+        _frontier_df(spark, 90, seed=23).write.mode("append").parquet(urls_dir)
+        q = stream_frontier_foreachbatch(spark, urls_dir, ckpt, job)
+        assert q.awaitTermination(180), "stream query did not terminate"
+        merges = [
+            v for v in store.versions()
+            if store.manifest(v)["summary"].get("stage") == "stream_merge"
+        ]
+        assert merges and merges[0] > before
+        seen = store.manifest(merges[0])["tables"]["seen"]
+        assert seen["dirs"] == [f"v{merges[0]}/seen"] and seen["rows"] == 60
+        pages = job.pages()
+        assert pages.count() == 90
+        assert pages.select("url").distinct().count() == 90
+        assert store.rows("seen") == 90
+        assert store.read(spark, "seen").select("url").distinct().count() == 90
+
+
 
 class TestStreamDedup:
     def test_watermark_bounded_exact_dedup(self, spark, tmp_path):
