@@ -44,7 +44,7 @@ from .company import enrich_pages, merge_company_info
 from .fetch import RobotsPolicy, SimulatedTransport, fetch_wave
 from .priority import assign_waves, bucket_partitioned
 from .seen import build_sharded_bloom, filter_unseen
-from .state import SnapshotStore, files_for
+from .state import SnapshotStore, split_files
 
 FRONTIER_COLS = ["url", "cik", "company", "form_type", "filing_date", "accession"]
 
@@ -150,7 +150,7 @@ class CrawlJob:
             n=store.rows("seen"),
         )
         version = store.begin()
-        sched, n_sched = store.write(
+        sched, sched_entry = store.write(
             version, "schedule",
             assign_waves(
                 filter_unseen(frontier, seen, bloom), self.n_buckets, self.wave_size
@@ -160,14 +160,14 @@ class CrawlJob:
         # A merged/replayed frontier can consist ENTIRELY of already-seen
         # urls; without this check run() would loop forever committing
         # empty waves (frontier non-empty but no fetchable work).
-        if n_sched == 0:
+        if sched_entry["rows"] == 0:
             store.abort(version)
             return None
 
         # reading the scratch back drops assign_waves' partitioning:
         # restore one host bucket per fetch task
         front = bucket_partitioned(sched.filter(F.col("wave") == 0), self.n_buckets)
-        pages, n_front = store.write(
+        pages, pages_entry = store.write(
             version, "pages",
             fetch_wave(
                 front,
@@ -189,18 +189,22 @@ class CrawlJob:
             self.company_transport_factory,
         )
         # every wave-0 row became exactly one page row, so the rows
-        # left for later waves are the next frontier — no join needed
+        # left for later waves are the next frontier — no join needed.
+        # The frontier gets the files Spark's read-split rule asks for;
+        # the tables bounded by the wave are one file each, except
+        # company_info, whose fetch keeps the (AQE-sized) parallelism
+        # of the shuffle before it.
+        left = 1 - pages_entry["rows"] / sched_entry["rows"]
         store.commit(
             {
                 "frontier": sched.filter(F.col("wave") > 0)
                 .select(*FRONTIER_COLS)
-                .coalesce(files_for(n_sched - n_front)),
-                "pages": pages,
+                .coalesce(split_files(spark, int(sched_entry["bytes"] * left))),
                 "metrics": spark.createDataFrame(stats, METRICS_SCHEMA).coalesce(1),
             },
             append={
-                "seen": pages.select("url").coalesce(files_for(n_front)),
-                "company_info": new_ciks.coalesce(files_for(n_front)),
+                "seen": pages.select("url").coalesce(1),
+                "company_info": new_ciks,
             },
             summary={
                 "stage": "wave",
@@ -211,6 +215,7 @@ class CrawlJob:
                 "host_budget_per_sec": self.host_budget_per_sec,
             },
             version=version,
+            written={"pages": pages_entry},
         )
         return n_ok, n_failed, version
 

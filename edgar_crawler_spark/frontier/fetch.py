@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 
 from ..synth import make_filing_body
 from .politeness import TokenBucket, per_bucket_rate
+from .priority import bucket_key
 
 EPOCH = datetime(2015, 1, 1, tzinfo=timezone.utc)
 
@@ -144,15 +145,6 @@ FETCH_EXTRACT_SCHEMA = (
 )
 
 
-def _group_key(wave_df: DataFrame) -> str:
-    """Group on assign_waves' collision-free partition slot when
-    present (1:1 with host_bucket — identical groups, but every bucket
-    gets its OWN task, so no bucket's budget share is serialized
-    behind another's; see priority.partition_slots). Raw host_bucket
-    keeps hand-built test inputs working."""
-    return "_pslot" if "_pslot" in wave_df.columns else "host_bucket"
-
-
 def _fetch_buckets(
     wave_df: DataFrame,
     schema: str,
@@ -199,7 +191,7 @@ def _fetch_buckets(
             out.append(emit(row, body, attempts, float(t), status))
         return pd.DataFrame(out)
 
-    return wave_df.groupBy(_group_key(wave_df)).applyInPandas(run_bucket, schema)
+    return wave_df.groupBy(bucket_key(wave_df)).applyInPandas(run_bucket, schema)
 
 
 def fetch_extract_wave(

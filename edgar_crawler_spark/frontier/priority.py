@@ -169,12 +169,20 @@ def bucket_slot_col(host_bucket: Column | str, n_buckets: int) -> Column | None:
     return F.element_at(F.array(*[F.lit(int(s)) for s in slots]), c + 1)
 
 
+def bucket_key(df: DataFrame) -> str:
+    """The column that places host buckets on partitions and groups
+    them for the fetch: assign_waves' collision-free `_pslot` when
+    present (1:1 with host_bucket — identical groups, but every bucket
+    gets its OWN task, so no bucket's budget share is serialized
+    behind another's; see partition_slots), else raw `host_bucket`,
+    which keeps hand-built inputs working."""
+    return "_pslot" if "_pslot" in df.columns else "host_bucket"
+
+
 def bucket_partitioned(df: DataFrame, n_buckets: int) -> DataFrame:
-    """One host bucket per partition: repartition on `_pslot` when
-    present (see partition_slots), else on raw `host_bucket`. The fetch
-    groups on the same key, so it reuses this exchange."""
-    key = "_pslot" if "_pslot" in df.columns else "host_bucket"
-    return df.repartition(n_buckets, F.col(key))
+    """One host bucket per partition, on `bucket_key`. The fetch groups
+    on the same key, so it reuses this exchange."""
+    return df.repartition(n_buckets, F.col(bucket_key(df)))
 
 
 def assign_waves(
@@ -206,8 +214,7 @@ def assign_waves(
     if slot is not None:
         df = df.withColumn("_pslot", slot)
     df = bucket_partitioned(df, n_buckets)
-    key = "_pslot" if slot is not None else "host_bucket"
-    w = Window.partitionBy(key).orderBy(
+    w = Window.partitionBy(bucket_key(df)).orderBy(
         F.col("form_weight").desc(),
         F.col("filing_date").desc(),
         F.col("accession").asc(),

@@ -20,10 +20,10 @@ exercise. On a real deployment swap this class for Iceberg commits;
 callers don't change.
 
 The manifest maps each table the commit writes to its data
-directories, row count and schema:
+directories, row count, parquet bytes and schema:
 
   "tables": {"seen": {"dirs": ["v1/seen", "v2/seen", "v3/seen"],
-                      "rows": 80, "schema": {...}}}
+                      "rows": 80, "bytes": 2048, "schema": {...}}}
 
 A table's contents are the union of its directories. A commit writes
 a table one of two ways:
@@ -34,7 +34,9 @@ a table one of two ways:
 Tables a commit does not name are not carried; reading a table
 without a version reads its newest carrier. Row counts come from the
 parquet footers and reads take the recorded schema, so neither a
-commit nor a read runs a counting or schema-inference job.
+commit nor a read runs a counting or schema-inference job. A table
+written ahead of its commit (`write`) is committed by passing the
+entry `write` returned; `commit` never infers it from the directory.
 
 Tables the crawl writes (crawler.py):
   frontier      overwritten each wave: the rows still to fetch
@@ -49,6 +51,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 from dataclasses import dataclass
@@ -62,34 +65,54 @@ from pyspark.sql.types import StructType
 # with a distributed job (parallelPartitionDiscovery.threshold); 16
 # keeps every read a driver-side listing of a few small files.
 MAX_DELTAS = 16
-# One output file per this many rows: the wave's small tables (seen
-# and company_info deltas, metrics, a small frontier) land as one file.
-ROWS_PER_FILE = 1 << 20
 SCRATCH = "scratch"
 
 
-def files_for(rows: int) -> int:
-    """Output files for a table of `rows` rows."""
-    return max(1, -(-rows // ROWS_PER_FILE))
+def _conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size SQL conf ('134217728b', '64m', '1g') in bytes."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", spark.conf.get(key).strip().lower())
+    return int(m.group(1)) << 10 * " kmgt".index(m.group(2) or " ")
 
 
-def _write(df: DataFrame, path: str) -> int:
-    """Write `df` as parquet at `path` and return its row count. The
-    manifest is the commit point, so no _SUCCESS marker is written."""
+def split_files(spark: SparkSession, nbytes: int) -> int:
+    """Output files for a table of `nbytes` parquet bytes, by Spark's
+    own read-split rule (FilePartition.maxSplitBytes): one file per
+    min(maxPartitionBytes, max(openCostInBytes, nbytes / default
+    parallelism)) bytes. The next read of the table then gets the
+    parallelism Spark would give it anyway: one task for a table below
+    openCostInBytes, every core for a mid-sized one, 128 MB per task
+    for a large one."""
+    max_split = min(
+        _conf_bytes(spark, "spark.sql.files.maxPartitionBytes"),
+        max(
+            _conf_bytes(spark, "spark.sql.files.openCostInBytes"),
+            nbytes // spark.sparkContext.defaultParallelism,
+        ),
+    )
+    return max(1, -(-nbytes // max_split))
+
+
+def _write(df: DataFrame, path: str) -> tuple[int, int]:
+    """Write `df` as parquet at `path` and return its (rows, bytes).
+    The manifest is the commit point, so no _SUCCESS marker is
+    written."""
     (
         df.write.mode("overwrite")
         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .parquet(path)
     )
-    return _parquet_rows(path)
+    return _parquet_size(path)
 
 
-def _parquet_rows(path: str) -> int:
-    """Row count of a parquet directory, from the file footers."""
-    return sum(
-        pq.read_metadata(os.path.join(path, name)).num_rows
-        for name in os.listdir(path)
+def _parquet_size(path: str) -> tuple[int, int]:
+    """(rows, bytes) of a parquet directory, from the file footers."""
+    files = [
+        os.path.join(path, name) for name in os.listdir(path)
         if name.endswith(".parquet") and not name.startswith((".", "_"))
+    ]
+    return (
+        sum(pq.read_metadata(f).num_rows for f in files),
+        sum(os.path.getsize(f) for f in files),
     )
 
 
@@ -126,8 +149,8 @@ class SnapshotStore:
         return manifest
 
     def _entry(self, table: str, version: int | None = None) -> dict | None:
-        """`table`'s manifest entry {dirs, rows} at `version`, or at
-        its newest carrier when `version` is None."""
+        """`table`'s manifest entry {dirs, rows, bytes, schema} at
+        `version`, or at its newest carrier when `version` is None."""
         committed = self.versions()
         if version is not None:
             committed = [version] if version in committed else []
@@ -156,7 +179,7 @@ class SnapshotStore:
         return spark.read.schema(StructType.fromJson(entry["schema"])).parquet(*paths)
 
     def read_any(self, spark: SparkSession, table: str) -> DataFrame | None:
-        """`table` from the newest committed version that carries it."""
+        """Alias of `read(spark, table)`: the newest carrier."""
         return self.read(spark, table)
 
     # -- writing -------------------------------------------------------
@@ -177,13 +200,20 @@ class SnapshotStore:
 
     def write(
         self, version: int, table: str, df: DataFrame, scratch: bool = False
-    ) -> tuple[DataFrame, int]:
+    ) -> tuple[DataFrame, dict]:
         """Write `df` into uncommitted `version` ahead of its commit and
-        return (the written table read back, its row count). A scratch
-        table is deleted by the commit, before the commit point."""
-        path = os.path.join(self._vdir(version), SCRATCH if scratch else "", table)
-        rows = _write(df, path)
-        return df.sparkSession.read.schema(df.schema).parquet(path), rows
+        return (the written table read back, its manifest entry). Pass
+        the entry to `commit(written=...)` to commit the table; a
+        scratch table is instead deleted by the commit, before the
+        commit point."""
+        rel = f"v{version}/{SCRATCH}/{table}" if scratch else f"v{version}/{table}"
+        path = os.path.join(self.root, rel)
+        rows, nbytes = _write(df, path)
+        entry = {
+            "dirs": [rel], "rows": rows, "bytes": nbytes,
+            "schema": df.schema.jsonValue(),
+        }
+        return df.sparkSession.read.schema(df.schema).parquet(path), entry
 
     def commit(
         self,
@@ -191,33 +221,43 @@ class SnapshotStore:
         summary: dict | None = None,
         append: dict[str, DataFrame] | None = None,
         version: int | None = None,
+        written: dict[str, dict] | None = None,
     ) -> int:
         """Write `tables` (overwrite) and `append` (deltas) into
-        `version` (claimed by `begin`, or the next one), delete its
+        `version` (claimed by `begin`, or the next one), add the
+        `written` entries that `write` returned, delete the version's
         scratch, then commit by atomically renaming the manifest into
-        place. A table `write` already put into the version is not
-        rewritten. Anything that dies before the rename is invisible
-        to readers."""
+        place. Anything that dies before the rename is invisible to
+        readers."""
         if version is None:
             version = self.begin()
         vdir = self._vdir(version)
-        entries = {}
+        entries = dict(written or {})
+        for name, entry in entries.items():
+            if not all(os.path.isdir(os.path.join(self.root, d)) for d in entry["dirs"]):
+                raise RuntimeError(
+                    f"{name} of uncommitted v{version} is gone: another "
+                    "writer claimed the version"
+                )
         for name, df in tables.items():
-            path = os.path.join(vdir, name)
-            rows = _parquet_rows(path) if os.path.isdir(path) else _write(df, path)
+            rows, nbytes = _write(df, os.path.join(vdir, name))
             entries[name] = {
-                "dirs": [f"v{version}/{name}"], "rows": rows,
+                "dirs": [f"v{version}/{name}"], "rows": rows, "bytes": nbytes,
                 "schema": df.schema.jsonValue(),
             }
         for name, df in (append or {}).items():
             base = self._entry(name)
             if base is not None and len(base["dirs"]) >= MAX_DELTAS:
-                df = self.read(df.sparkSession, name).unionByName(df)
+                spark = df.sparkSession
+                df = self.read(spark, name).unionByName(df).coalesce(
+                    split_files(spark, base["bytes"])
+                )
                 base = None
-            rows = _write(df, os.path.join(vdir, name))
+            rows, nbytes = _write(df, os.path.join(vdir, name))
             entries[name] = {
                 "dirs": (base["dirs"] if base else []) + [f"v{version}/{name}"],
                 "rows": (base["rows"] if base else 0) + rows,
+                "bytes": (base["bytes"] if base else 0) + nbytes,
                 "schema": df.schema.jsonValue(),
             }
         shutil.rmtree(os.path.join(vdir, SCRATCH), ignore_errors=True)
@@ -247,7 +287,12 @@ class SnapshotStore:
         """Compaction commit: fold every table whose newest carrier
         lists several directories into one base (Iceberg's
         rewrite_data_files). Returns the version, or None when there
-        was nothing to fold."""
+        was nothing to fold.
+
+        Cost: a full read and rewrite of each folded table, sized by
+        `split_files` — for seen, the whole URL-seen set (SCALE.md).
+        The superseded directories stay on disk until `expire_state`
+        finds no kept carrier listing them."""
         folded = {
             name: entry for name, entry in self._current().items()
             if len(entry["dirs"]) > 1
@@ -257,7 +302,7 @@ class SnapshotStore:
         spark = SparkSession.active()
         return self.commit(
             {
-                name: self.read(spark, name).coalesce(files_for(entry["rows"]))
+                name: self.read(spark, name).coalesce(split_files(spark, entry["bytes"]))
                 for name, entry in folded.items()
             },
             summary={"stage": "compact"},
@@ -272,6 +317,12 @@ class SnapshotStore:
         """Iceberg-style snapshot expiry: compact, then delete every
         STATE table directory that none of the table's newest
         `keep_last` carriers lists.
+
+        Expiry is not deletions only: the compaction commit rewrites
+        every appended table that lists several directories (seen in
+        full, see `compact`). The carriers before it still list the
+        old deltas, so with keep_last >= 2 this call deletes none of
+        them and seen is stored twice until the next expiry.
 
         The per-wave tables (pages, metrics) survive in every version —
         they are the crawl's output log, unioned by `CrawlJob.pages()`.

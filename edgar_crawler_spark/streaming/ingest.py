@@ -23,8 +23,9 @@ argument as the crawl frontier's replayed-discovery path
 (streaming/jobs.py:stream_frontier_foreachbatch).
 
 At scale the hash set is (md5, ) — 16 bytes/doc, bucketable by hash
-prefix; reading `read_any` latest-version only (grow-only dim), the
-corpus is the append-only log across versions (like pages).
+prefix; `store.read` returns its newest carrier (each commit writes
+the whole grow-only set), and the corpus is the append-only log
+across versions (like pages).
 """
 
 from __future__ import annotations
@@ -74,7 +75,7 @@ def ingest_batch(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    seen = store.read_any(spark, "doc_hashes")
+    seen = store.read(spark, "doc_hashes")
     if seen is None:
         seen = spark.createDataFrame([], "_h string")
     fresh = hashed.join(seen, "_h", "left_anti")

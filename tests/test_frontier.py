@@ -768,6 +768,43 @@ class TestWriteOnceWave:
         with pytest.raises(ValueError, match="seed a new store"):
             store.rows("frontier")
 
+    def test_commit_fails_when_a_written_table_is_gone(self, spark, tmp_path):
+        """A table `write` put into the version is committed from the
+        entry it returned; if another writer's `begin` removed it, the
+        commit fails instead of publishing a missing directory."""
+        import shutil
+
+        store = SnapshotStore(str(tmp_path / "gone"))
+        df = spark.range(3).selectExpr("cast(id as string) AS url")
+        store.commit({"seen": df})
+        v = store.begin()
+        _, entry = store.write(v, "pages", df)
+        assert entry["dirs"] == [f"v{v}/pages"] and entry["rows"] == 3
+        shutil.rmtree(store._vdir(v))
+        with pytest.raises(RuntimeError, match="another writer"):
+            store.commit({"seen": df}, version=v, written={"pages": entry})
+        assert store.latest() == 1
+
+    def test_split_files_follows_the_read_split_rule(self, spark):
+        from edgar_crawler_spark.frontier.state import split_files
+
+        conf = {
+            "spark.sql.files.maxPartitionBytes": "1m",
+            "spark.sql.files.openCostInBytes": "64k",
+        }
+        old = {k: spark.conf.get(k) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            cores = spark.sparkContext.defaultParallelism
+            assert split_files(spark, 0) == 1
+            assert split_files(spark, 32 << 10) == 1  # below openCost
+            assert split_files(spark, cores * (256 << 10)) == cores
+            assert split_files(spark, 64 << 20) == 64  # 1 MB per file
+        finally:
+            for k, v in old.items():
+                spark.conf.set(k, v)
+
     def test_jobs_and_files_per_wave(self, spark, tmp_path):
         """Regression guard: a steady-state wave (seen and company_info
         already non-empty) runs exactly this many Spark jobs and
