@@ -16,6 +16,7 @@ Java-regex expressions.
 
 from __future__ import annotations
 
+import functools
 import re
 from typing import Optional
 
@@ -26,6 +27,7 @@ _FLAGS_IDM = re.IGNORECASE | re.DOTALL | re.MULTILINE
 _WS = r"[^\S\r\n]"
 
 
+@functools.lru_cache(maxsize=None)  # keys come from the fixed item catalogs
 def header_pattern(item_key: str) -> str:
     """Regex for an item/part header (adjust_item_patterns,
     extract_items.py:526-586).
@@ -62,6 +64,25 @@ def header_pattern(item_key: str) -> str:
     return rf"ITEMS?\s*{pattern_core}"
 
 
+# Compiled once per header pattern (pair): `re`'s own cache holds 512
+# entries, fewer than the 8-K catalog's (item, following item) pairs.
+@functools.lru_cache(maxsize=None)
+def _start_rx(pat: str) -> re.Pattern:
+    return re.compile(rf"\n{_WS}*{pat}[.*~\-:\s\(]", _FLAGS_ID)
+
+
+@functools.lru_cache(maxsize=None)
+def _span_rx(pat: str, nxt_pat: str, flags: int) -> re.Pattern:
+    return re.compile(
+        rf"\n{_WS}*{pat}[.*~\-:\s\()].+?(\n{_WS}*{nxt_pat}[.*~\-:\s\(])", flags
+    )
+
+
+@functools.lru_cache(maxsize=None)
+def _tail_rx(pat: str) -> re.Pattern:
+    return re.compile(rf"\n{_WS}*{pat}[.\-:\s].+?", _FLAGS_IDM)
+
+
 class Sectionizer:
     """Stateful per-filing section extractor.
 
@@ -92,6 +113,7 @@ class Sectionizer:
 
         candidates: list[tuple[int, list[re.Match]]] = []
         lone_match: Optional[re.Match] = None
+        starts: Optional[list[re.Match]] = None  # header hits, scanned once
         is_last = True
         for nxt in following:
             is_last = False
@@ -108,22 +130,19 @@ class Sectionizer:
                     is_last = True
                     break
 
-            starts = list(
-                re.finditer(rf"\n{_WS}*{pat}[.*~\-:\s\(]", text, flags=_FLAGS_ID)
-            )
+            if starts is None:
+                starts = list(_start_rx(pat).finditer(text))
             for i, m in enumerate(starts):
                 if i < skip_first:
                     continue
                 offset = m.start()
                 # case-sensitive first: true headers are usually
                 # uppercase, body mentions are not
-                span_rx = (
-                    rf"\n{_WS}*{pat}[.*~\-:\s\()].+?"
-                    rf"(\n{_WS}*{nxt_pat}[.*~\-:\s\(])"
-                )
-                found = list(re.finditer(span_rx, text[offset:], flags=re.DOTALL))
+                found = list(_span_rx(pat, nxt_pat, re.DOTALL).finditer(text[offset:]))
                 if not found:
-                    found = list(re.finditer(span_rx, text[offset:], flags=_FLAGS_ID))
+                    found = list(
+                        _span_rx(pat, nxt_pat, _FLAGS_ID).finditer(text[offset:])
+                    )
                 if found:
                     candidates.append((offset, found))
                 elif nxt == following[-1] and not candidates and m:
@@ -172,9 +191,7 @@ class Sectionizer:
     # -- tail fallback (get_last_item_section, extract_items.py:780-824) --
     def tail_section(self, item_key: str, text: str, ends: list[int]) -> str:
         pat = header_pattern(item_key)
-        hits = list(
-            re.finditer(rf"\n{_WS}*{pat}[.\-:\s].+?", text, flags=_FLAGS_IDM)
-        )
+        hits = list(_tail_rx(pat).finditer(text))
         for hit in hits:
             if "SIGNATURE" in item_key and hit is not hits[-1]:
                 # SIGNATURE also shows up in the ToC; take the last hit

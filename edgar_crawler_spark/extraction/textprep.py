@@ -51,13 +51,20 @@ def flatten_html(html_content: str) -> str:
     return stripper.text()
 
 
+_RX_BLANK_RUN = re.compile(r"(( )*\n( )*){2,}")
+_RX_NEWLINE_MARKS = re.compile(r"(#NEWLINE)+")
+_RX_SPACE_RUN = re.compile(r"[ ]{2,}")
+
+
 def collapse_lines(text: str) -> str:
     """Collapse blank-line runs to single newlines and squeeze spaces
     (remove_multiple_lines, extract_items.py:226-246)."""
-    text = re.sub(r"(( )*\n( )*){2,}", "#NEWLINE", text)
-    text = re.sub(r"\n", " ", text)
-    text = re.sub(r"(#NEWLINE)+", "\n", text).strip()
-    text = re.sub(r"[ ]{2,}", " ", text)
+    if not text:  # most absent items
+        return text
+    text = _RX_BLANK_RUN.sub("#NEWLINE", text)
+    text = text.replace("\n", " ")
+    text = _RX_NEWLINE_MARKS.sub("\n", text).strip()
+    text = _RX_SPACE_RUN.sub(" ", text)
     return text
 
 

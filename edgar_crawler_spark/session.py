@@ -5,6 +5,20 @@ per-executor. All defaults are chosen for the 100 TB design point:
 AQE on (runtime re-plan + skew-join splitting), Arrow on (every custom
 operator here is a pandas/Arrow UDF, never row-at-a-time), UTC pinned
 so results compare bit-for-bit against external oracles.
+
+Python workers start from `edgar_crawler_spark.pydaemon` instead of
+the stock `pyspark.daemon`. The JVM puts `pyspark.zip`, the py4j zip
+and the 15 MB spark-core jar on every worker's path, and PySpark's
+worker refreshes the import caches before every task; on CPython 3.11
+that re-reads each archive's central directory in pure Python, about
+0.2 CPU-s per task before any UDF runs. The engine daemon drops those
+archives when the same `pyspark` is installed as a directory (see its
+docstring for the rule) and otherwise leaves the path alone. The
+engine's root goes on the workers' PYTHONPATH (merged into any
+`spark.executorEnv.PYTHONPATH` the caller passes), so the daemon
+starts from wherever the driver imported the engine. When the engine
+itself is imported from an archive (spark-submit `--py-files`), the
+daemon could not be started from it, so the stock daemon runs.
 """
 
 from __future__ import annotations
@@ -12,6 +26,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding the `edgar_crawler_spark` package, or a path
+# inside an archive when the engine is imported from one
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -54,9 +72,15 @@ def get_spark(
         # own predicate pushdown.
         .config("spark.sql.python.filterPushdown.enabled", "true")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    extra_conf = dict(extra_conf or {})
+    if os.path.isdir(_ENGINE_ROOT):
+        builder = builder.config(
+            "spark.python.daemon.module", "edgar_crawler_spark.pydaemon")
+        env_path = extra_conf.get("spark.executorEnv.PYTHONPATH")
+        extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            [_ENGINE_ROOT] + ([env_path] if env_path else []))
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
