@@ -1,4 +1,4 @@
-"""Wave-loop crawl driver: schedule → fetch → commit, resumable.
+"""Wave-loop crawl driver: admit → (read wave → fetch → commit)*, resumable.
 
 One `run()` reproduces the reference's crawl entry point
 (/root/reference/download_filings.py:54-224) as an iterative batch
@@ -6,25 +6,34 @@ loop — the Structured-Streaming dual is foreachBatch over the frontier
 table, but an explicit loop keeps each wave = one atomic snapshot,
 which is the exact-resume contract of the north rule.
 
-Per wave, every computation runs once and every table is written once
-(state.py has the store layout):
- 1. read frontier and seen from the last committed snapshot (lineage
-    stays one wave deep — iterative Spark jobs must cut lineage or
-    plans grow unboundedly); the manifest's row counts answer "is the
-    frontier empty" and size the bloom without a counting job,
- 2. schedule: URL-seen (sharded bloom pre-filter + exact anti-join,
-    seen.py) then priority + politeness waves (priority.py), written
-    once as the version's scratch `schedule` table,
- 3. fetch the `wave == 0` rows via applyInPandas (fetch.py), written
-    once as the version's `pages` — nothing re-runs the fetch,
- 4. one aggregate over that parquet gives n_ok, n_failed and the
-    per-bucket lineage metrics,
- 5. commit: frontier = the scratch rows with `wave > 0` (every wave-0
-    row produced exactly one page row, so that is unseen minus this
-    wave's fetches, with no join), seen += the wave's urls,
-    company_info += the wave's new CIKs, plus pages and metrics. Kill
-    the process anywhere; rerun resumes from the last commit with no
-    double-fetch and no missed URL.
+URLs enter the frontier only through an admission commit: `seed()`,
+`requeue_failed()` and `merge()` (the stream merge). Admission ranks
+the whole frontier once — priority + politeness waves, priority.py —
+and writes it segmented by wave (state.py), with a cursor at wave 0.
+A merge also drops already-seen URLs there (URL-seen, seen.py), so
+frontier ∩ seen = ∅ after every commit. A job whose n_buckets or
+wave_size differ from the recorded ones re-ranks the remaining
+frontier once, as an admission commit.
+
+A wave reads only its own rows and runs every computation once:
+ 1. read the cursor's wave segment and seen from the last committed
+    snapshot (lineage stays one wave deep — iterative Spark jobs must
+    cut lineage or plans grow unboundedly); the manifest's row counts
+    answer "is the frontier empty" and size the bloom without a
+    counting job,
+ 2. check the segment against seen (sharded bloom pre-filter + exact
+    anti-join, seen.py) — a guard: admission already keeps the
+    frontier unseen,
+ 3. fetch via applyInPandas (fetch.py), written once as the version's
+    `pages` — nothing re-runs the fetch,
+ 4. concurrently: one aggregate over that parquet gives n_ok,
+    n_failed and the per-bucket lineage metrics (written as
+    `metrics`), seen += the wave's urls, company_info += the wave's
+    new CIKs,
+ 5. commit those with the frontier's entry, its cursor one wave on;
+    no frontier data is written. Kill the process anywhere; rerun
+    resumes from the last commit with no double-fetch and no missed
+    URL.
 
 Failed-after-retries URLs are committed to `seen` with status=failed
 in the pages table (so a bounded run terminates); the reference's
@@ -33,18 +42,20 @@ in the pages table (so a bounded run terminates); the reference's
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
 from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .canon import canonicalize_url
 from .company import enrich_pages, merge_company_info
 from .fetch import RobotsPolicy, SimulatedTransport, fetch_wave
-from .priority import assign_waves, bucket_partitioned
+from .priority import assign_waves, bucket_key, bucket_partitioned
 from .seen import build_sharded_bloom, filter_unseen
-from .state import SnapshotStore, split_files
+from .state import SnapshotStore
 
 FRONTIER_COLS = ["url", "cik", "company", "form_type", "filing_date", "accession"]
 
@@ -92,6 +103,28 @@ def wave_metrics(pages: DataFrame) -> list:
     )
 
 
+def concurrently(spark: SparkSession, fns: list[Callable]) -> list:
+    """Run `fns` in threads that inherit the caller's Spark job group
+    and tags, wait for all of them, and return their results in order.
+    The first error raised is re-raised only after every thread has
+    finished, so no write outlives the caller."""
+    with ThreadPoolExecutor(len(fns)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
+        errors = [f.exception() for f in as_completed(futures)]
+    for error in errors:
+        if error is not None:
+            raise error
+    return [f.result() for f in futures]
+
+
+def _canonical(urls: DataFrame) -> DataFrame:
+    return (
+        urls.withColumn("url", canonicalize_url("url"))
+        .dropDuplicates(["url"])
+        .select(*FRONTIER_COLS)
+    )
+
+
 class CrawlJob:
     def __init__(
         self,
@@ -117,19 +150,66 @@ class CrawlJob:
         self.robots = robots
         self.company_transport_factory = company_transport_factory
 
-    # -- state ---------------------------------------------------------
+    # -- admission -----------------------------------------------------
+
+    def _admit(self, frontier: DataFrame, tables: dict[str, DataFrame], summary: dict) -> int:
+        """Admission commit: rank `frontier` (unseen rows only) into
+        waves once and commit it segmented by wave, cursor at 0, with
+        `tables`. The entry records the n_buckets/wave_size it was
+        ranked with."""
+        ranked = assign_waves(
+            frontier.select(*FRONTIER_COLS), self.n_buckets, self.wave_size
+        ).drop("form_weight")
+        # A task writes one file per wave it holds. Keyed on (wave, host
+        # bucket), a large wave is written by up to n_buckets tasks; AQE
+        # coalesces a small frontier into one task, one file per wave.
+        ranked = ranked.repartition(F.col("wave"), F.col(bucket_key(ranked)))
+        version = self.store.begin()
+        _, entry = self.store.write(version, "frontier", ranked, segmented=True)
+        entry.update(n_buckets=self.n_buckets, wave_size=self.wave_size)
+        return self.store.commit(
+            tables, summary=summary, version=version, written={"frontier": entry}
+        )
+
+    def _frontier(self) -> dict:
+        """The committed frontier's entry; a frontier committed without
+        a cursor (before admission ranking) cannot be resumed."""
+        entry = self.store.entry("frontier")
+        if entry is None or "cursor" not in entry:
+            raise ValueError(
+                f"{self.store.root} has no ranked frontier with a wave cursor; "
+                "seed a new store"
+            )
+        return entry
+
+    def _remaining(self) -> DataFrame:
+        """The frontier rows not yet fetched, without their ranking."""
+        self._frontier()
+        return self.store.read(self.spark, "frontier").select(*FRONTIER_COLS)
 
     def seed(self, frontier: DataFrame) -> int:
-        """Snapshot v1: canonicalized deduped frontier, empty seen."""
-        canon = (
-            frontier.withColumn("url", canonicalize_url("url"))
-            .dropDuplicates(["url"])
-            .select(*FRONTIER_COLS)
-        )
+        """Snapshot v1: canonicalized deduped frontier, ranked, empty seen."""
         empty_seen = self.spark.createDataFrame([], "url string")
-        return self.store.commit(
-            {"frontier": canon, "seen": empty_seen},
-            summary={"stage": "seed"},
+        return self._admit(_canonical(frontier), {"seen": empty_seen}, {"stage": "seed"})
+
+    def merge(self, urls: DataFrame, **summary) -> int:
+        """Admit discovered URLs into the committed frontier (or seed an
+        empty store with them): canonical form (so a /ix?doc=/ variant
+        of a fetched url is recognised), already-seen ones dropped, the
+        rest re-ranked with the remaining frontier. Also rewrites seen
+        as one base."""
+        store, spark = self.store, self.spark
+        if store.latest() is None:
+            return self.seed(urls)
+        seen = store.read(spark, "seen")
+        bloom = build_sharded_bloom(
+            seen, n_shards=self.bloom_shards, fpp=self.bloom_fpp, n=store.rows("seen"),
+        )
+        new = filter_unseen(_canonical(urls), seen, bloom)
+        return self._admit(
+            self._remaining().unionByName(new).dropDuplicates(["url"]),
+            {"seen": seen},
+            {"stage": "merge", **summary},
         )
 
     # -- one wave ------------------------------------------------------
@@ -140,33 +220,27 @@ class CrawlJob:
         store, spark = self.store, self.spark
         if store.latest() is None:
             raise RuntimeError("no snapshot; call seed(frontier) first")
+        entry = self._frontier()
         if not store.rows("frontier"):
             return None
-        frontier = store.read(spark, "frontier")
+        if (entry["n_buckets"], entry["wave_size"]) != (self.n_buckets, self.wave_size):
+            self._admit(self._remaining(), {}, {"stage": "rerank"})
+            entry = self._frontier()
+        wave = entry["cursor"]
         seen = store.read(spark, "seen")
-
         bloom = build_sharded_bloom(
             seen, n_shards=self.bloom_shards, fpp=self.bloom_fpp,
             n=store.rows("seen"),
         )
         version = store.begin()
-        sched, sched_entry = store.write(
-            version, "schedule",
-            assign_waves(
-                filter_unseen(frontier, seen, bloom), self.n_buckets, self.wave_size
-            ),
-            scratch=True,
+        # The segment was unseen when admitted; the check guards it. The
+        # bloom flag is evaluated below the exchange the fetch needs
+        # anyway, so it runs once per row. A wave whose rows all turn
+        # out seen fetches nothing and still moves the cursor on.
+        front = filter_unseen(
+            store.read(spark, "frontier", segment=wave), seen, bloom,
+            exchange=lambda df: bucket_partitioned(df, self.n_buckets),
         )
-        # A merged/replayed frontier can consist ENTIRELY of already-seen
-        # urls; without this check run() would loop forever committing
-        # empty waves (frontier non-empty but no fetchable work).
-        if sched_entry["rows"] == 0:
-            store.abort(version)
-            return None
-
-        # reading the scratch back drops assign_waves' partitioning:
-        # restore one host bucket per fetch task
-        front = bucket_partitioned(sched.filter(F.col("wave") == 0), self.n_buckets)
         pages, pages_entry = store.write(
             version, "pages",
             fetch_wave(
@@ -177,10 +251,6 @@ class CrawlJob:
                 robots=self.robots,
             ),
         )
-        stats = wave_metrics(pages)
-        n_ok = sum(r.n_ok for r in stats)
-        n_failed = sum(r.n_failed for r in stats)
-
         # lazy company-info dim upsert (download_filings.py:572-646):
         # only ciks NOT already in the dim are "fetched", and only they
         # are appended, in the same atomic commit as the rest.
@@ -188,26 +258,26 @@ class CrawlJob:
             store.read(spark, "company_info"), pages.select("cik"), version,
             self.company_transport_factory,
         )
-        # every wave-0 row became exactly one page row, so the rows
-        # left for later waves are the next frontier — no join needed.
-        # The frontier gets the files Spark's read-split rule asks for;
-        # the tables bounded by the wave are one file each, except
-        # company_info, whose fetch keeps the (AQE-sized) parallelism
-        # of the shuffle before it.
-        left = 1 - pages_entry["rows"] / sched_entry["rows"]
+
+        def write_metrics() -> tuple[list, dict]:
+            stats = wave_metrics(pages)
+            df = spark.createDataFrame(stats, METRICS_SCHEMA).coalesce(1)
+            return stats, store.write(version, "metrics", df)[1]
+
+        # Three independent writes from the written pages. The seen
+        # delta and metrics are one file each; company_info keeps the
+        # (AQE-sized) parallelism of the shuffle before it.
+        (stats, metrics_entry), seen_entry, company_entry = concurrently(spark, [
+            write_metrics,
+            lambda: store.append(version, "seen", pages.select("url").coalesce(1)),
+            lambda: store.append(version, "company_info", new_ciks),
+        ])
+        n_ok = sum(r.n_ok for r in stats)
+        n_failed = sum(r.n_failed for r in stats)
         store.commit(
-            {
-                "frontier": sched.filter(F.col("wave") > 0)
-                .select(*FRONTIER_COLS)
-                .coalesce(split_files(spark, int(sched_entry["bytes"] * left))),
-                "metrics": spark.createDataFrame(stats, METRICS_SCHEMA).coalesce(1),
-            },
-            append={
-                "seen": pages.select("url").coalesce(1),
-                "company_info": new_ciks,
-            },
             summary={
                 "stage": "wave",
+                "wave": wave,
                 "n_ok": n_ok,
                 "n_failed": n_failed,
                 "n_buckets": self.n_buckets,
@@ -215,7 +285,13 @@ class CrawlJob:
                 "host_budget_per_sec": self.host_budget_per_sec,
             },
             version=version,
-            written={"pages": pages_entry},
+            written={
+                "frontier": {**entry, "cursor": wave + 1},
+                "pages": pages_entry,
+                "metrics": metrics_entry,
+                "seen": seen_entry,
+                "company_info": company_entry,
+            },
         )
         return n_ok, n_failed, version
 
@@ -284,7 +360,8 @@ class CrawlJob:
 
     def requeue_failed(self) -> int:
         """Reference 'rerun to retry failed' idiom: move failed URLs
-        from seen back into the frontier in a new snapshot."""
+        from seen back into the frontier, re-ranked with the remaining
+        rows, in one admission commit."""
         if self.store.latest() is None:
             return 0
         pages = self.pages()
@@ -301,13 +378,10 @@ class CrawlJob:
         n = failed.count()
         if n == 0:
             return 0
-        frontier = self.store.read(self.spark, "frontier")
         seen = self.store.read(self.spark, "seen")
-        self.store.commit(
-            {
-                "frontier": frontier.unionByName(failed).dropDuplicates(["url"]),
-                "seen": seen.join(failed.select("url"), "url", "left_anti"),
-            },
-            summary={"stage": "requeue_failed", "n": n},
+        self._admit(
+            self._remaining().unionByName(failed).dropDuplicates(["url"]),
+            {"seen": seen.join(failed.select("url"), "url", "left_anti")},
+            {"stage": "requeue_failed", "n": n},
         )
         return n

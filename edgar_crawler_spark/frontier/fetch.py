@@ -20,7 +20,8 @@ mount; everything else — pacing, retries, scheduling, output schema —
 is transport-independent.
 
 Plan shape: groupBy(host_bucket).applyInPandas — ONE hash exchange on
-host_bucket (reused from assign_waves' window), then pure map-side
+host_bucket (reused from assign_waves' window, or in a crawl wave
+from the exchange under its URL-seen check), then pure map-side
 work. Each task owns one bucket = one slice of the host budget, so
 politeness holds per-task without any cross-task coordination.
 """

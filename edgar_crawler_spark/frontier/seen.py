@@ -13,7 +13,7 @@ between shuffling 10^10 rows and shuffling 10^8.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 from uuid import uuid4
 
 import numpy as np
@@ -162,6 +162,7 @@ def filter_unseen(
     seen: DataFrame,
     bloom: ShardedBloom | ShardedCuckoo | None,
     url_col: str = "url",
+    exchange: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Frontier rows whose canonical URL is NOT in `seen` — exact.
 
@@ -170,6 +171,13 @@ def filter_unseen(
     anti-join. `seen` is broadcast when small; at scale both sides
     hash-partition on the url (Catalyst picks SortMergeJoin and AQE
     handles residual skew — the url key is near-unique so none).
+
+    The two legs read the same flagged rows, so Spark evaluates the
+    bloom probe once per leg. `exchange` (a repartition the caller
+    needs anyway, such as the fetch's bucket exchange) is applied to
+    the flagged rows: both legs then read that one exchange, reused,
+    and the probe runs once per row. The result keeps the exchange's
+    partitioning when seen is broadcast.
     """
     if bloom is None:
         return frontier.join(seen.select(url_col), on=url_col, how="left_anti")
@@ -180,7 +188,6 @@ def filter_unseen(
     ns = bloom.n_shards
     b_key = uuid4().hex  # unique per broadcast — never aliases filters
 
-    @F.pandas_udf("boolean")
     def maybe_seen(urls: pd.Series) -> pd.Series:
         # deserialize the broadcast filter ONCE per python worker, not
         # once per Arrow batch — workers are reused across batches, so
@@ -197,8 +204,21 @@ def filter_unseen(
             _FILTER_CACHE[b_key] = sb
         return pd.Series(sb.might_contain_many(urls.astype(str).tolist()))
 
-    flagged = frontier.withColumn("_maybe_seen", maybe_seen(F.col(url_col)))
-    clear = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    suspect = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
+    # Declared nondeterministic only to fence Catalyst: a deterministic
+    # probe is copied onto the seen side of the anti-join (inferred
+    # from the join condition, so every seen row is probed too) and
+    # its leg filters are pushed below `exchange`, which then differs
+    # per leg and is not reused.
+    probe = F.pandas_udf(maybe_seen, "boolean").asNondeterministic()
+    flagged = frontier.withColumn("_maybe_seen", probe(F.col(url_col)))
+    if exchange is None:
+        leg = F.col("_maybe_seen")
+    else:
+        flagged = exchange(flagged)
+        # a condition that is itself nondeterministic stays above the
+        # exchange; the guard is always true
+        leg = F.when(F.spark_partition_id() >= 0, F.col("_maybe_seen"))
+    clear = flagged.filter(~leg).drop("_maybe_seen")
+    suspect = flagged.filter(leg).drop("_maybe_seen")
     survivors = suspect.join(seen.select(url_col), on=url_col, how="left_anti")
     return clear.unionByName(survivors)

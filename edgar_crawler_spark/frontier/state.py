@@ -8,7 +8,7 @@ an Iceberg-style commit protocol on plain parquet, and a commit writes
 only the state that changed (Flink's incremental checkpoints):
 
   data        <root>/v<k>/<table>/part-*.parquet   (written first)
-  scratch     <root>/v<k>/scratch/<name>/          (deleted before the commit point)
+  segments    <root>/v<k>/<table>/wave=<n>/        (a segmented table)
   manifest    <root>/v<k>/MANIFEST.json            (commit point)
 
 A snapshot is visible iff its MANIFEST.json exists; the manifest is
@@ -35,11 +35,23 @@ Tables a commit does not name are not carried; reading a table
 without a version reads its newest carrier. Row counts come from the
 parquet footers and reads take the recorded schema, so neither a
 commit nor a read runs a counting or schema-inference job. A table
-written ahead of its commit (`write`) is committed by passing the
-entry `write` returned; `commit` never infers it from the directory.
+written ahead of its commit (`write`, `append`) is committed by passing
+the entry it returned; `commit` never infers it from the directory.
+
+A segmented table (`write(segmented=True)`) is one directory per
+value 0, 1, ... of its integer SEGMENT_COL column, consumed in order
+by a cursor: its entry adds the row count of every segment and the
+cursor, and a read returns only the segments at or after the cursor.
+Moving the cursor is a commit of the same entry with a new cursor; it
+writes no data:
+
+  "frontier": {"dirs": ["v1/frontier"], "segments": [2000, 2000, 1500],
+               "cursor": 1, ...}
 
 Tables the crawl writes (crawler.py):
-  frontier      overwritten each wave: the rows still to fetch
+  frontier      segmented by wave; written when URLs are admitted
+                (seed, requeue_failed, a merge), and each wave commits
+                it with the cursor one wave further
   seen          appended each wave (that wave's urls); seed,
                 requeue_failed and the stream merge overwrite it
   company_info  appended each wave (the wave's new CIKs)
@@ -58,6 +70,7 @@ from dataclasses import dataclass
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 # Deltas an appended table may list before the next append folds
@@ -65,7 +78,9 @@ from pyspark.sql.types import StructType
 # with a distributed job (parallelPartitionDiscovery.threshold); 16
 # keeps every read a driver-side listing of a few small files.
 MAX_DELTAS = 16
-SCRATCH = "scratch"
+
+# The integer column a segmented table is split on: the frontier's wave.
+SEGMENT_COL = "wave"
 
 
 def _conf_bytes(spark: SparkSession, key: str) -> int:
@@ -92,16 +107,31 @@ def split_files(spark: SparkSession, nbytes: int) -> int:
     return max(1, -(-nbytes // max_split))
 
 
-def _write(df: DataFrame, path: str) -> tuple[int, int]:
-    """Write `df` as parquet at `path` and return its (rows, bytes).
-    The manifest is the commit point, so no _SUCCESS marker is
-    written."""
-    (
-        df.write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(path)
+def _writer(df: DataFrame):
+    # the manifest is the commit point, so no _SUCCESS marker
+    return df.write.mode("overwrite").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
     )
+
+
+def _write(df: DataFrame, path: str) -> tuple[int, int]:
+    """Write `df` as parquet at `path` and return its (rows, bytes)."""
+    _writer(df).parquet(path)
     return _parquet_size(path)
+
+
+def _write_segments(df: DataFrame, path: str) -> list[tuple[int, int]]:
+    """Write `df` as one parquet directory per SEGMENT_COL value and
+    return each segment's (rows, bytes). Every task writes one file per
+    segment it holds, so `df`'s partitioning sets how many tasks write
+    a segment."""
+    _writer(df).partitionBy(SEGMENT_COL).parquet(path)
+    os.makedirs(path, exist_ok=True)  # an empty write creates nothing
+    found = {
+        int(name.split("=", 1)[1]): _parquet_size(os.path.join(path, name))
+        for name in os.listdir(path) if name.startswith(f"{SEGMENT_COL}=")
+    }
+    return [found.get(n, (0, 0)) for n in range(max(found, default=-1) + 1)]
 
 
 def _parquet_size(path: str) -> tuple[int, int]:
@@ -148,7 +178,7 @@ class SnapshotStore:
             )
         return manifest
 
-    def _entry(self, table: str, version: int | None = None) -> dict | None:
+    def entry(self, table: str, version: int | None = None) -> dict | None:
         """`table`'s manifest entry {dirs, rows, bytes, schema} at
         `version`, or at its newest carrier when `version` is None."""
         committed = self.versions()
@@ -161,26 +191,46 @@ class SnapshotStore:
         return None
 
     def rows(self, table: str, version: int | None = None) -> int | None:
-        """Row count of `table` as committed (no Spark job)."""
-        entry = self._entry(table, version)
-        return None if entry is None else entry["rows"]
+        """Row count of `table` as committed (no Spark job); for a
+        segmented table, the rows at or after the cursor."""
+        entry = self.entry(table, version)
+        if entry is None:
+            return None
+        if "cursor" in entry:
+            return sum(entry["segments"][entry["cursor"]:])
+        return entry["rows"]
 
     def read(
-        self, spark: SparkSession, table: str, version: int | None = None
+        self,
+        spark: SparkSession,
+        table: str,
+        version: int | None = None,
+        segment: int | None = None,
     ) -> DataFrame | None:
         """`table` at `version` (its newest carrier when None); None if
-        that version does not carry it or its data was expired."""
-        entry = self._entry(table, version)
+        that version does not carry it or its data was expired. A
+        segmented table reads only its segments at or after the
+        cursor, or only `segment` when given."""
+        entry = self.entry(table, version)
         if entry is None:
             return None
         paths = [os.path.join(self.root, d) for d in entry["dirs"]]
         if not all(os.path.isdir(p) for p in paths):
             return None
-        return spark.read.schema(StructType.fromJson(entry["schema"])).parquet(*paths)
-
-    def read_any(self, spark: SparkSession, table: str) -> DataFrame | None:
-        """Alias of `read(spark, table)`: the newest carrier."""
-        return self.read(spark, table)
+        schema = StructType.fromJson(entry["schema"])
+        reader = spark.read.schema(schema)
+        if "cursor" not in entry:
+            return reader.parquet(*paths)
+        (base,) = paths
+        sizes = entry["segments"]
+        wanted = range(entry["cursor"], len(sizes)) if segment is None else [segment]
+        seg_paths = [
+            os.path.join(base, f"{SEGMENT_COL}={n}") for n in wanted
+            if n < len(sizes) and sizes[n]
+        ]
+        if not seg_paths:
+            return spark.createDataFrame([], schema)
+        return reader.option("basePath", base).parquet(*seg_paths)
 
     # -- writing -------------------------------------------------------
 
@@ -194,41 +244,77 @@ class SnapshotStore:
         os.makedirs(vdir)
         return version
 
-    def abort(self, version: int) -> None:
-        """Drop an uncommitted version."""
-        shutil.rmtree(self._vdir(version), ignore_errors=True)
-
     def write(
-        self, version: int, table: str, df: DataFrame, scratch: bool = False
+        self,
+        version: int,
+        table: str,
+        df: DataFrame,
+        segmented: bool = False,
     ) -> tuple[DataFrame, dict]:
         """Write `df` into uncommitted `version` ahead of its commit and
         return (the written table read back, its manifest entry). Pass
-        the entry to `commit(written=...)` to commit the table; a
-        scratch table is instead deleted by the commit, before the
-        commit point."""
-        rel = f"v{version}/{SCRATCH}/{table}" if scratch else f"v{version}/{table}"
+        the entry to `commit(written=...)` to commit the table.
+
+        A `segmented` table is written as one directory per SEGMENT_COL
+        value (see the module docstring), its entry records every
+        segment's row count and a cursor at 0, and the column moves to
+        the end of the schema."""
+        rel = f"v{version}/{table}"
         path = os.path.join(self.root, rel)
-        rows, nbytes = _write(df, path)
+        if not segmented:
+            rows, nbytes = _write(df, path)
+            entry = {
+                "dirs": [rel], "rows": rows, "bytes": nbytes,
+                "schema": df.schema.jsonValue(),
+            }
+            return df.sparkSession.read.schema(df.schema).parquet(path), entry
+        schema = StructType(
+            [f for f in df.schema if f.name != SEGMENT_COL] + [df.schema[SEGMENT_COL]]
+        )
+        sizes = _write_segments(df.select(*schema.fieldNames()), path)
         entry = {
-            "dirs": [rel], "rows": rows, "bytes": nbytes,
+            "dirs": [rel],
+            "rows": sum(r for r, _ in sizes),
+            "bytes": sum(b for _, b in sizes),
+            "schema": schema.jsonValue(),
+            "segments": [r for r, _ in sizes],
+            "cursor": 0,
+        }
+        return df.sparkSession.read.schema(schema).parquet(path), entry
+
+    def append(self, version: int, table: str, df: DataFrame) -> dict:
+        """Write `df` into uncommitted `version` as a delta of `table`
+        and return the entry that lists it after the table's current
+        directories. After MAX_DELTAS deltas the delta is instead folded
+        with the table into a new base."""
+        base = self.entry(table)
+        if base is not None and len(base["dirs"]) >= MAX_DELTAS:
+            spark = df.sparkSession
+            df = self.read(spark, table).unionByName(df).coalesce(
+                split_files(spark, base["bytes"])
+            )
+            base = None
+        rows, nbytes = _write(df, os.path.join(self._vdir(version), table))
+        return {
+            "dirs": (base["dirs"] if base else []) + [f"v{version}/{table}"],
+            "rows": (base["rows"] if base else 0) + rows,
+            "bytes": (base["bytes"] if base else 0) + nbytes,
             "schema": df.schema.jsonValue(),
         }
-        return df.sparkSession.read.schema(df.schema).parquet(path), entry
 
     def commit(
         self,
-        tables: dict[str, DataFrame],
+        tables: dict[str, DataFrame] | None = None,
         summary: dict | None = None,
-        append: dict[str, DataFrame] | None = None,
         version: int | None = None,
         written: dict[str, dict] | None = None,
     ) -> int:
-        """Write `tables` (overwrite) and `append` (deltas) into
-        `version` (claimed by `begin`, or the next one), add the
-        `written` entries that `write` returned, delete the version's
-        scratch, then commit by atomically renaming the manifest into
-        place. Anything that dies before the rename is invisible to
-        readers."""
+        """Write `tables` into `version` (claimed by `begin`, or the
+        next one), add the `written` entries (returned by `write` or
+        `append`, or an earlier entry of a segmented table with its
+        cursor moved), then commit by atomically renaming the manifest
+        into place.
+        Anything that dies before the rename is invisible to readers."""
         if version is None:
             version = self.begin()
         vdir = self._vdir(version)
@@ -239,28 +325,8 @@ class SnapshotStore:
                     f"{name} of uncommitted v{version} is gone: another "
                     "writer claimed the version"
                 )
-        for name, df in tables.items():
-            rows, nbytes = _write(df, os.path.join(vdir, name))
-            entries[name] = {
-                "dirs": [f"v{version}/{name}"], "rows": rows, "bytes": nbytes,
-                "schema": df.schema.jsonValue(),
-            }
-        for name, df in (append or {}).items():
-            base = self._entry(name)
-            if base is not None and len(base["dirs"]) >= MAX_DELTAS:
-                spark = df.sparkSession
-                df = self.read(spark, name).unionByName(df).coalesce(
-                    split_files(spark, base["bytes"])
-                )
-                base = None
-            rows, nbytes = _write(df, os.path.join(vdir, name))
-            entries[name] = {
-                "dirs": (base["dirs"] if base else []) + [f"v{version}/{name}"],
-                "rows": (base["rows"] if base else 0) + rows,
-                "bytes": (base["bytes"] if base else 0) + nbytes,
-                "schema": df.schema.jsonValue(),
-            }
-        shutil.rmtree(os.path.join(vdir, SCRATCH), ignore_errors=True)
+        for name, df in (tables or {}).items():
+            entries[name] = self.write(version, name, df)[1]
         manifest = {
             "version": version,
             "committed_at": time.time(),
@@ -331,10 +397,10 @@ class SnapshotStore:
         Iceberg's expire_snapshots). Resume is untouched: it reads each
         table's newest carrier, whose directories are all kept.
 
-        Without expiry a W-wave crawl stores W frontier copies; the
-        seen deltas are stored once, and compaction keeps their number
-        per read bounded. Returns the versions whose state was
-        expired."""
+        Without expiry a crawl stores one frontier copy per admission
+        (a wave only moves the cursor); the seen deltas are stored
+        once, and compaction keeps their number per read bounded.
+        Returns the versions whose state was expired."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         self.compact()
@@ -376,8 +442,6 @@ def snapshot_diff(
     rewritten each run) as an incremental read instead of a full
     rescan.
     """
-    from pyspark.sql import functions as F
-
     old = store.read(spark, table, v_from)
     new = store.read(spark, table, v_to)
     if old is None or new is None:

@@ -15,12 +15,12 @@ streaming duals close that gap:
    throughput with a watermark bounding state for late fetch-log rows.
 
 3. `stream_frontier_foreachbatch` — the crawl loop as a stream: each
-   micro-batch of newly-discovered URLs runs the SAME wave pipeline
-   (seen-filter → priority → fetch → snapshot commit) via
-   foreachBatch. One micro-batch == one CrawlJob wave, so batch and
-   streaming share every operator and every test; the streaming
-   checkpoint tracks source offsets while the SnapshotStore remains
-   the source of truth for crawl state (idempotent per-wave commits →
+   micro-batch of newly-discovered URLs is admitted into the frontier
+   (canonical form → URL-seen filter → priority ranking, one snapshot
+   commit) and then crawled by the SAME wave loop via foreachBatch, so
+   batch and streaming share every operator and every test; the
+   streaming checkpoint tracks source offsets while the SnapshotStore
+   remains the source of truth for crawl state (idempotent commits →
    exactly-once effects even on micro-batch replay).
 """
 
@@ -102,16 +102,15 @@ def stream_frontier_foreachbatch(
     crawl_job,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Discovered-URL stream → one crawl wave per micro-batch.
+    """Discovered-URL stream → admission, then waves to exhaustion,
+    per micro-batch.
 
     `crawl_job` is a frontier.CrawlJob whose SnapshotStore carries the
     real state; foreachBatch only *feeds* it. Replayed micro-batches
-    are harmless: the wave pipeline starts with the URL-seen filter,
-    so re-delivered URLs dedupe against the committed seen set
-    (idempotent effects = streaming exactly-once)."""
-    from ..frontier.canon import canonicalize_url  # noqa: PLC0415
-    from ..frontier.crawler import FRONTIER_COLS  # noqa: PLC0415
-
+    are harmless: `CrawlJob.merge` admits a batch in canonical form
+    and drops URLs already in the committed seen set, so re-delivered
+    URLs are never fetched again (idempotent effects = streaming
+    exactly-once)."""
     urls = (
         spark.readStream.schema(
             "url string, cik string, company string, form_type string, "
@@ -121,35 +120,14 @@ def stream_frontier_foreachbatch(
         .parquet(urls_path)
     )
 
-    def one_wave(batch_df: DataFrame, batch_id: int) -> None:
+    def admit_and_crawl(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
             return
-        if crawl_job.store.latest() is None:
-            crawl_job.seed(batch_df.select(*FRONTIER_COLS))
-        else:
-            # merge the new URLs into the committed frontier — with the
-            # SAME canonical form seed() applies, or a non-canonical
-            # variant of a fetched url (/ix?doc=/ ...) would bypass the
-            # url-seen filter and double-fetch under a different key.
-            frontier = crawl_job.store.read(crawl_job.spark, "frontier")
-            seen = crawl_job.store.read(crawl_job.spark, "seen")
-            canon_batch = (
-                batch_df.withColumn("url", canonicalize_url("url"))
-                .dropDuplicates(["url"])
-                .select(*FRONTIER_COLS)
-            )
-            merged = (
-                frontier.unionByName(canon_batch)
-                .dropDuplicates(["url"])
-            )
-            crawl_job.store.commit(
-                {"frontier": merged, "seen": seen},
-                summary={"stage": "stream_merge", "batch_id": batch_id},
-            )
+        crawl_job.merge(batch_df, stage="stream_merge", batch_id=batch_id)
         crawl_job.run(max_waves=None)
 
     writer = (
-        urls.writeStream.foreachBatch(one_wave)
+        urls.writeStream.foreachBatch(admit_and_crawl)
         .option("checkpointLocation", checkpoint)
     )
     if available_now:

@@ -181,6 +181,33 @@ class TestUrlSeen:
         assert got == want
         assert 0 < len(got) < 300
 
+    def test_probe_runs_once_below_the_callers_exchange(self, spark):
+        """With `exchange`, both legs read one (reused) exchange, so the
+        bloom probe is evaluated once per row, never on the seen side,
+        and a consumer grouped on the same key adds no exchange."""
+        from edgar_crawler_spark.frontier.canon import host_bucket_col
+        from edgar_crawler_spark.frontier.priority import bucket_partitioned
+
+        rows = _frontier_rows(200, seed=2)
+        frontier = spark.createDataFrame(rows, FRONTIER_SCHEMA).withColumn(
+            "host_bucket", host_bucket_col("url", 4)
+        )
+        seen = spark.createDataFrame([(r[0],) for r in rows[::3]], "url string")
+        bloom = build_sharded_bloom(seen, n_shards=4)
+        seen = F.broadcast(seen)  # as a crawl's small seen parquet is
+        unseen = filter_unseen(
+            frontier, seen, bloom, exchange=lambda df: bucket_partitioned(df, 4)
+        )
+        grouped = unseen.groupBy("host_bucket").applyInPandas(lambda p: p, unseen.schema)
+        got = sorted(r.url for r in grouped.collect())
+        want = sorted(r.url for r in frontier.join(seen, "url", "left_anti").collect())
+        assert got == want
+        plan = grouped._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("ArrowEvalPython") == 1
+        assert final.count("ReusedExchange") == 1
+        assert final.count("+- Exchange hashpartitioning") == 1
+
 
 class TestOrdering:
     def test_reference_order_matches_oracle(self, spark):
@@ -401,9 +428,11 @@ class TestCrawlEndToEnd:
         assert ok.select("url").distinct().count() == 80
 
     def test_seen_frontier_drains_and_terminates(self, spark, tmp_path):
-        """Replayed/overlapping discovery: a frontier whose rows are
-        ALL already in seen must terminate run() instead of looping
-        forever committing empty waves (ADVICE r01, high)."""
+        """Replayed/overlapping discovery never double-fetches and run()
+        terminates instead of looping forever committing empty waves
+        (ADVICE r01, high): a merge of already-fetched urls admits only
+        the new ones, and a wave whose rows are ALL in seen (seen grown
+        outside the crawl) fetches nothing and moves the cursor on."""
         root = str(tmp_path / "s5")
         job = CrawlJob(
             spark, SnapshotStore(root), n_buckets=2, wave_size=50,
@@ -412,19 +441,8 @@ class TestCrawlEndToEnd:
         job.run(_frontier_df(spark, 40))
         assert job.pages().count() == 40
         # replay: merge the SAME 40 urls plus 20 new ones into the frontier
-        from edgar_crawler_spark.frontier.canon import canonicalize_url
-        merged = (
-            job.store.read(spark, "frontier")
-            .unionByName(
-                _frontier_df(spark, 60)  # superset (same seed)
-                .withColumn("url", canonicalize_url("url"))
-            )
-            .dropDuplicates(["url"])
-        )
-        seen = job.store.read(spark, "seen")
-        job.store.commit(
-            {"frontier": merged, "seen": seen}, summary={"stage": "replay"}
-        )
+        job.merge(_frontier_df(spark, 60))  # superset (same seed)
+        assert job.store.rows("frontier") == 20
         res = job.run(max_waves=5)  # bounded: must NOT hit the bound
         assert res.waves_run < 5
         pages = job.pages()
@@ -433,6 +451,20 @@ class TestCrawlEndToEnd:
         # pure-replay case: run again with zero new work -> 0 waves
         res2 = job.run(max_waves=5)
         assert res2.waves_run == 0 and res2.n_fetched == 0
+        # 10 new urls admitted, then committed to seen behind the
+        # frontier's back: their wave fetches nothing and run() ends
+        job.merge(_frontier_df(spark, 70))
+        v = job.store.begin()
+        entry = job.store.append(
+            v, "seen", job.store.read(spark, "frontier").select("url")
+        )
+        job.store.commit(
+            summary={"stage": "replay"}, version=v, written={"seen": entry}
+        )
+        res3 = job.run(max_waves=5)
+        assert res3.waves_run == 1 and res3.n_fetched == 0
+        assert job.store.rows("frontier") == 0
+        assert job.pages().count() == 60
 
 
 class TestCompanyInfoDim:
@@ -648,7 +680,7 @@ class TestSnapshotExpiry:
         # v1's seen expired, but v1's company_info is its newest
         # carrier and MUST survive
         assert store.read(spark, "seen", 1) is None
-        assert store.read_any(spark, "company_info").count() == 2
+        assert store.read(spark, "company_info").count() == 2
 
 
 class TestCrawlDelay:
@@ -768,6 +800,17 @@ class TestWriteOnceWave:
         with pytest.raises(ValueError, match="seed a new store"):
             store.rows("frontier")
 
+    def test_frontier_without_cursor_fails_loudly(self, spark, tmp_path):
+        """A frontier committed without a wave cursor (a store written
+        before admission ranking) is not resumed."""
+        store = SnapshotStore(str(tmp_path / "nocursor"))
+        store.commit({
+            "frontier": _frontier_df(spark, 5),
+            "seen": spark.createDataFrame([], "url string"),
+        })
+        with pytest.raises(ValueError, match="seed a new store"):
+            self._job(spark, store).run_wave()
+
     def test_commit_fails_when_a_written_table_is_gone(self, spark, tmp_path):
         """A table `write` put into the version is committed from the
         entry it returned; if another writer's `begin` removed it, the
@@ -807,9 +850,10 @@ class TestWriteOnceWave:
 
     def test_jobs_and_files_per_wave(self, spark, tmp_path):
         """Regression guard: a steady-state wave (seen and company_info
-        already non-empty) runs exactly this many Spark jobs and
-        commits exactly this many files. The counts only move if the
-        wave gains or loses work — update them deliberately."""
+        already non-empty) runs exactly this many Spark jobs, all of
+        them in the caller's job group (the concurrent writes inherit
+        it), and commits exactly this many files. The counts only move
+        if the wave gains or loses work — update them deliberately."""
         import os
 
         store = SnapshotStore(str(tmp_path / "guard"))
@@ -819,19 +863,23 @@ class TestWriteOnceWave:
         )
         job.run(_frontier_df(spark, 160), max_waves=1)
         sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
         sc.setJobGroup("wave-guard", "one crawl wave")
         try:
             _, _, v = job.run_wave()
         finally:
             sc.setJobGroup("", "")
-        jobs = len(sc.statusTracker().getJobIdsForGroup("wave-guard"))
+        jobs = len(tracker.getJobIdsForGroup("wave-guard"))
         files = sum(len(names) for _, _, names in os.walk(store._vdir(v)))
-        # bloom 2, schedule 3, pages 2, metrics 2, frontier/metrics/seen
-        # writes 1 each, company_info 3
-        assert jobs == 15
-        # 4 fetch partitions of pages + 4 one-file tables, each parquet
-        # with its .crc, + MANIFEST.json
-        assert files == 2 * 4 + 2 * 4 + 1
+        # bloom 2, pages 3 (seen broadcast, bucket exchange, write),
+        # metrics 2 + write 1, seen 1, company_info 3
+        assert jobs == 12
+        assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+        # 4 fetch partitions of pages + 3 one-file tables (metrics,
+        # seen, company_info), each parquet with its .crc, + MANIFEST.json;
+        # the frontier only moves its cursor
+        assert files == 2 * 4 + 2 * 3 + 1
 
     def test_fetch_once_under_cache_eviction(self, spark, tmp_path, monkeypatch):
         """Against a transport whose every answer is fresh (random
@@ -883,10 +931,13 @@ class TestWriteOnceWave:
         assert store.rows("seen") == 60 and store.rows("frontier") == 0
 
     def test_crash_anywhere_in_a_wave_is_invisible(self, spark, tmp_path, monkeypatch):
-        """Kill the wave after the scratch schedule, after pages and
-        after each table of the commit: the committed snapshot never
-        changes, and the resumed crawl fetches every url exactly once."""
+        """Kill the wave after pages and after each of the three
+        concurrent writes: the committed snapshot never changes, a
+        crash surfaces only once the concurrent writes still running
+        have finished, and the resumed crawl fetches every url exactly
+        once."""
         import os
+        import time
 
         from edgar_crawler_spark.frontier import state as state_mod
 
@@ -899,17 +950,26 @@ class TestWriteOnceWave:
         committed = store.latest()
         state = {t: self._urls(store.read(spark, t)) for t in ("frontier", "seen")}
         write = state_mod._write
-        for point in ("schedule", "pages", "frontier", "metrics", "seen", "company_info"):
+        for point in ("pages", "metrics", "seen", "company_info"):
             def crash_after(df, path, point=point):
+                name = os.path.basename(path)
+                if point == "seen" and name == "company_info":
+                    time.sleep(2)  # still writing when seen crashes
                 rows = write(df, path)
-                if os.path.basename(path) == point:
+                if name == point:
                     raise Crash(point)
                 return rows
 
             monkeypatch.setattr(state_mod, "_write", crash_after)
             with pytest.raises(Crash):
                 self._job(spark, store).run_wave()
-            assert os.path.isdir(store._vdir(committed + 1))
+            vdir = store._vdir(committed + 1)
+            assert os.path.isdir(vdir)
+            if point == "seen":
+                assert any(
+                    f.endswith(".parquet")
+                    for f in os.listdir(os.path.join(vdir, "company_info"))
+                )
             assert store.latest() == committed
             assert {
                 t: self._urls(store.read(spark, t)) for t in ("frontier", "seen")
@@ -986,7 +1046,12 @@ class TestWriteOnceWave:
         """Expiry never deletes a directory that one of a table's kept
         carriers lists, so every kept version stays readable."""
         store = SnapshotStore(str(tmp_path / "exp"))
-        self._job(spark, store).run(_frontier_df(spark, 60), max_waves=2)
+        # the frontier is written once per admission, so only a table
+        # rewritten by a compaction is superseded: expire after each of
+        # two waves, and the second finds the first compaction's inputs
+        self._job(spark, store).run(_frontier_df(spark, 60), max_waves=1)
+        store.expire_state(keep_last=2)
+        self._job(spark, store).run(max_waves=1)
         assert store.expire_state(keep_last=2)
         for t in store.STATE_TABLES:
             carriers = [
@@ -999,3 +1064,189 @@ class TestWriteOnceWave:
         urls = self._urls(job.pages())
         assert len(urls) == 60 and len(set(urls)) == 60
         assert self._urls(store.read(spark, "seen")) == urls
+
+
+def _oracle_waves(rows, n_buckets: int, wave_size: int) -> dict[str, int]:
+    """Pure-Python twin of assign_waves: url -> wave after ranking
+    `rows` (FRONTIER_SCHEMA tuples, canonical urls) by form weight
+    desc, filing date desc, accession asc within crc32 host buckets."""
+    import zlib
+
+    weight = {"8-K": 10, "10-K": 8, "10-Q": 6}
+    buckets: dict[int, list] = {}
+    for r in rows:
+        buckets.setdefault(zlib.crc32(r[0].encode()) % n_buckets, []).append(r)
+    out = {}
+    for rs in buckets.values():
+        rs = sorted(rs, key=lambda r: r[5])
+        rs = sorted(rs, key=lambda r: (weight.get(r[3], 1), r[4]), reverse=True)
+        out.update({r[0]: i // wave_size for i, r in enumerate(rs)})
+    return out
+
+
+def _tied_rows(n: int, seed: int = 5, forms=("8-K", "10-K", "10-Q", "S-1"),
+               dates=("2020-03-31", "2021-06-30", "2022-09-30")):
+    """Frontier rows whose form types and dates tie often; accessions
+    are unique, so the priority order is total."""
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        cik = str(rng.randint(1000, 99999))
+        acc = accession_number(seed, i)
+        rows.append((filing_url(cik, acc), cik, f"CO {i}", rng.choice(forms),
+                     rng.choice(dates), acc))
+    return rows
+
+
+class TestAdmissionOrder:
+    """The frontier is ranked once per admission and consumed by a
+    cursor; every wave still fetches what the per-wave rule (re-rank
+    the remaining unseen frontier, take wave 0) would fetch."""
+
+    @staticmethod
+    def _job(spark, root, **kw):
+        kw.setdefault("n_buckets", 4)
+        kw.setdefault("wave_size", 7)
+        kw.setdefault("transport_factory", lambda: SimulatedTransport(transient_pct=10))
+        return CrawlJob(spark, SnapshotStore(root), **kw)
+
+    @staticmethod
+    def _wave_urls(store, spark, v):
+        return {r.url for r in store.read(spark, "pages", v).select("url").collect()}
+
+    @staticmethod
+    def _disjoint_after_every_commit(store, spark):
+        """frontier ∩ seen = ∅ at every committed version (each table
+        read at its newest carrier at or before that version)."""
+        carriers = {"frontier": None, "seen": None}
+        for v in store.versions():
+            for t in carriers:
+                if t in store.manifest(v)["tables"]:
+                    carriers[t] = v
+            f = {r.url for r in store.read(spark, "frontier", carriers["frontier"]).collect()}
+            s = {r.url for r in store.read(spark, "seen", carriers["seen"]).collect()}
+            assert not f & s, v
+
+    def _crawl_like_the_oracle(self, job, spark, left: dict, n_buckets, wave_size):
+        """Run waves to exhaustion, each checked against the oracle over
+        the rows `left`; returns the number of waves."""
+        waves = 0
+        while (out := job.run_wave()) is not None:
+            want = _oracle_waves(left.values(), n_buckets, wave_size)
+            got = self._wave_urls(job.store, spark, out[2])
+            assert got == {u for u, w in want.items() if w == 0}, waves
+            for u in got:
+                del left[u]
+            waves += 1
+        assert not left
+        return waves
+
+    def test_waves_follow_the_per_wave_rule(self, spark, tmp_path):
+        rows = _tied_rows(150)
+        job = self._job(spark, str(tmp_path / "a"))
+        job.seed(spark.createDataFrame(rows, FRONTIER_SCHEMA))
+        waves = self._crawl_like_the_oracle(job, spark, {r[0]: r for r in rows}, 4, 7)
+        assert waves == max(_oracle_waves(rows, 4, 7).values()) + 1
+        urls = [r.url for r in job.pages().select("url").collect()]
+        assert len(urls) == len(set(urls)) == 150
+        # the waves wrote no frontier data: one admission directory
+        dirs = {tuple(job.store.manifest(v)["tables"]["frontier"]["dirs"])
+                for v in job.store.versions()}
+        assert dirs == {("v1/frontier",)}
+
+    def test_a_large_wave_has_several_writers(self, spark, tmp_path):
+        """Admission writes a wave from its host buckets' tasks, not from
+        one task per wave. With AQE coalescing off (a frontier too large
+        to coalesce) the one wave of 4 buckets spans several files."""
+        import os
+
+        job = self._job(spark, str(tmp_path / "w"), wave_size=100)
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        spark.conf.set(key, "false")
+        try:
+            job.seed(_frontier_df(spark, 200))
+        finally:
+            spark.conf.set(key, "true")
+        assert job.store.entry("frontier")["segments"] == [200]
+        seg = os.path.join(job.store.root, "v1", "frontier", "wave=0")
+        files = [f for f in os.listdir(seg) if f.endswith(".parquet")]
+        assert 1 < len(files) <= 4
+        n_ok, n_failed, _ = job.run_wave()
+        assert n_ok + n_failed == 200
+        assert job.run_wave() is None
+
+    def test_stream_merge_mid_crawl(self, spark, tmp_path):
+        """Already-fetched urls (verbatim and as /ix?doc=/ variants) and
+        unfetched ones merged mid-crawl are never fetched twice, run()
+        terminates, frontier ∩ seen = ∅ after every commit, and an
+        admitted 8-K that outranks the rest goes out in the next wave."""
+        rows = _tied_rows(80, forms=("10-K", "10-Q"), dates=("2016-01-29", "2017-02-28"))
+        job = self._job(spark, str(tmp_path / "b"), wave_size=5)
+        job.run(spark.createDataFrame(rows, FRONTIER_SCHEMA), max_waves=2)
+        fetched = {r.url for r in job.pages().select("url").collect()}
+        assert len(fetched) == 40
+        old = [r for r in rows if r[0] in fetched][:6]
+        unfetched = [r for r in rows if r[0] not in fetched][:3]
+        ix = [(r[0].replace("sec.gov/", "sec.gov/ix?doc=/"),) + r[1:] for r in old[:3]]
+        urgent = (filing_url("4242", accession_number(99, 0)), "4242", "URGENT",
+                  "8-K", "2024-12-31", accession_number(99, 0))
+        batch = spark.createDataFrame(old + ix + unfetched + [urgent], FRONTIER_SCHEMA)
+        job.merge(batch, stage="stream_merge", batch_id=0)
+        assert job.store.rows("frontier") == 80 - 40 + 1
+        self._disjoint_after_every_commit(job.store, spark)
+        _, _, v = job.run_wave()
+        assert urgent[0] in self._wave_urls(job.store, spark, v)
+        res = job.run(max_waves=50)
+        assert res.waves_run < 50
+        urls = [r.url for r in job.pages().select("url").collect()]
+        assert len(urls) == len(set(urls)) == 81
+        self._disjoint_after_every_commit(job.store, spark)
+
+    def test_requeue_failed_reranks(self, spark, tmp_path):
+        """requeue_failed ranks the failed urls together with the
+        remaining frontier; the recovered crawl follows the per-wave
+        rule over that union and fetches each failed url once more."""
+        rows = _tied_rows(120, seed=8)
+        root = str(tmp_path / "c")
+        job = self._job(
+            spark, root,
+            transport_factory=lambda: SimulatedTransport(transient_pct=0, permanent_pct=15),
+        )
+        job.run(spark.createDataFrame(rows, FRONTIER_SCHEMA), max_waves=3)
+        pages = job.pages().select("url", "status").collect()
+        failed = {r.url for r in pages if r.status != "ok"}
+        assert failed
+        left_before = {r.url for r in job.store.read(spark, "frontier").collect()}
+        assert job.requeue_failed() == len(failed)
+        entry = job.store.entry("frontier")
+        assert entry["cursor"] == 0
+        left = {r[0]: r for r in rows if r[0] in failed | left_before}
+        ranked = {r.url: r.wave for r in job.store.read(spark, "frontier").collect()}
+        assert ranked == _oracle_waves(left.values(), 4, 7)
+        job2 = self._job(
+            spark, root, transport_factory=lambda: SimulatedTransport(transient_pct=0),
+        )
+        self._crawl_like_the_oracle(job2, spark, left, 4, 7)
+        ok = [r.url for r in job2.pages().filter(F.col("status") == "ok").collect()]
+        assert len(ok) == len(set(ok)) == 120
+
+    def test_resume_with_other_wave_size_fetches_once(self, spark, tmp_path):
+        """A job whose wave_size (and n_buckets) differ from the
+        recorded ones re-ranks the remaining frontier once, then
+        follows the per-wave rule with its own sizes."""
+        rows = _tied_rows(100, seed=9)
+        root = str(tmp_path / "d")
+        self._job(spark, root, wave_size=10).run(
+            spark.createDataFrame(rows, FRONTIER_SCHEMA), max_waves=2
+        )
+        job = self._job(spark, root, n_buckets=3, wave_size=6)
+        store = job.store
+        fetched = {r.url for r in job.pages().select("url").collect()}
+        left = {r[0]: r for r in rows if r[0] not in fetched}
+        self._crawl_like_the_oracle(job, spark, left, 3, 6)
+        stages = [store.manifest(v)["summary"].get("stage") for v in store.versions()]
+        assert stages.count("rerank") == 1
+        entry = store.entry("frontier")
+        assert (entry["n_buckets"], entry["wave_size"]) == (3, 6)
+        urls = [r.url for r in job.pages().select("url").collect()]
+        assert len(urls) == len(set(urls)) == 100
