@@ -10,4 +10,4 @@ No Spark imports here — everything is a pure function of
 (file bytes, filing metadata, options), unit-testable in-process.
 """
 
-from .pipeline import ExtractionOptions, extract_filing  # noqa: F401
+from .pipeline import ExtractionOptions, extract_filing, item_sections  # noqa: F401

@@ -266,3 +266,15 @@ def extract_filing(
     if all_empty:
         return None
     return out
+
+
+def item_sections(result: dict[str, Any]) -> dict[str, str]:
+    """The item sections of an `extract_filing` result: its string
+    `item_*`, `part_*` and `SIGNATURE` values, in result order. Empty
+    sections are kept."""
+    return {
+        k: v
+        for k, v in result.items()
+        if (k.startswith(("item_", "part_")) or k == "SIGNATURE")
+        and isinstance(v, str)
+    }

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Callable
 
 from pyspark import inheritable_thread_target
@@ -134,7 +135,6 @@ class CrawlJob:
         wave_size: int = 64,
         host_budget_per_sec: float = 10.0,
         bloom_shards: int = 16,
-        bloom_fpp: float = 0.01,
         transport_factory: Callable[[], SimulatedTransport] | None = None,
         robots: RobotsPolicy | None = None,
         company_transport_factory: Callable[[], object] | None = None,
@@ -145,7 +145,6 @@ class CrawlJob:
         self.wave_size = wave_size
         self.host_budget_per_sec = host_budget_per_sec
         self.bloom_shards = bloom_shards
-        self.bloom_fpp = bloom_fpp
         self.transport_factory = transport_factory
         self.robots = robots
         self.company_transport_factory = company_transport_factory
@@ -202,9 +201,7 @@ class CrawlJob:
         if store.latest() is None:
             return self.seed(urls)
         seen = store.read(spark, "seen")
-        bloom = build_sharded_bloom(
-            seen, n_shards=self.bloom_shards, fpp=self.bloom_fpp, n=store.rows("seen"),
-        )
+        bloom = build_sharded_bloom(seen, n_shards=self.bloom_shards, n=store.rows("seen"))
         new = filter_unseen(_canonical(urls), seen, bloom)
         return self._admit(
             self._remaining().unionByName(new).dropDuplicates(["url"]),
@@ -228,10 +225,7 @@ class CrawlJob:
             entry = self._frontier()
         wave = entry["cursor"]
         seen = store.read(spark, "seen")
-        bloom = build_sharded_bloom(
-            seen, n_shards=self.bloom_shards, fpp=self.bloom_fpp,
-            n=store.rows("seen"),
-        )
+        bloom = build_sharded_bloom(seen, n_shards=self.bloom_shards, n=store.rows("seen"))
         version = store.begin()
         # The segment was unseen when admitted; the check guards it. The
         # bloom flag is evaluated below the exchange the fetch needs
@@ -318,32 +312,20 @@ class CrawlJob:
 
     # -- outputs -------------------------------------------------------
 
+    def _all_versions(self, table: str) -> DataFrame:
+        """Union of `table` over every committed snapshot that wrote it."""
+        dfs = [self.store.read(self.spark, table, v) for v in self.store.versions()]
+        dfs = [d for d in dfs if d is not None]
+        if not dfs:
+            raise RuntimeError(f"no {table} committed yet")
+        return reduce(DataFrame.unionByName, dfs)
+
     def pages(self) -> DataFrame:
         """Union of all committed wave pages (all snapshots)."""
-        dfs = [
-            self.store.read(self.spark, "pages", v)
-            for v in self.store.versions()
-        ]
-        dfs = [d for d in dfs if d is not None]
-        if not dfs:
-            raise RuntimeError("no pages committed yet")
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return self._all_versions("pages")
 
     def metrics(self) -> DataFrame:
-        dfs = [
-            self.store.read(self.spark, "metrics", v)
-            for v in self.store.versions()
-        ]
-        dfs = [d for d in dfs if d is not None]
-        if not dfs:
-            raise RuntimeError("no metrics committed yet")
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return self._all_versions("metrics")
 
     def company_info(self) -> DataFrame:
         """The company-info dim from the newest snapshot carrying it

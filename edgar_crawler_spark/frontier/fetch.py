@@ -221,7 +221,7 @@ def fetch_extract_wave(
     """
     import hashlib as _hashlib  # noqa: PLC0415
 
-    from ..extraction import ExtractionOptions, extract_filing  # noqa: PLC0415
+    from ..extraction import ExtractionOptions, extract_filing, item_sections  # noqa: PLC0415
 
     opts = extraction_options or ExtractionOptions()
 
@@ -237,11 +237,7 @@ def fetch_extract_wave(
                 result = extract_filing(body, md, opts) or {}
             except Exception:  # noqa: BLE001 - quarantine bad rows
                 result = {}
-            items = sorted(
-                (k, v) for k, v in result.items()
-                if (k.startswith(("item_", "part_")) or k == "SIGNATURE")
-                and isinstance(v, str) and v
-            )
+            items = sorted((k, v) for k, v in item_sections(result).items() if v)
             n_items = len(items)
             digest = _hashlib.md5(
                 "\x00".join(f"{k}\x01{v}" for k, v in items).encode("utf-8")

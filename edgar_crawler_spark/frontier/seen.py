@@ -9,6 +9,10 @@ bloom clears skip the join entirely. At 10^10 seen URLs with a fresh
 frontier that is mostly-unseen, the anti-join input shrinks by ~99%
 (the bloom's true-positive + fpp fraction), which is the difference
 between shuffling 10^10 rows and shuffling 10^8.
+
+The sharded bloom is the only filter. It is rebuilt from `seen` for
+each use and never persisted, so it needs no deletes: `requeue_failed`
+rewrites `seen`, and the next build reflects that.
 """
 
 from __future__ import annotations
@@ -22,44 +26,37 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bloom import BloomFilter, ShardedBloom, shard_of_many
-from .cuckoo import CuckooFilter, ShardedCuckoo
 
 # per-python-worker deserialized-filter cache (see maybe_seen below)
-_FILTER_CACHE: dict[str, "ShardedBloom | ShardedCuckoo"] = {}
+_FILTER_CACHE: dict[str, ShardedBloom] = {}
 
 
 def build_sharded_bloom(
-    seen: DataFrame,
-    url_col: str = "url",
-    n_shards: int = 16,
-    expected_per_shard: int | None = None,
-    fpp: float = 0.01,
-    n: int | None = None,
+    seen: DataFrame, n_shards: int = 16, n: int | None = None
 ) -> ShardedBloom:
     """Build the sharded bloom distributed: every input partition folds
     its rows into per-shard bitmaps (map-side), then bitmaps OR-merge
     per shard in a tiny shuffle of `n_shards × partitions` rows. The
     driver only ever sees finished bitmaps. `n` is the row count of
-    `seen` when the caller knows it (it sizes the shards; otherwise a
-    count job does).
+    `seen` when the caller knows it; otherwise a count job finds it.
+    Each shard is sized for its share of `n` at BloomFilter's default
+    1% fpp.
     """
-    if expected_per_shard is None:
-        if n is None:
-            n = seen.count()
-        expected_per_shard = max(64, (n + n_shards - 1) // n_shards)
-    exp, p, ns = expected_per_shard, fpp, n_shards
+    if n is None:
+        n = seen.count()
+    exp = max(64, (n + n_shards - 1) // n_shards)
 
     def fold(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         local: dict[int, BloomFilter] = {}
         for pdf in pdfs:
-            keys = pdf[url_col].astype(str).to_numpy(dtype=object)
+            keys = pdf["url"].astype(str).to_numpy(dtype=object)
             if len(keys) == 0:
                 continue
-            sh = shard_of_many(keys, ns)
+            sh = shard_of_many(keys, n_shards)
             for s in np.unique(sh):
                 bf = local.get(int(s))
                 if bf is None:
-                    bf = local[int(s)] = BloomFilter.empty(exp, p)
+                    bf = local[int(s)] = BloomFilter.empty(exp)
                 bf.add_many(keys[sh == s].tolist())
         if local:
             yield pd.DataFrame(
@@ -78,7 +75,7 @@ def build_sharded_bloom(
             {"shard": [int(pdf["shard"].iloc[0])], "bitmap": [merged.to_bytes()]}
         )
 
-    partial = seen.select(url_col).mapInPandas(fold, "shard int, bitmap binary")
+    partial = seen.select("url").mapInPandas(fold, "shard int, bitmap binary")
     # per-shard OR-merge happens IN SPARK (groupBy shard → one reducer
     # per shard), so the driver collects exactly n_shards finished
     # bitmaps — never the partitions × n_shards partials. At 10^10
@@ -92,76 +89,13 @@ def build_sharded_bloom(
         int(r["shard"]): BloomFilter.from_bytes(bytes(r["bitmap"]))
         for r in finished.collect()
     }
-    return ShardedBloom(n_shards=ns, shards=shards)
-
-
-def build_sharded_cuckoo(
-    seen: DataFrame,
-    url_col: str = "url",
-    n_shards: int = 16,
-    expected_per_shard: int | None = None,
-) -> ShardedCuckoo:
-    """Cuckoo variant of `build_sharded_bloom` (deletable — see
-    cuckoo.py for when to prefer it). Same distributed shape: partial
-    per-shard filters fold map-side, then merge by fingerprint
-    relocation (partial-key hashing makes that possible without the
-    original keys)."""
-    if expected_per_shard is None:
-        n = seen.count()
-        expected_per_shard = max(64, (n + n_shards - 1) // n_shards)
-    exp, ns = expected_per_shard, n_shards
-
-    def fold(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local: dict[int, CuckooFilter] = {}
-        for pdf in pdfs:
-            keys = pdf[url_col].astype(str).to_numpy(dtype=object)
-            if len(keys) == 0:
-                continue
-            sh = shard_of_many(keys, ns)
-            for s in np.unique(sh):
-                cf = local.get(int(s))
-                if cf is None:
-                    cf = local[int(s)] = CuckooFilter.empty(exp)
-                if not cf.add_many(keys[sh == s].tolist()):
-                    raise OverflowError("cuckoo shard overflow; raise capacity")
-        if local:
-            yield pd.DataFrame(
-                {
-                    "shard": list(local.keys()),
-                    "table": [cf.to_bytes() for cf in local.values()],
-                }
-            )
-
-    def cf_merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged: CuckooFilter | None = None
-        for raw in pdf["table"]:
-            cf = CuckooFilter.from_bytes(bytes(raw))
-            if merged is None:
-                merged = cf
-            else:
-                merged.merge(cf)
-        return pd.DataFrame(
-            {"shard": [int(pdf["shard"].iloc[0])], "table": [merged.to_bytes()]}
-        )
-
-    partial = seen.select(url_col).mapInPandas(fold, "shard int, table binary")
-    # same shape as the bloom build: per-shard merge in Spark, driver
-    # collects n_shards finished tables only (see comment there)
-    finished = partial.groupBy("shard").applyInPandas(
-        cf_merge, "shard int, table binary"
-    )
-    shards = {
-        int(r["shard"]): CuckooFilter.from_bytes(bytes(r["table"]))
-        for r in finished.collect()
-    }
-    return ShardedCuckoo(n_shards=ns, shards=shards)
+    return ShardedBloom(n_shards=n_shards, shards=shards)
 
 
 def filter_unseen(
     frontier: DataFrame,
     seen: DataFrame,
-    bloom: ShardedBloom | ShardedCuckoo | None,
-    url_col: str = "url",
+    bloom: ShardedBloom | None,
     exchange: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Frontier rows whose canonical URL is NOT in `seen` — exact.
@@ -180,11 +114,10 @@ def filter_unseen(
     partitioning when seen is broadcast.
     """
     if bloom is None:
-        return frontier.join(seen.select(url_col), on=url_col, how="left_anti")
+        return frontier.join(seen.select("url"), on="url", how="left_anti")
 
     spark = frontier.sparkSession
-    kind = "cuckoo" if isinstance(bloom, ShardedCuckoo) else "bloom"
-    b = spark.sparkContext.broadcast((kind, bloom.to_rows()))
+    b = spark.sparkContext.broadcast(bloom.to_rows())
     ns = bloom.n_shards
     b_key = uuid4().hex  # unique per broadcast — never aliases filters
 
@@ -196,9 +129,7 @@ def filter_unseen(
         # see at most a handful of live filters).
         sb = _FILTER_CACHE.get(b_key)
         if sb is None:
-            k, rows = b.value
-            cls = ShardedCuckoo if k == "cuckoo" else ShardedBloom
-            sb = cls.from_rows(ns, rows)
+            sb = ShardedBloom.from_rows(ns, b.value)
             while len(_FILTER_CACHE) >= 4:
                 _FILTER_CACHE.pop(next(iter(_FILTER_CACHE)))
             _FILTER_CACHE[b_key] = sb
@@ -210,7 +141,7 @@ def filter_unseen(
     # its leg filters are pushed below `exchange`, which then differs
     # per leg and is not reused.
     probe = F.pandas_udf(maybe_seen, "boolean").asNondeterministic()
-    flagged = frontier.withColumn("_maybe_seen", probe(F.col(url_col)))
+    flagged = frontier.withColumn("_maybe_seen", probe(F.col("url")))
     if exchange is None:
         leg = F.col("_maybe_seen")
     else:
@@ -220,5 +151,5 @@ def filter_unseen(
         leg = F.when(F.spark_partition_id() >= 0, F.col("_maybe_seen"))
     clear = flagged.filter(~leg).drop("_maybe_seen")
     suspect = flagged.filter(leg).drop("_maybe_seen")
-    survivors = suspect.join(seen.select(url_col), on=url_col, how="left_anti")
+    survivors = suspect.join(seen.select("url"), on="url", how="left_anti")
     return clear.unionByName(survivors)

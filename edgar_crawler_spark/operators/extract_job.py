@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..extraction import ExtractionOptions, extract_filing
+from ..extraction import ExtractionOptions, extract_filing, item_sections
 
 RESULT_SCHEMA = (
     "url string, filename string, cik string, form_type string, "
@@ -92,12 +92,7 @@ def make_extractor(options: ExtractionOptions | None = None):
                 items = {}
                 payload = None
                 if result is not None:
-                    items = {
-                        k: v
-                        for k, v in result.items()
-                        if (k.startswith(("item_", "part_")) or k == "SIGNATURE")
-                        and isinstance(v, str)
-                    }
+                    items = item_sections(result)
                     # byte-identical rendering of the reference's JSON
                     # sink (extract_items.py:1498: indent=4, no ascii
                     # escaping)
