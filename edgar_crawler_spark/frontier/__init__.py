@@ -18,7 +18,7 @@ from .bloom import BloomFilter, ShardedBloom
 from .canon import canonicalize_url, canonicalize_url_py, host_bucket_col
 from .crawler import CrawlJob, CrawlResult
 from .politeness import TokenBucket
-from .priority import assign_waves, priority_order, reference_order
+from .priority import assign_waves, reference_order
 from .seen import filter_unseen
 from .state import SnapshotStore
 
@@ -34,6 +34,5 @@ __all__ = [
     "canonicalize_url_py",
     "filter_unseen",
     "host_bucket_col",
-    "priority_order",
     "reference_order",
 ]

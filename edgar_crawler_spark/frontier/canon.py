@@ -20,9 +20,6 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# accession number: 0001234567-24-000123 (dashed) or 18-digit bare form
-ACCESSION_RE = r"(\d{10})-?(\d{2})-?(\d{6})"
-
 
 def canonicalize_url(col: Column | str) -> Column:
     """Canonical form, all JVM-side:
@@ -73,12 +70,6 @@ def canonicalize_url_py(url: str) -> str:
     return f"{scheme}://{host}{rest}"
 
 
-def host_col(col: Column | str) -> Column:
-    """Host component of a canonical URL (JVM-side)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract(c, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1)
-
-
 def host_bucket_col(col: Column | str, n_buckets: int) -> Column:
     """Skew salt: one hot host (sec.gov IS the whole frontier) is
     spread across `n_buckets` partitions by a deterministic crc32 of
@@ -88,12 +79,6 @@ def host_bucket_col(col: Column | str, n_buckets: int) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.pmod(F.crc32(c.cast("string")), F.lit(n_buckets)).cast("int")
-
-
-def accession_col(col: Column | str) -> Column:
-    """Dashed accession number extracted from a canonical URL."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract(c, ACCESSION_RE.replace("-?", "-"), 0)
 
 
 # public-suffix-lite: the common two-level public suffixes. A full

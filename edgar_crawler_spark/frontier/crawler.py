@@ -26,14 +26,18 @@ A wave reads only its own rows and runs every computation once:
     frontier unseen,
  3. fetch via applyInPandas (fetch.py), written once as the version's
     `pages` — nothing re-runs the fetch,
- 4. concurrently: one aggregate over that parquet gives n_ok,
-    n_failed and the per-bucket lineage metrics (written as
-    `metrics`), seen += the wave's urls, company_info += the wave's
-    new CIKs,
+ 4. concurrently: one aggregate over that parquet gives n_ok and
+    n_failed, seen += the wave's urls, company_info += the wave's new
+    CIKs,
  5. commit those with the frontier's entry, its cursor one wave on;
     no frontier data is written. Kill the process anywhere; rerun
     resumes from the last commit with no double-fetch and no missed
     URL.
+
+A commit stores only state that is new and cannot be derived: the
+per-bucket lineage rows (`CrawlJob.metrics()`) are an aggregate over
+each version's pages, computed when read, and a merge admits URLs
+without rewriting seen.
 
 Failed-after-retries URLs are committed to `seen` with status=failed
 in the pages table (so a bounded run terminates); the reference's
@@ -60,12 +64,6 @@ from .state import SnapshotStore
 
 FRONTIER_COLS = ["url", "cik", "company", "form_type", "filing_date", "accession"]
 
-METRICS_SCHEMA = (
-    "wave long, host_bucket int, partition_id int, n_urls long, n_ok long, "
-    "n_failed long, sum_attempts long, sum_bytes long, t_first double, "
-    "t_last double, urls_per_sec double"
-)
-
 
 @dataclass
 class CrawlResult:
@@ -75,10 +73,10 @@ class CrawlResult:
     versions: list[int] = field(default_factory=list)
 
 
-def wave_metrics(pages: DataFrame) -> list:
-    """Per-(wave, host_bucket) lineage rows of a written pages table.
-    `partition_id` is the fetch task that wrote the rows, read from
-    its part-file name."""
+def wave_metrics(pages: DataFrame) -> DataFrame:
+    """Per-(wave, host_bucket) lineage rows of one version's written
+    pages. `partition_id` is the fetch task that wrote the rows, read
+    from its part-file name."""
     pid = F.regexp_extract(F.col("_metadata.file_name"), r"^part-(\d+)", 1)
     return (
         pages.withColumn("_pid", pid.cast("int"))
@@ -100,7 +98,6 @@ def wave_metrics(pages: DataFrame) -> list:
             F.col("n_urls")
             / F.greatest(F.col("t_last") - F.col("t_first"), F.lit(1e-9)),
         )
-        .collect()
     )
 
 
@@ -195,8 +192,8 @@ class CrawlJob:
         """Admit discovered URLs into the committed frontier (or seed an
         empty store with them): canonical form (so a /ix?doc=/ variant
         of a fetched url is recognised), already-seen ones dropped, the
-        rest re-ranked with the remaining frontier. Also rewrites seen
-        as one base."""
+        rest re-ranked with the remaining frontier. seen is not
+        written: a merge fetches nothing."""
         store, spark = self.store, self.spark
         if store.latest() is None:
             return self.seed(urls)
@@ -205,7 +202,7 @@ class CrawlJob:
         new = filter_unseen(_canonical(urls), seen, bloom)
         return self._admit(
             self._remaining().unionByName(new).dropDuplicates(["url"]),
-            {"seen": seen},
+            {},
             {"stage": "merge", **summary},
         )
 
@@ -253,16 +250,11 @@ class CrawlJob:
             self.company_transport_factory,
         )
 
-        def write_metrics() -> tuple[list, dict]:
-            stats = wave_metrics(pages)
-            df = spark.createDataFrame(stats, METRICS_SCHEMA).coalesce(1)
-            return stats, store.write(version, "metrics", df)[1]
-
-        # Three independent writes from the written pages. The seen
-        # delta and metrics are one file each; company_info keeps the
-        # (AQE-sized) parallelism of the shuffle before it.
-        (stats, metrics_entry), seen_entry, company_entry = concurrently(spark, [
-            write_metrics,
+        # The wave's counts and two appends, independent reads of the
+        # written pages. The seen delta is one file; company_info keeps
+        # the (AQE-sized) parallelism of the shuffle before it.
+        stats, seen_entry, company_entry = concurrently(spark, [
+            lambda: wave_metrics(pages).collect(),
             lambda: store.append(version, "seen", pages.select("url").coalesce(1)),
             lambda: store.append(version, "company_info", new_ciks),
         ])
@@ -282,7 +274,6 @@ class CrawlJob:
             written={
                 "frontier": {**entry, "cursor": wave + 1},
                 "pages": pages_entry,
-                "metrics": metrics_entry,
                 "seen": seen_entry,
                 "company_info": company_entry,
             },
@@ -312,20 +303,24 @@ class CrawlJob:
 
     # -- outputs -------------------------------------------------------
 
-    def _all_versions(self, table: str) -> DataFrame:
-        """Union of `table` over every committed snapshot that wrote it."""
-        dfs = [self.store.read(self.spark, table, v) for v in self.store.versions()]
-        dfs = [d for d in dfs if d is not None]
+    def _per_version_pages(self, fn: Callable[[DataFrame], DataFrame]) -> DataFrame:
+        """Union of `fn` over the pages of every committed snapshot
+        that wrote them, one version at a time."""
+        dfs = [self.store.read(self.spark, "pages", v) for v in self.store.versions()]
+        dfs = [fn(d) for d in dfs if d is not None]
         if not dfs:
-            raise RuntimeError(f"no {table} committed yet")
+            raise RuntimeError("no pages committed yet")
         return reduce(DataFrame.unionByName, dfs)
 
     def pages(self) -> DataFrame:
         """Union of all committed wave pages (all snapshots)."""
-        return self._all_versions("pages")
+        return self._per_version_pages(lambda pages: pages)
 
     def metrics(self) -> DataFrame:
-        return self._all_versions("metrics")
+        """Per-(wave, host_bucket) lineage rows of every committed wave
+        (`wave_metrics`). Each version is aggregated on its own: wave
+        numbers restart at every admission."""
+        return self._per_version_pages(wave_metrics)
 
     def company_info(self) -> DataFrame:
         """The company-info dim from the newest snapshot carrying it

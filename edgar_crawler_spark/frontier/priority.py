@@ -1,26 +1,17 @@
-"""Crawl ordering: reference reproduction + salted priority queue.
+"""Crawl ordering: reference reproduction + politeness waves.
 
-Two orderings coexist:
+`reference_order` is the EXACT order the reference visits filings
+(its download_filings.py:115-183): quarter TSVs are concatenated
+year-asc, quarter-asc, and within a quarter the index row order is
+preserved; type/CIK filters run before ordering. This is the parity
+spec — tests assert sequence equality against a single-process oracle.
 
-1. `reference_order` — the EXACT order the reference visits filings
-   (/root/reference/download_filings.py:115-183): quarter TSVs are
-   concatenated year-asc, quarter-asc, and within a quarter the index
-   row order is preserved; type/CIK filters run before ordering. This
-   is the parity spec — tests assert sequence equality against a
-   single-process oracle.
-
-2. `priority_order` — the north-star scheduling order: form-type
-   weight desc, filing-date desc, accession asc tiebreak. Globally
-   ordered via `repartitionByRange` on the priority key (range
-   exchange samples the key distribution, so skewed dates don't pile
-   into one partition) + `sortWithinPartitions` — never a single-task
-   global sort.
-
-`assign_waves` converts priority order into politeness waves: URLs are
-salted into host buckets (canon.host_bucket_col), ranked within their
-bucket, and chopped into fixed-size waves. One wave × one bucket is
-the unit handed to the fetch stage, so each fetch task owns a slice of
-the per-host budget (politeness.py).
+`assign_waves` is the crawl's scheduling order: URLs are salted into
+host buckets (canon.host_bucket_col), ranked within their bucket by
+priority (form-type weight desc, filing-date desc, accession asc) with
+a window over the host-bucket exchange, and chopped into fixed-size
+waves. One wave × one bucket is the unit handed to the fetch stage, so
+each fetch task owns a slice of the per-host budget (politeness.py).
 """
 
 from __future__ import annotations
@@ -92,21 +83,6 @@ def reference_order(index_df: DataFrame, n_partitions: int | None = None) -> Dat
             yield pdf
 
     return ordered.mapInPandas(number, schema).drop("_pid")
-
-
-def priority_order(frontier: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """North-star priority: (form_weight desc, filing_date desc,
-    accession asc). Adds `form_weight`; returns the frontier
-    range-partitioned + sorted on the priority key.
-    """
-    df = frontier.withColumn("form_weight", form_weight_col())
-    keys = [
-        F.col("form_weight").desc(),
-        F.col("filing_date").desc(),
-        F.col("accession").asc(),
-    ]
-    n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartitionByRange(n, *keys).sortWithinPartitions(*keys)
 
 
 def _murmur3_int32(v: int, seed: int = 42) -> int:
@@ -189,7 +165,6 @@ def assign_waves(
     frontier: DataFrame,
     n_buckets: int,
     wave_size: int,
-    url_col: str = "url",
 ) -> DataFrame:
     """Salt into host buckets, rank by priority within bucket, chop
     into waves of `wave_size`. Adds (host_bucket, bucket_rank, wave).
@@ -198,7 +173,7 @@ def assign_waves(
     the same partitioning the fetch stage needs, so Catalyst reuses it
     (no second exchange before applyInPandas on host_bucket).
     """
-    df = frontier.withColumn("host_bucket", host_bucket_col(url_col, n_buckets))
+    df = frontier.withColumn("host_bucket", host_bucket_col("url", n_buckets))
     if "form_weight" not in df.columns:
         df = df.withColumn("form_weight", form_weight_col())
     # Pin the exchange: frontier rows are tiny, so AQE's byte-based

@@ -52,11 +52,14 @@ Tables the crawl writes (crawler.py):
   frontier      segmented by wave; written when URLs are admitted
                 (seed, requeue_failed, a merge), and each wave commits
                 it with the cursor one wave further
-  seen          appended each wave (that wave's urls); seed,
-                requeue_failed and the stream merge overwrite it
+  seen          appended each wave (that wave's urls); seed writes
+                the empty base and requeue_failed overwrites it (it
+                removes urls); a merge does not write it
   company_info  appended each wave (the wave's new CIKs)
   pages         one per wave: the fetched rows (FETCH_SCHEMA)
-  metrics       one per wave: per-bucket lineage rows
+A commit holds only state that is new and cannot be derived: the
+per-bucket lineage rows are an aggregate over a version's pages,
+computed when read (`CrawlJob.metrics()`), not a stored table.
 """
 
 from __future__ import annotations
@@ -180,11 +183,14 @@ class SnapshotStore:
 
     def entry(self, table: str, version: int | None = None) -> dict | None:
         """`table`'s manifest entry {dirs, rows, bytes, schema} at
-        `version`, or at its newest carrier when `version` is None."""
-        committed = self.versions()
+        `version`, or at its newest carrier when `version` is None.
+        A given version is looked up by its own manifest, without
+        listing the others."""
         if version is not None:
-            committed = [version] if version in committed else []
-        for v in reversed(committed):
+            if not os.path.exists(os.path.join(self._vdir(version), "MANIFEST.json")):
+                return None
+            return self.manifest(version)["tables"].get(table)
+        for v in reversed(self.versions()):
             entry = self.manifest(v)["tables"].get(table)
             if entry is not None:
                 return entry
@@ -375,8 +381,8 @@ class SnapshotStore:
         )
 
     # Superseded-state tables: old copies only serve time travel.
-    # Per-wave tables (pages, metrics) hold data that exists nowhere
-    # else and are never expired.
+    # The per-wave pages hold data that exists nowhere else and are
+    # never expired.
     STATE_TABLES = ("frontier", "seen", "company_info")
 
     def expire_state(self, keep_last: int = 2) -> list[int]:
@@ -390,8 +396,8 @@ class SnapshotStore:
         old deltas, so with keep_last >= 2 this call deletes none of
         them and seen is stored twice until the next expiry.
 
-        The per-wave tables (pages, metrics) survive in every version —
-        they are the crawl's output log, unioned by `CrawlJob.pages()`.
+        The per-wave pages survive in every version — they are the
+        crawl's output log, unioned by `CrawlJob.pages()`.
         Old manifests stay committed (the version history is intact; a
         time-travel read of expired state returns None, mirroring
         Iceberg's expire_snapshots). Resume is untouched: it reads each

@@ -28,7 +28,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 OUTPUT_SCHEMA = "url string, shard int"
 STATE_SCHEMA = "urls array<string>"
@@ -155,74 +154,6 @@ def streaming_frontier_topk(urls: DataFrame, k: int = 5) -> DataFrame:
         stateStructType=_TOPK_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class TopKProcessor(StatefulProcessor):
-    """transformWithState (arbitrary stateful processing v2) version
-    of the per-host top-k: ValueState holds the k-bounded arrays;
-    every micro-batch merges its rows and re-emits the host's
-    refreshed top-k. ``k`` rides the pickled processor instance to
-    the workers.
-
-    ENV-GATED in this container: the TWS Python worker speaks a
-    protobuf state-server protocol
-    (pyspark/sql/streaming/proto/StateMessage_pb2) and
-    ``google.protobuf`` is not installed here, so the worker crashes
-    on its first state call. The applyInPandasWithState
-    ``streaming_frontier_topk`` above is the primary, fully-tested
-    implementation with identical semantics; this class documents the
-    v2-API shape and runs wherever protobuf + RocksDB are present."""
-
-    def __init__(self, k: int) -> None:
-        self._k = k
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("topk", _TOPK_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd  # noqa: PLC0415 — worker-side import
-
-        cur = self._state.get() if self._state.exists() else None
-        pairs = (
-            list(zip(cur[0], cur[1])) if cur is not None else []
-        )
-        for pdf in rows:
-            pairs.extend(
-                zip(pdf["url"].astype(str), pdf["prio"].astype(float))
-            )
-        best = _topk_merge(pairs, self._k)
-        self._state.update(
-            ([u for u, _ in best], [p for _, p in best])
-        )
-        yield pd.DataFrame(
-            {
-                "host": [key[0]] * len(best),
-                "url": [u for u, _ in best],
-                "prio": [p for _, p in best],
-                "rank": list(range(1, len(best) + 1)),
-            }
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_frontier_topk_tws(urls: DataFrame, k: int = 5) -> DataFrame:
-    """transformWithState variant of streaming_frontier_topk — see
-    TopKProcessor for the env gate (needs google.protobuf + the
-    RocksDB state store provider)."""
-    return urls.groupBy("host").transformWithStateInPandas(
-        statefulProcessor=TopKProcessor(k),
-        outputStructType=TOPK_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )
 
 

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
 from edgar_crawler_spark.operators.consolidate import (
@@ -74,7 +73,7 @@ class TestStatefulUrlSeen:
 
 
 class TestStreamingFrontierTopK:
-    """transformWithState per-host top-k: state bounded at k, carried
+    """applyInPandasWithState per-host top-k: state bounded at k, carried
     across checkpoint restarts, keep-best on URL rediscovery."""
 
     def test_state_carries_and_stays_bounded(self, spark, tmp_path):
@@ -131,32 +130,6 @@ class TestStreamingFrontierTopK:
                 ("h2", "https://h2/v1", 9.0, 1): 1,
             }
         )
-
-    def test_tws_variant_env_gated(self, spark, tmp_path):
-        """The transformWithState twin needs google.protobuf (the TWS
-        worker's state-server protocol); absent here, so only the
-        plan-construction surface is exercised, plus the shared merge
-        helper the two implementations both delegate to."""
-        from edgar_crawler_spark.streaming.stateful import (
-            _topk_merge,
-            streaming_frontier_topk_tws,
-        )
-
-        # shared-kernel semantics: keep-best per url, prio desc, cut k
-        best = _topk_merge(
-            [("u1", 1.0), ("u2", 5.0), ("u2", 0.5), ("u3", 3.0)], k=2
-        )
-        assert best == [("u2", 5.0), ("u3", 3.0)]
-
-        try:
-            import google.protobuf  # noqa: F401, PLC0415
-        except ImportError:
-            pytest.skip("google.protobuf absent: TWS worker cannot run here")
-        urls = (
-            spark.readStream.schema("host string, url string, prio double")
-            .parquet(str(tmp_path / "nowhere"))
-        )
-        assert streaming_frontier_topk_tws(urls, k=3).isStreaming
 
 
 class TestStreamingRecrawl:

@@ -432,6 +432,19 @@ class TestCrawlEndToEnd:
         pages = job2.pages()
         ok = pages.filter(F.col("status") == "ok")
         assert ok.select("url").distinct().count() == 80
+        # wave numbers restart at the requeue's admission: metrics()
+        # still has one row per (wave version, wave, host_bucket)
+        store = job2.store
+        keys = sorted(
+            (v, r.wave, r.host_bucket)
+            for v in store.versions()
+            if (p := store.read(spark, "pages", v)) is not None
+            for r in p.select("wave", "host_bucket").distinct().collect()
+        )
+        m = job2.metrics().collect()
+        assert sum(r.n_urls for r in m) == pages.count()
+        assert len(m) == len(keys)
+        assert len({(k[1], k[2]) for k in keys}) < len(keys)
 
     def test_seen_frontier_drains_and_terminates(self, spark, tmp_path):
         """Replayed/overlapping discovery never double-fetches and run()
@@ -879,13 +892,30 @@ class TestWriteOnceWave:
         jobs = len(tracker.getJobIdsForGroup("wave-guard"))
         files = sum(len(names) for _, _, names in os.walk(store._vdir(v)))
         # bloom 2, pages 3 (seen broadcast, bucket exchange, write),
-        # metrics 2 + write 1, seen 1, company_info 3
-        assert jobs == 12
+        # the n_ok/n_failed aggregate 2, seen 1, company_info 3
+        assert jobs == 11
         assert set(tracker.getJobIdsForGroup(None)) == ungrouped
-        # 4 fetch partitions of pages + 3 one-file tables (metrics,
-        # seen, company_info), each parquet with its .crc, + MANIFEST.json;
+        # 4 fetch partitions of pages + 2 one-file tables (seen,
+        # company_info), each parquet with its .crc, + MANIFEST.json;
         # the frontier only moves its cursor
-        assert files == 2 * 4 + 2 * 3 + 1
+        assert files == 2 * 4 + 2 * 2 + 1
+
+    def test_pages_lists_versions_once(self, spark, tmp_path, monkeypatch):
+        """Reading the pages log lists the committed versions once; each
+        version's pages are then looked up by its own manifest."""
+        store = SnapshotStore(str(tmp_path / "log"))
+        res = self._job(spark, store).run(_frontier_df(spark, 40))
+        assert res.waves_run >= 3
+        calls = []
+        versions = SnapshotStore.versions
+
+        def counted(self):
+            calls.append(1)
+            return versions(self)
+
+        monkeypatch.setattr(SnapshotStore, "versions", counted)
+        assert self._job(spark, store).pages().count() == 40
+        assert len(calls) == 1
 
     def test_fetch_once_under_cache_eviction(self, spark, tmp_path, monkeypatch):
         """Against a transport whose every answer is fresh (random
@@ -937,7 +967,7 @@ class TestWriteOnceWave:
         assert store.rows("seen") == 60 and store.rows("frontier") == 0
 
     def test_crash_anywhere_in_a_wave_is_invisible(self, spark, tmp_path, monkeypatch):
-        """Kill the wave after pages and after each of the three
+        """Kill the wave after pages and after each of the two
         concurrent writes: the committed snapshot never changes, a
         crash surfaces only once the concurrent writes still running
         have finished, and the resumed crawl fetches every url exactly
@@ -956,7 +986,7 @@ class TestWriteOnceWave:
         committed = store.latest()
         state = {t: self._urls(store.read(spark, t)) for t in ("frontier", "seen")}
         write = state_mod._write
-        for point in ("pages", "metrics", "seen", "company_info"):
+        for point in ("pages", "seen", "company_info"):
             def crash_after(df, path, point=point):
                 name = os.path.basename(path)
                 if point == "seen" and name == "company_info":
