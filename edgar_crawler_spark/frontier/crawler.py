@@ -37,7 +37,9 @@ A wave reads only its own rows and runs every computation once:
 A commit stores only state that is new and cannot be derived: the
 per-bucket lineage rows (`CrawlJob.metrics()`) are an aggregate over
 each version's pages, computed when read, and a merge admits URLs
-without rewriting seen.
+without rewriting seen. Every manifest lists the whole crawl state
+(state.py), so each operation resolves the latest version once and
+reads everything at it.
 
 Failed-after-retries URLs are committed to `seen` with status=failed
 in the pages table (so a bounded run terminates); the reference's
@@ -134,7 +136,6 @@ class CrawlJob:
         bloom_shards: int = 16,
         transport_factory: Callable[[], SimulatedTransport] | None = None,
         robots: RobotsPolicy | None = None,
-        company_transport_factory: Callable[[], object] | None = None,
     ):
         self.spark = spark
         self.store = store
@@ -144,7 +145,6 @@ class CrawlJob:
         self.bloom_shards = bloom_shards
         self.transport_factory = transport_factory
         self.robots = robots
-        self.company_transport_factory = company_transport_factory
 
     # -- admission -----------------------------------------------------
 
@@ -167,10 +167,11 @@ class CrawlJob:
             tables, summary=summary, version=version, written={"frontier": entry}
         )
 
-    def _frontier(self) -> dict:
-        """The committed frontier's entry; a frontier committed without
-        a cursor (before admission ranking) cannot be resumed."""
-        entry = self.store.entry("frontier")
+    def _frontier(self, version: int) -> dict:
+        """The frontier's entry at committed `version`; a frontier
+        committed without a cursor (before admission ranking) cannot be
+        resumed."""
+        entry = self.store.entry("frontier", version)
         if entry is None or "cursor" not in entry:
             raise ValueError(
                 f"{self.store.root} has no ranked frontier with a wave cursor; "
@@ -178,10 +179,11 @@ class CrawlJob:
             )
         return entry
 
-    def _remaining(self) -> DataFrame:
-        """The frontier rows not yet fetched, without their ranking."""
-        self._frontier()
-        return self.store.read(self.spark, "frontier").select(*FRONTIER_COLS)
+    def _remaining(self, version: int) -> DataFrame:
+        """The frontier rows not yet fetched at committed `version`,
+        without their ranking."""
+        self._frontier(version)
+        return self.store.read(self.spark, "frontier", version).select(*FRONTIER_COLS)
 
     def seed(self, frontier: DataFrame) -> int:
         """Snapshot v1: canonicalized deduped frontier, ranked, empty seen."""
@@ -192,16 +194,17 @@ class CrawlJob:
         """Admit discovered URLs into the committed frontier (or seed an
         empty store with them): canonical form (so a /ix?doc=/ variant
         of a fetched url is recognised), already-seen ones dropped, the
-        rest re-ranked with the remaining frontier. seen is not
-        written: a merge fetches nothing."""
+        rest re-ranked with the remaining frontier. seen is inherited
+        unchanged: a merge fetches nothing."""
         store, spark = self.store, self.spark
-        if store.latest() is None:
+        v = store.latest()
+        if v is None:
             return self.seed(urls)
-        seen = store.read(spark, "seen")
-        bloom = build_sharded_bloom(seen, n_shards=self.bloom_shards, n=store.rows("seen"))
+        seen = store.read(spark, "seen", v)
+        bloom = build_sharded_bloom(seen, n_shards=self.bloom_shards, n=store.rows("seen", v))
         new = filter_unseen(_canonical(urls), seen, bloom)
         return self._admit(
-            self._remaining().unionByName(new).dropDuplicates(["url"]),
+            self._remaining(v).unionByName(new).dropDuplicates(["url"]),
             {},
             {"stage": "merge", **summary},
         )
@@ -212,24 +215,25 @@ class CrawlJob:
         """Run exactly one wave. Returns (n_ok, n_failed, version) or
         None if the frontier is exhausted."""
         store, spark = self.store, self.spark
-        if store.latest() is None:
+        v = store.latest()
+        if v is None:
             raise RuntimeError("no snapshot; call seed(frontier) first")
-        entry = self._frontier()
-        if not store.rows("frontier"):
+        entry = self._frontier(v)
+        if not store.rows("frontier", v):
             return None
         if (entry["n_buckets"], entry["wave_size"]) != (self.n_buckets, self.wave_size):
-            self._admit(self._remaining(), {}, {"stage": "rerank"})
-            entry = self._frontier()
+            v = self._admit(self._remaining(v), {}, {"stage": "rerank"})
+            entry = self._frontier(v)
         wave = entry["cursor"]
-        seen = store.read(spark, "seen")
-        bloom = build_sharded_bloom(seen, n_shards=self.bloom_shards, n=store.rows("seen"))
+        seen = store.read(spark, "seen", v)
+        bloom = build_sharded_bloom(seen, n_shards=self.bloom_shards, n=store.rows("seen", v))
         version = store.begin()
         # The segment was unseen when admitted; the check guards it. The
         # bloom flag is evaluated below the exchange the fetch needs
         # anyway, so it runs once per row. A wave whose rows all turn
         # out seen fetches nothing and still moves the cursor on.
         front = filter_unseen(
-            store.read(spark, "frontier", segment=wave), seen, bloom,
+            store.read(spark, "frontier", v, segment=wave), seen, bloom,
             exchange=lambda df: bucket_partitioned(df, self.n_buckets),
         )
         pages, pages_entry = store.write(
@@ -246,8 +250,7 @@ class CrawlJob:
         # only ciks NOT already in the dim are "fetched", and only they
         # are appended, in the same atomic commit as the rest.
         new_ciks = merge_company_info(
-            store.read(spark, "company_info"), pages.select("cik"), version,
-            self.company_transport_factory,
+            store.read(spark, "company_info", v), pages.select("cik"), version
         )
 
         # The wave's counts and two appends, independent reads of the
@@ -323,8 +326,8 @@ class CrawlJob:
         return self._per_version_pages(wave_metrics)
 
     def company_info(self) -> DataFrame:
-        """The company-info dim from the newest snapshot carrying it
-        (grow-only across waves; survives kill/resume)."""
+        """The company-info dim at the latest snapshot (grow-only
+        across waves; survives kill/resume)."""
         dim = self.store.read(self.spark, "company_info")
         if dim is None:
             raise RuntimeError("no company_info committed yet")
@@ -339,7 +342,8 @@ class CrawlJob:
         """Reference 'rerun to retry failed' idiom: move failed URLs
         from seen back into the frontier, re-ranked with the remaining
         rows, in one admission commit."""
-        if self.store.latest() is None:
+        v = self.store.latest()
+        if v is None:
             return 0
         pages = self.pages()
         # pages() is the all-versions union: a url that failed once and
@@ -355,9 +359,9 @@ class CrawlJob:
         n = failed.count()
         if n == 0:
             return 0
-        seen = self.store.read(self.spark, "seen")
+        seen = self.store.read(self.spark, "seen", v)
         self._admit(
-            self._remaining().unionByName(failed).dropDuplicates(["url"]),
+            self._remaining(v).unionByName(failed).dropDuplicates(["url"]),
             {"seen": seen.join(failed.select("url"), "url", "left_anti")},
             {"stage": "requeue_failed", "n": n},
         )

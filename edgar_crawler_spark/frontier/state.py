@@ -19,24 +19,30 @@ Iceberg's snapshot isolation, and the property the kill/resume tests
 exercise. On a real deployment swap this class for Iceberg commits;
 callers don't change.
 
-The manifest maps each table the commit writes to its data
-directories, row count, parquet bytes and schema:
+The manifest maps each table to its data directories, row count,
+parquet bytes and schema:
 
   "tables": {"seen": {"dirs": ["v1/seen", "v2/seen", "v3/seen"],
                       "rows": 80, "bytes": 2048, "schema": {...}}}
 
-A table's contents are the union of its directories. A commit writes
-a table one of two ways:
+A table's contents are the union of its directories. Versions are
+dense (`begin` claims latest + 1), and every manifest is the complete
+crawl state at its version, like a Flink checkpoint over shared
+incremental files: a commit starts from its parent's (version - 1)
+STATE_TABLES entries and overlays the tables it writes, so any
+version, and the latest when none is given, is read from its own
+manifest alone. A commit writes a table one of two ways:
   overwrite   the commit's own directory becomes the whole list (a new base)
-  append      the commit's directory is added to the list of the
-              table's newest carrier (a delta); after MAX_DELTAS
-              deltas the next append folds the list into a new base
-Tables a commit does not name are not carried; reading a table
-without a version reads its newest carrier. Row counts come from the
-parquet footers and reads take the recorded schema, so neither a
-commit nor a read runs a counting or schema-inference job. A table
-written ahead of its commit (`write`, `append`) is committed by passing
-the entry it returned; `commit` never infers it from the directory.
+  append      the commit's directory is added to the parent's list
+              (a delta); after MAX_DELTAS deltas the next append
+              folds the list into a new base
+Per-version outputs (the crawl's pages, the ingest's corpus and
+doc_hashes) are not inherited: a version lists them only if it wrote
+them. Row counts come from the parquet footers and reads take the
+recorded schema, so neither a commit nor a read runs a counting or
+schema-inference job. A table written ahead of its commit (`write`,
+`append`) is committed by passing the entry it returned; `commit`
+never infers it from the directory.
 
 A segmented table (`write(segmented=True)`) is one directory per
 value 0, 1, ... of its integer SEGMENT_COL column, consumed in order
@@ -54,7 +60,7 @@ Tables the crawl writes (crawler.py):
                 it with the cursor one wave further
   seen          appended each wave (that wave's urls); seed writes
                 the empty base and requeue_failed overwrites it (it
-                removes urls); a merge does not write it
+                removes urls); a merge inherits it unchanged
   company_info  appended each wave (the wave's new CIKs)
   pages         one per wave: the fetched rows (FETCH_SCHEMA)
 A commit holds only state that is new and cannot be derived: the
@@ -153,6 +159,12 @@ def _parquet_size(path: str) -> tuple[int, int]:
 class SnapshotStore:
     root: str
 
+    # The crawl state every commit inherits from its parent. Superseded
+    # copies only serve time travel, so expiry may delete them; the
+    # per-wave pages hold data that exists nowhere else and are never
+    # expired.
+    STATE_TABLES = ("frontier", "seen", "company_info")
+
     def _vdir(self, version: int) -> str:
         return os.path.join(self.root, f"v{version}")
 
@@ -181,20 +193,20 @@ class SnapshotStore:
             )
         return manifest
 
+    def _tables(self, version: int | None) -> dict[str, dict]:
+        """The table entries of committed `version`; {} if it has none."""
+        if version is None or not os.path.exists(
+            os.path.join(self._vdir(version), "MANIFEST.json")
+        ):
+            return {}
+        return self.manifest(version)["tables"]
+
     def entry(self, table: str, version: int | None = None) -> dict | None:
         """`table`'s manifest entry {dirs, rows, bytes, schema} at
-        `version`, or at its newest carrier when `version` is None.
-        A given version is looked up by its own manifest, without
-        listing the others."""
-        if version is not None:
-            if not os.path.exists(os.path.join(self._vdir(version), "MANIFEST.json")):
-                return None
-            return self.manifest(version)["tables"].get(table)
-        for v in reversed(self.versions()):
-            entry = self.manifest(v)["tables"].get(table)
-            if entry is not None:
-                return entry
-        return None
+        `version` (the latest when None), or None if that version does
+        not list it. A given version is looked up by its own manifest,
+        without listing the others."""
+        return self._tables(self.latest() if version is None else version).get(table)
 
     def rows(self, table: str, version: int | None = None) -> int | None:
         """Row count of `table` as committed (no Spark job); for a
@@ -213,8 +225,8 @@ class SnapshotStore:
         version: int | None = None,
         segment: int | None = None,
     ) -> DataFrame | None:
-        """`table` at `version` (its newest carrier when None); None if
-        that version does not carry it or its data was expired. A
+        """`table` at `version` (the latest when None); None if that
+        version does not list it or its data was expired. A
         segmented table reads only its segments at or after the
         cursor, or only `segment` when given."""
         entry = self.entry(table, version)
@@ -241,8 +253,9 @@ class SnapshotStore:
     # -- writing -------------------------------------------------------
 
     def begin(self) -> int:
-        """Claim the next version: remove any uncommitted debris a
-        crash left there and return its number."""
+        """Claim the next version, latest + 1, so versions stay dense
+        and a commit's parent is version - 1: remove any uncommitted
+        debris a crash left there and return its number."""
         version = (self.latest() or 0) + 1
         vdir = self._vdir(version)
         if os.path.isdir(vdir):
@@ -290,13 +303,13 @@ class SnapshotStore:
 
     def append(self, version: int, table: str, df: DataFrame) -> dict:
         """Write `df` into uncommitted `version` as a delta of `table`
-        and return the entry that lists it after the table's current
+        and return the entry that lists it after the parent version's
         directories. After MAX_DELTAS deltas the delta is instead folded
-        with the table into a new base."""
-        base = self.entry(table)
+        with the parent's table into a new base."""
+        base = self.entry(table, version - 1)
         if base is not None and len(base["dirs"]) >= MAX_DELTAS:
             spark = df.sparkSession
-            df = self.read(spark, table).unionByName(df).coalesce(
+            df = self.read(spark, table, version - 1).unionByName(df).coalesce(
                 split_files(spark, base["bytes"])
             )
             base = None
@@ -316,21 +329,26 @@ class SnapshotStore:
         written: dict[str, dict] | None = None,
     ) -> int:
         """Write `tables` into `version` (claimed by `begin`, or the
-        next one), add the `written` entries (returned by `write` or
-        `append`, or an earlier entry of a segmented table with its
-        cursor moved), then commit by atomically renaming the manifest
-        into place.
+        next one), overlay them and the `written` entries (returned by
+        `write` or `append`, or an earlier entry of a segmented table
+        with its cursor moved) on the parent version's STATE_TABLES
+        entries, then commit by atomically renaming the manifest into
+        place.
         Anything that dies before the rename is invisible to readers."""
         if version is None:
             version = self.begin()
         vdir = self._vdir(version)
-        entries = dict(written or {})
-        for name, entry in entries.items():
+        for name, entry in (written or {}).items():
             if not all(os.path.isdir(os.path.join(self.root, d)) for d in entry["dirs"]):
                 raise RuntimeError(
                     f"{name} of uncommitted v{version} is gone: another "
                     "writer claimed the version"
                 )
+        entries = {
+            name: entry for name, entry in self._tables(version - 1).items()
+            if name in self.STATE_TABLES
+        }
+        entries.update(written or {})
         for name, df in (tables or {}).items():
             entries[name] = self.write(version, name, df)[1]
         manifest = {
@@ -347,26 +365,20 @@ class SnapshotStore:
 
     # -- maintenance ---------------------------------------------------
 
-    def _current(self) -> dict[str, dict]:
-        """Every table's entry at its newest carrier."""
-        out: dict[str, dict] = {}
-        for v in reversed(self.versions()):
-            for name, entry in self.manifest(v)["tables"].items():
-                out.setdefault(name, entry)
-        return out
-
     def compact(self) -> int | None:
-        """Compaction commit: fold every table whose newest carrier
-        lists several directories into one base (Iceberg's
-        rewrite_data_files). Returns the version, or None when there
-        was nothing to fold.
+        """Compaction commit: fold every table of the latest manifest
+        that lists several directories into one base (Iceberg's
+        rewrite_data_files); the commit inherits the other state
+        tables. Returns the version, or None when there was nothing to
+        fold.
 
         Cost: a full read and rewrite of each folded table, sized by
         `split_files` — for seen, the whole URL-seen set (SCALE.md).
         The superseded directories stay on disk until `expire_state`
-        finds no kept carrier listing them."""
+        finds no kept snapshot listing them."""
+        latest = self.latest()
         folded = {
-            name: entry for name, entry in self._current().items()
+            name: entry for name, entry in self._tables(latest).items()
             if len(entry["dirs"]) > 1
         }
         if not folded:
@@ -374,25 +386,22 @@ class SnapshotStore:
         spark = SparkSession.active()
         return self.commit(
             {
-                name: self.read(spark, name).coalesce(split_files(spark, entry["bytes"]))
+                name: self.read(spark, name, latest).coalesce(
+                    split_files(spark, entry["bytes"])
+                )
                 for name, entry in folded.items()
             },
             summary={"stage": "compact"},
         )
 
-    # Superseded-state tables: old copies only serve time travel.
-    # The per-wave pages hold data that exists nowhere else and are
-    # never expired.
-    STATE_TABLES = ("frontier", "seen", "company_info")
-
     def expire_state(self, keep_last: int = 2) -> list[int]:
-        """Iceberg-style snapshot expiry: compact, then delete every
-        STATE table directory that none of the table's newest
-        `keep_last` carriers lists.
+        """Iceberg-style snapshot expiry (expire_snapshots with
+        retain_last): compact, then delete every STATE_TABLES directory
+        that none of the newest `keep_last` snapshots lists.
 
         Expiry is not deletions only: the compaction commit rewrites
         every appended table that lists several directories (seen in
-        full, see `compact`). The carriers before it still list the
+        full, see `compact`). The snapshot before it still lists the
         old deltas, so with keep_last >= 2 this call deletes none of
         them and seen is stored twice until the next expiry.
 
@@ -400,28 +409,32 @@ class SnapshotStore:
         crawl's output log, unioned by `CrawlJob.pages()`.
         Old manifests stay committed (the version history is intact; a
         time-travel read of expired state returns None, mirroring
-        Iceberg's expire_snapshots). Resume is untouched: it reads each
-        table's newest carrier, whose directories are all kept.
+        Iceberg's expire_snapshots). Resume is untouched: it reads the
+        latest manifest, whose directories are all kept.
 
         Without expiry a crawl stores one frontier copy per admission
         (a wave only moves the cursor); the seen deltas are stored
         once, and compaction keeps their number per read bounded.
-        Returns the versions whose state was expired."""
+        Returns the versions that lost state in this call."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         self.compact()
-        manifests = [(v, self.manifest(v)["tables"]) for v in self.versions()]
-        expired: set[int] = set()
-        for t in self.STATE_TABLES:
-            carriers = [(v, tabs[t]["dirs"]) for v, tabs in manifests if t in tabs]
-            live = {d for _, dirs in carriers[-keep_last:] for d in dirs}
-            for v, dirs in carriers[:-keep_last]:
-                dead = [d for d in dirs if d not in live]
-                for d in dead:
-                    shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-                if dead:
-                    expired.add(v)
-        return sorted(expired)
+        versions = self.versions()
+        listed = {
+            v: {
+                d for name, entry in self.manifest(v)["tables"].items()
+                if name in self.STATE_TABLES for d in entry["dirs"]
+            }
+            for v in versions
+        }
+        live = set().union(*(listed[v] for v in versions[-keep_last:]))
+        dead = {
+            d for v in versions[:-keep_last] for d in listed[v] - live
+            if os.path.isdir(os.path.join(self.root, d))
+        }
+        for d in dead:
+            shutil.rmtree(os.path.join(self.root, d))
+        return [v for v in versions[:-keep_last] if listed[v] & dead]
 
 
 def snapshot_diff(

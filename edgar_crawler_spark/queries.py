@@ -3896,30 +3896,32 @@ def _event_nodes(edges: DataFrame) -> DataFrame:
 
 def _oracle_pagerank_sql(iters: int = _PR_ITERS) -> str:
     """Unrolled-iteration DuckDB PageRank mirror: same damping,
-    dangling-mass redistribution, and 10-dp per-iteration rounding."""
+    dangling-mass redistribution, and 10-dp per-iteration rounding.
+    Every CTE is MATERIALIZED: round i's r{i} feeds both c{i} and dm{i},
+    so an inlined CTE would expand 2^iters-fold."""
     d = _e(_PR_D)
     omd = _e(1.0 - _PR_D)
     parts = [f"""
-    e AS ({_pr_edges_sql()}),
-    nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-    nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-    outdeg AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS deg
-               FROM e GROUP BY src),
-    r0 AS (SELECT node, ROUND(1.0 / nn.n, 10) AS r
-           FROM nodes CROSS JOIN nn)"""]
+    e AS MATERIALIZED ({_pr_edges_sql()}),
+    nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
+    nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
+    outdeg AS MATERIALIZED (SELECT src, CAST(COUNT(*) AS DOUBLE) AS deg
+                            FROM e GROUP BY src),
+    r0 AS MATERIALIZED (SELECT node, ROUND(1.0 / nn.n, 10) AS r
+                        FROM nodes CROSS JOIN nn)"""]
     for i in range(iters):
         nxt = i + 1
         parts.append(f"""
-    c{i} AS (
+    c{i} AS MATERIALIZED (
       SELECT e.dst AS node, SUM(r{i}.r / o.deg) AS contrib
       FROM e JOIN r{i} ON r{i}.node = e.src
              JOIN outdeg o ON o.src = e.src
       GROUP BY e.dst),
-    dm{i} AS (
+    dm{i} AS MATERIALIZED (
       SELECT COALESCE(SUM(r.r), 0.0) AS mass
       FROM r{i} r LEFT JOIN outdeg o ON o.src = r.node
       WHERE o.src IS NULL),
-    r{nxt} AS (
+    r{nxt} AS MATERIALIZED (
       SELECT n.node,
              ROUND(({omd}) / nn.n
                    + ({d}) * (COALESCE(c.contrib, 0.0)

@@ -23,9 +23,9 @@ argument as the crawl frontier's replayed-discovery path
 (streaming/jobs.py:stream_frontier_foreachbatch).
 
 At scale the hash set is (md5, ) — 16 bytes/doc, bucketable by hash
-prefix; `store.read` returns its newest carrier (each commit writes
-the whole grow-only set), and the corpus is the append-only log
-across versions (like pages).
+prefix; `store.read` returns the latest version's set (each commit
+writes the whole grow-only set, so no commit inherits it), and the
+corpus is the append-only log across versions (like pages).
 """
 
 from __future__ import annotations

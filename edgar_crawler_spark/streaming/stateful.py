@@ -1,23 +1,19 @@
-"""Custom stateful streaming operator: URL-seen as
-applyInPandasWithState.
+"""Custom stateful streaming operators on applyInPandasWithState.
 
-The batch engine's URL-seen is bloom + anti-join against a committed
-snapshot (frontier/seen.py). The streaming dual keeps the seen set in
-the STATE STORE, keyed by url shard: each micro-batch of discovered
-URLs flows through `applyInPandasWithState`, each shard's state holds
-that shard's seen set, and only first-occurrences are emitted
-downstream. The state store rides the streaming checkpoint, so a
-restarted query resumes with its seen set intact — the streaming
-version of snapshot exact-resume.
+Each operator keeps a small per-key state in the STATE STORE, which
+rides the streaming checkpoint, so a restarted query resumes with its
+state intact — the streaming version of snapshot exact-resume:
 
-Scale notes:
-- the shard key bounds per-group state and spreads it across
-  executors (state store partitions follow the grouping key);
-- state is a plain array<string> here; at 10^10 URLs per-shard state
-  would hold the bloom BITMAP instead (same bytes as
-  frontier/bloom.py serializes) + RocksDB state backend — the
-  operator shape does not change, only the state payload;
-- NoTimeout: a crawl's seen set never expires.
+- per-host frontier top-k: a dispatcher's bounded per-host queue;
+- re-crawl change-rate estimator: per-URL fetch history folded into
+  a Poisson change-rate estimate and a next-fetch time;
+- content drift: per-URL SimHash Hamming statistics.
+
+The crawl's URL-seen set is not one of them: it is the committed
+`seen` table of the snapshot store (frontier/seen.py), and the
+streaming crawl admits discovered URLs into it through foreachBatch
+(streaming/jobs.py:stream_frontier_foreachbatch). Its state is
+unbounded; every operator here keeps state bounded per key.
 """
 
 from __future__ import annotations
@@ -26,65 +22,7 @@ from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "url string, shard int"
-STATE_SCHEMA = "urls array<string>"
-
-
-def _dedup_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    seen = set(state.get[0]) if state.exists else set()
-    fresh: list[str] = []
-    for pdf in pdfs:
-        for u in pdf["url"].astype(str):
-            if u not in seen:
-                seen.add(u)
-                fresh.append(u)
-    state.update((sorted(seen),))
-    yield pd.DataFrame({"url": fresh, "shard": [key[0]] * len(fresh)})
-
-
-def streaming_url_seen(urls: DataFrame, n_shards: int = 16) -> DataFrame:
-    """urls: a STREAMING DataFrame with a `url` column. Returns the
-    first-occurrence stream (exactly-once per url across all
-    micro-batches and restarts, courtesy of the state store)."""
-    sharded = urls.withColumn(
-        "shard", F.pmod(F.xxhash64("url"), F.lit(n_shards)).cast("int")
-    )
-    return sharded.groupBy("shard").applyInPandasWithState(
-        _dedup_fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_url_seen_stream(
-    spark: Any,
-    urls_path: str,
-    out_path: str,
-    checkpoint: str,
-) -> Any:
-    """Drive the operator: file-source stream -> stateful dedup ->
-    parquet sink, availableNow (drain + stop)."""
-    urls = (
-        spark.readStream.schema("url string")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(urls_path)
-    )
-    deduped = streaming_url_seen(urls)
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -144,8 +82,8 @@ def streaming_frontier_topk(urls: DataFrame, k: int = 5) -> DataFrame:
 
     The streaming dual of frontier_fair_topk's per-host rank window:
     a dispatcher never needs the full frontier — per-host state is
-    BOUNDED at k no matter how many discoveries stream in, versus the
-    unbounded seen-set state of streaming_url_seen. State rides the
+    BOUNDED at k no matter how many discoveries stream in, where the
+    crawl's seen set grows with every URL fetched. State rides the
     streaming checkpoint, so a restarted dispatcher resumes with each
     host's queue intact. NoTimeout: a pending queue never expires."""
     return urls.groupBy("host").applyInPandasWithState(

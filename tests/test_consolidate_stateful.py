@@ -1,4 +1,4 @@
-"""Consolidate stage + stateful streaming URL-seen tests."""
+"""Consolidate stage + stateful streaming operator tests."""
 
 from __future__ import annotations
 
@@ -12,10 +12,7 @@ from edgar_crawler_spark.operators.consolidate import (
     write_analysis_csv,
 )
 from edgar_crawler_spark.operators.extract_job import extract_items_job
-from edgar_crawler_spark.streaming.stateful import (
-    run_frontier_topk_stream,
-    run_url_seen_stream,
-)
+from edgar_crawler_spark.streaming.stateful import run_frontier_topk_stream
 from edgar_crawler_spark.synth import pages_df
 
 
@@ -45,31 +42,6 @@ class TestConsolidate:
         write_analysis_csv(cons.drop(*items), out)
         back = spark.read.option("header", True).csv(out)
         assert back.count() == 30
-
-
-class TestStatefulUrlSeen:
-    def test_exactly_once_across_batches_and_restarts(self, spark, tmp_path):
-        urls_dir = str(tmp_path / "urls")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        batch1 = [(f"https://sec.gov/a/{i}.txt",) for i in range(100)]
-        spark.createDataFrame(batch1, "url string").write.mode("append").parquet(urls_dir)
-        q = run_url_seen_stream(spark, urls_dir, out_dir, ckpt)
-        q.awaitTermination(120)
-        assert spark.read.parquet(out_dir).count() == 100
-
-        # second delivery: 60 duplicates + 40 new, duplicates also WITHIN
-        # the batch — restarted query must emit exactly the 40 new
-        batch2 = [(f"https://sec.gov/a/{i}.txt",) for i in range(40, 140)] + [
-            (f"https://sec.gov/a/{i}.txt",) for i in range(100, 140)
-        ]
-        spark.createDataFrame(batch2, "url string").write.mode("append").parquet(urls_dir)
-        q = run_url_seen_stream(spark, urls_dir, out_dir, ckpt)
-        q.awaitTermination(120)
-        out = spark.read.parquet(out_dir)
-        assert out.count() == 140
-        assert out.select("url").distinct().count() == 140
 
 
 class TestStreamingFrontierTopK:

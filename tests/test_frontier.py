@@ -653,10 +653,10 @@ class TestSkewBalance:
 
 class TestSnapshotExpiry:
     def test_expire_state_keeps_pages_and_resume(self, spark, tmp_path):
-        """expire_state drops superseded frontier/seen/bloom copies
-        from old snapshots but (a) the pages log stays complete,
-        (b) the crawl resumes exactly, (c) per-table carriers are
-        respected so a sparse table (company_info) never vanishes."""
+        """expire_state drops superseded frontier/seen copies from old
+        snapshots but (a) the pages log stays complete, (b) the crawl
+        resumes exactly, (c) a table the latest snapshot inherits
+        (company_info) never vanishes."""
         store = SnapshotStore(str(tmp_path / "sx"))
         job = CrawlJob(
             spark, store, n_buckets=4, wave_size=10,
@@ -677,7 +677,7 @@ class TestSnapshotExpiry:
         pages = job2.pages()
         assert pages.count() == n
         assert pages.select("url").distinct().count() == n
-        # company_info still readable (sparse carrier preserved)
+        # company_info still readable (listed by the kept snapshot)
         assert job2.company_info() is not None
         # expired versions: state gone, pages (append log) intact
         v0 = expired[0]
@@ -686,8 +686,9 @@ class TestSnapshotExpiry:
             assert store.read(spark, "pages", v0).count() > 0
 
     def test_expire_respects_sparse_carriers(self, spark, tmp_path):
-        """A table carried only by OLD versions keeps its newest
-        carrier even when that version's other state expires."""
+        """A table written only by an OLD version is inherited by every
+        later one, so its directory survives even when that version's
+        other state expires."""
         store = SnapshotStore(str(tmp_path / "sy"))
         df = spark.range(3).selectExpr("cast(id as string) AS url")
         dim = spark.range(2).selectExpr("id AS cik", "'x' AS name")
@@ -696,8 +697,8 @@ class TestSnapshotExpiry:
         store.commit({"seen": df})                        # v3
         expired = store.expire_state(keep_last=1)
         assert sorted(expired) == [1, 2]
-        # v1's seen expired, but v1's company_info is its newest
-        # carrier and MUST survive
+        # v1's seen expired, but v1's company_info is listed by v3 and
+        # MUST survive
         assert store.read(spark, "seen", 1) is None
         assert store.read(spark, "company_info").count() == 2
 
@@ -917,6 +918,59 @@ class TestWriteOnceWave:
         assert self._job(spark, store).pages().count() == 40
         assert len(calls) == 1
 
+    def test_wave_and_merge_list_versions_twice(self, spark, tmp_path, monkeypatch):
+        """Every manifest is the whole crawl state, so a wave and a
+        merge each list the store twice, whatever its length: once to
+        resolve the latest version, which every read then uses, and
+        once to claim the next one."""
+        store = SnapshotStore(str(tmp_path / "lists"))
+        job = self._job(spark, store)
+        job.run(_frontier_df(spark, 60), max_waves=3)
+        calls = []
+        versions = SnapshotStore.versions
+
+        def counted(self):
+            calls.append(1)
+            return versions(self)
+
+        monkeypatch.setattr(SnapshotStore, "versions", counted)
+        assert job.run_wave() is not None
+        assert len(calls) <= 2
+        calls.clear()
+        job.merge(_frontier_df(spark, 80))
+        assert len(calls) <= 2
+
+    def test_merge_version_reads_the_whole_state(self, spark, tmp_path):
+        """A merge writes only the frontier, yet its version lists seen
+        and company_info: reading them there equals reading them at the
+        version before, and seen's changelog across the merge is
+        empty."""
+        from edgar_crawler_spark.frontier.state import snapshot_diff
+
+        store = SnapshotStore(str(tmp_path / "whole"))
+        job = self._job(spark, store)
+        job.run(_frontier_df(spark, 60), max_waves=2)
+        v = job.merge(_frontier_df(spark, 80))
+        assert store.manifest(v)["summary"]["stage"] == "merge"
+        for t in ("seen", "company_info"):
+            assert store.entry(t, v) == store.entry(t, v - 1)
+            assert sorted(store.read(spark, t, v).collect()) == sorted(
+                store.read(spark, t, v - 1).collect()
+            )
+        assert snapshot_diff(spark, store, "seen", v - 1, v, ["url"]).count() == 0
+        assert store.read(spark, "pages", v) is None
+        # a rerank and a compaction version read the whole state too
+        CrawlJob(
+            spark, store, n_buckets=2, wave_size=7,
+            transport_factory=lambda: SimulatedTransport(transient_pct=0),
+        ).run_wave()
+        store.compact()
+        stages = [store.manifest(u)["summary"]["stage"] for u in store.versions()]
+        assert stages[-3:] == ["rerank", "wave", "compact"]
+        for u in store.versions()[1:]:
+            for t in store.STATE_TABLES:
+                assert store.read(spark, t, u) is not None, (u, t)
+
     def test_fetch_once_under_cache_eviction(self, spark, tmp_path, monkeypatch):
         """Against a transport whose every answer is fresh (random
         failures, a unique body per call) and with the cache cleared
@@ -1066,21 +1120,26 @@ class TestWriteOnceWave:
         assert sorted(r.url for r in inserted) == want
         assert {r._change for r in inserted} == {"insert"}
         # a compaction commit folds every multi-directory list into one
-        # base (seen and company_info alternate between one and two)
-        multi = {t for t, e in store._current().items() if len(e["dirs"]) > 1}
+        # base (seen and company_info alternate between one and two) and
+        # inherits the rest of the state unchanged
+        before = store.manifest(store.latest())["tables"]
+        multi = {t for t, e in before.items() if len(e["dirs"]) > 1}
         assert multi
         v = store.compact()
         tables = store.manifest(v)["tables"]
-        assert set(tables) == multi
+        assert set(tables) == set(store.STATE_TABLES)
         for t, entry in tables.items():
-            assert entry["dirs"] == [f"v{v}/{t}"]
+            if t in multi:
+                assert entry["dirs"] == [f"v{v}/{t}"]
+            else:
+                assert entry == before[t]
         assert store.rows("seen") == 60
         assert self._urls(store.read(spark, "seen")) == urls
         assert store.compact() is None
 
     def test_expire_keeps_every_listed_directory(self, spark, tmp_path):
-        """Expiry never deletes a directory that one of a table's kept
-        carriers lists, so every kept version stays readable."""
+        """Expiry never deletes a directory that a kept snapshot lists,
+        so every kept version stays readable."""
         store = SnapshotStore(str(tmp_path / "exp"))
         # the frontier is written once per admission, so only a table
         # rewritten by a compaction is superseded: expire after each of
@@ -1089,11 +1148,8 @@ class TestWriteOnceWave:
         store.expire_state(keep_last=2)
         self._job(spark, store).run(max_waves=1)
         assert store.expire_state(keep_last=2)
-        for t in store.STATE_TABLES:
-            carriers = [
-                v for v in store.versions() if t in store.manifest(v)["tables"]
-            ]
-            for v in carriers[-2:]:
+        for v in store.versions()[-2:]:
+            for t in store.STATE_TABLES:
                 assert store.read(spark, t, v) is not None
         job = self._job(spark, store)
         job.run()
@@ -1152,15 +1208,10 @@ class TestAdmissionOrder:
 
     @staticmethod
     def _disjoint_after_every_commit(store, spark):
-        """frontier ∩ seen = ∅ at every committed version (each table
-        read at its newest carrier at or before that version)."""
-        carriers = {"frontier": None, "seen": None}
+        """frontier ∩ seen = ∅ at every committed version."""
         for v in store.versions():
-            for t in carriers:
-                if t in store.manifest(v)["tables"]:
-                    carriers[t] = v
-            f = {r.url for r in store.read(spark, "frontier", carriers["frontier"]).collect()}
-            s = {r.url for r in store.read(spark, "seen", carriers["seen"]).collect()}
+            f = {r.url for r in store.read(spark, "frontier", v).collect()}
+            s = {r.url for r in store.read(spark, "seen", v).collect()}
             assert not f & s, v
 
     def _crawl_like_the_oracle(self, job, spark, left: dict, n_buckets, wave_size):

@@ -126,10 +126,10 @@ class TestStreamFrontier:
         assert pages.select("url").distinct().count() == 90
 
     def test_stream_merge_after_waves_keeps_seen(self, spark, tmp_path):
-        """A stream merge landing after several appended waves commits
-        only the re-ranked frontier: seen keeps its delta list at its
-        newest carrier, and the waves after it fetch only the new
-        urls."""
+        """A stream merge landing after several appended waves writes
+        only the re-ranked frontier: its seen entry lists exactly its
+        parent's delta directories, and the waves after it fetch only
+        the new urls."""
         from tests.test_frontier import _frontier_df
 
         urls_dir = str(tmp_path / "urls")
@@ -153,8 +153,9 @@ class TestStreamFrontier:
             if store.manifest(v)["summary"].get("stage") == "stream_merge"
         ]
         assert merges and merges[0] > before
-        assert "seen" not in store.manifest(merges[0])["tables"]
         listed = store.manifest(before)["tables"]["seen"]["dirs"]
+        merged = store.manifest(merges[0])["tables"]["seen"]
+        assert merged == store.manifest(merges[0] - 1)["tables"]["seen"]
         after = store.manifest(merges[0] + 1)["tables"]["seen"]["dirs"]
         assert after == listed + [f"v{merges[0] + 1}/seen"]
         pages = job.pages()
