@@ -199,6 +199,10 @@ class _TreeBuilder(HTMLParser):
         self.root = Node("[root]")
         self.stack: list[Node] = [self.root]
 
+    def updatepos(self, i: int, j: int) -> int:
+        # nothing reads getpos(): skip the line/column bookkeeping
+        return j
+
     # -- helpers -------------------------------------------------------
     def _open(self, tag: str, attrs: list[tuple[str, str | None]]) -> Node:
         amap: dict[str, str] = {}

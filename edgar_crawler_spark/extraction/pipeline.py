@@ -12,6 +12,7 @@ Spark Arrow batches (operators/extract_job.py).
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass, field
 from typing import Any, Optional
@@ -112,6 +113,11 @@ def _handle_spans(doc: Any, is_html: bool) -> Any:
 # numeric-table removal (extract_items.py:374-467)
 # ---------------------------------------------------------------------------
 
+@functools.lru_cache(maxsize=None)  # keys come from the fixed item catalogs
+def _table_header_rx(pat: str) -> re.Pattern:
+    return re.compile(rf"\n{_WS}*{pat}[.*~\-:\s]", _FLAGS_IDM)
+
+
 def _remove_tables(doc: Any, is_html: bool, items: list[str]) -> Any:
     if not is_html:
         return re.sub(r"<TABLE>.*?</TABLE>", "", str(doc), flags=_FLAGS_IDM)
@@ -120,10 +126,7 @@ def _remove_tables(doc: Any, is_html: bool, items: list[str]) -> Any:
         tbl_text = normalize_text(flatten_html(tbl.serialize()))
         has_item_header = False
         for item_key in items:
-            pat = header_pattern(item_key)
-            if re.search(
-                rf"\n{_WS}*{pat}[.*~\-:\s]", tbl_text, flags=_FLAGS_IDM
-            ):
+            if _table_header_rx(header_pattern(item_key)).search(tbl_text):
                 has_item_header = True
                 break
         if has_item_header:

@@ -12,6 +12,25 @@ Pure Python `re` on purpose: these patterns rely on CPython regex
 semantics ([^\\S\\r\\n], inline alternation) and must produce output
 identical to a single-process oracle — never rewrite into Spark's
 Java-regex expressions.
+
+Header index. A `Sectionizer` lives for one filing and records, per
+(text, header pattern), every offset where `_start_rx(pat)` matches,
+overlapping matches included (each `search` resumes one character
+after the previous hit's start). Two scans are skipped on that index
+without changing any result:
+
+- a span "header X ... header Y" scanned from offset o has group 1 =
+  `_start_rx(Y)` at an offset > o (the span consumes at least the
+  newline, X, one class character and one more character first), and
+  a case-sensitive match is also a case-insensitive one; so when no
+  hit of Y lies after o, neither span scan can match;
+- a tail hit matches `\\n{ws}*X[.\\-:\\s]`, and that class is a subset
+  of `_start_rx`'s `[.*~\\-:\\s\\(]`, so every tail hit is a header
+  hit; with no header hit at or after the cursor, the tail is "".
+
+The index must hold overlapping hits: `finditer`'s non-overlapping
+hits miss a Y header that starts inside an earlier Y match (e.g.
+"\\nITEM 2.01\\nITEM 2.01 x").
 """
 
 from __future__ import annotations
@@ -92,6 +111,22 @@ class Sectionizer:
 
     def __init__(self, items: list[str]) -> None:
         self.items = list(items)
+        self._hits: dict[tuple[str, str], list[int]] = {}
+
+    def _header_hits(self, text: str, pat: str) -> list[int]:
+        """Every start offset of `_start_rx(pat)` in text, overlapping
+        matches included, ascending; computed once per (text, pat)."""
+        key = (pat, text)
+        hits = self._hits.get(key)
+        if hits is None:
+            rx = _start_rx(pat)
+            hits = []
+            m = rx.search(text)
+            while m:
+                hits.append(m.start())
+                m = rx.search(text, m.start() + 1)
+            self._hits[key] = hits
+        return hits
 
     # -- candidate collection (parse_item, extract_items.py:588-715) --
     def section(
@@ -132,17 +167,22 @@ class Sectionizer:
 
             if starts is None:
                 starts = list(_start_rx(pat).finditer(text))
+            nxt_hits = self._header_hits(text, nxt_pat)
             for i, m in enumerate(starts):
                 if i < skip_first:
                     continue
                 offset = m.start()
-                # case-sensitive first: true headers are usually
-                # uppercase, body mentions are not
-                found = list(_span_rx(pat, nxt_pat, re.DOTALL).finditer(text[offset:]))
-                if not found:
+                found = []
+                if nxt_hits and nxt_hits[-1] > offset:
+                    # case-sensitive first: true headers are usually
+                    # uppercase, body mentions are not
                     found = list(
-                        _span_rx(pat, nxt_pat, _FLAGS_ID).finditer(text[offset:])
+                        _span_rx(pat, nxt_pat, re.DOTALL).finditer(text[offset:])
                     )
+                    if not found:
+                        found = list(
+                            _span_rx(pat, nxt_pat, _FLAGS_ID).finditer(text[offset:])
+                        )
                 if found:
                     candidates.append((offset, found))
                 elif nxt == following[-1] and not candidates and m:
@@ -191,6 +231,9 @@ class Sectionizer:
     # -- tail fallback (get_last_item_section, extract_items.py:780-824) --
     def tail_section(self, item_key: str, text: str, ends: list[int]) -> str:
         pat = header_pattern(item_key)
+        header_hits = self._header_hits(text, pat)
+        if not header_hits or (ends and header_hits[-1] < ends[-1]):
+            return ""
         hits = list(_tail_rx(pat).finditer(text))
         for hit in hits:
             if "SIGNATURE" in item_key and hit is not hits[-1]:
@@ -225,8 +268,9 @@ def split_10q_parts(
         if p not in parts:
             parts.append(p)
 
+    sec = Sectionizer(parts)  # one header index for every run
+
     def run(skip_first: int) -> tuple[dict[str, str], list[int]]:
-        sec = Sectionizer(parts)
         texts: dict[str, str] = {}
         ends: list[int] = []
         for i, p in enumerate(parts):

@@ -4,6 +4,19 @@ Each function mirrors an observable transformation of the reference
 pipeline (file:line cites inline) but is an independent stdlib
 implementation. These run inside Arrow-batched UDF workers; they must
 stay pure and deterministic.
+
+Two passes are written differently from the reference but match it
+exactly:
+
+- the blank-run regex ` *\n(?: *\n)+ *` denotes the same language as
+  the reference's `(( )*\n( )*){2,}` (two or more newlines with any
+  spaces around and between them), and both are greedy throughout, so
+  each finds the same leftmost, longest run; the new form does not
+  backtrack through nested groups and runs several times faster;
+- the ordered per-character `re.sub` passes are one `str.translate`
+  table: every class is single characters, and every replacement is
+  either no class's character or one whose own entry maps it to
+  itself, so applying the table once equals applying the subs in order.
 """
 
 from __future__ import annotations
@@ -29,6 +42,10 @@ class _TagStripper(HTMLParser):
         super().__init__(convert_charrefs=True)
         self._chunks: list[str] = []
 
+    def updatepos(self, i: int, j: int) -> int:
+        # nothing reads getpos(): skip the line/column bookkeeping
+        return j
+
     def handle_data(self, data: str) -> None:
         self._chunks.append(data)
 
@@ -51,7 +68,7 @@ def flatten_html(html_content: str) -> str:
     return stripper.text()
 
 
-_RX_BLANK_RUN = re.compile(r"(( )*\n( )*){2,}")
+_RX_BLANK_RUN = re.compile(" *\n(?: *\n)+ *")
 _RX_NEWLINE_MARKS = re.compile(r"(#NEWLINE)+")
 _RX_SPACE_RUN = re.compile(r"[ ]{2,}")
 
@@ -69,29 +86,24 @@ def collapse_lines(text: str) -> str:
 
 
 # cp1252 control-range + Unicode punctuation normalization table
-# (clean_text, extract_items.py:260-277). Ordered, applied as regex
-# subs exactly like the reference so e.g. '‘' -> '‘' no-ops
-# behave identically.
-_CHAR_SUBS: list[tuple[str, str]] = [
-    ("[\xa0]", " "),
-    ("[\u200b]", " "),
-    ("[\x91]", "\u2018"),
-    ("[\x92]", "\u2019"),
-    ("[\x93]", "\u201c"),
-    ("[\x94]", "\u201d"),
-    ("[\x95]", "\u2022"),
-    ("[\x96]", "-"),
-    ("[\x97]", "-"),
-    ("[\x98]", "\u02dc"),
-    ("[\x99]", "\u2122"),
-    ("[\u2010\u2011\u2012\u2013\u2014\u2015]", "-"),
-    ("[\u2018]", "\u2018"),
-    ("[\u2019]", "\u2019"),
-    ("[\u2009]", " "),
-    ("[\u00ae]", "\u00ae"),
-    ("[\u201c]", "\u201c"),
-    ("[\u201d]", "\u201d"),
-]
+# (clean_text, extract_items.py:260-277). The reference applies these
+# as ordered regex subs, some of them identities (e.g. '‘' -> '‘');
+# one translate table gives the same result (see the module docstring).
+_CHAR_TABLE = str.maketrans({
+    "\xa0": " ",
+    "\u200b": " ",
+    "\x91": "\u2018",
+    "\x92": "\u2019",
+    "\x93": "\u201c",
+    "\x94": "\u201d",
+    "\x95": "\u2022",
+    "\x96": "-",
+    "\x97": "-",
+    "\x98": "\u02dc",
+    "\x99": "\u2122",
+    **dict.fromkeys("\u2010\u2011\u2012\u2013\u2014\u2015", "-"),
+    "\u2009": " ",
+})
 
 _WS = r"[^\S\r\n]"
 
@@ -138,8 +150,7 @@ def _squeeze_signature(m: re.Match) -> str:
 def normalize_text(text: str) -> str:
     """Character normalization + header repair + boilerplate-line
     removal (clean_text, extract_items.py:248-336)."""
-    for pat, repl in _CHAR_SUBS:
-        text = re.sub(pat, repl, text)
+    text = text.translate(_CHAR_TABLE)
 
     text = _RX_PART_HDR.sub(_squeeze_header, text)
     text = _RX_ITEM_HDR.sub(_squeeze_header, text)

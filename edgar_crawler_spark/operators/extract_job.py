@@ -14,9 +14,10 @@ UDF: one extra stage whose shuffle carries every page body (1.8 MB for
 960 synthetic pages), traded for balanced tasks when the scan's splits
 are skewed. On those 960 pages at 4 cores (4 scan splits), n=16 took
 1.90 s against 1.43 s without it (median of 6 runs each), a 0.46 s
-cost. With PySpark's stock worker daemon, which spent ≈0.2 CPU-s of
-import-cache refresh per Python task (see ``session.py``), the same
-pair was 2.90 s against 2.06 s.
+cost; these figures date from a kernel at ≈4.6 ms per filing, before
+its header index. With PySpark's stock worker daemon, which spent
+≈0.2 CPU-s of import-cache refresh per Python task (see
+``session.py``), the same pair was 2.90 s against 2.06 s.
 
 Scale notes (100 TB / 10^10 pages):
 - partition sizing is driven by page bytes, not rows: keep
