@@ -36,13 +36,12 @@ manifest alone. A commit writes a table one of two ways:
   append      the commit's directory is added to the parent's list
               (a delta); after MAX_DELTAS deltas the next append
               folds the list into a new base
-Per-version outputs (the crawl's pages, the ingest's corpus and
-doc_hashes) are not inherited: a version lists them only if it wrote
-them. Row counts come from the parquet footers and reads take the
-recorded schema, so neither a commit nor a read runs a counting or
-schema-inference job. A table written ahead of its commit (`write`,
-`append`) is committed by passing the entry it returned; `commit`
-never infers it from the directory.
+Per-version outputs (the crawl's pages) are not inherited: a version
+lists them only if it wrote them. Row counts come from the parquet
+footers and reads take the recorded schema, so neither a commit nor a
+read runs a counting or schema-inference job. A table written ahead
+of its commit (`write`, `append`) is committed by passing the entry it
+returned; `commit` never infers it from the directory.
 
 A segmented table (`write(segmented=True)`) is one directory per
 value 0, 1, ... of its integer SEGMENT_COL column, consumed in order

@@ -1328,16 +1328,24 @@ def q_bpeish_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         "expressions, no UDF.",
 )
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = D.tokens_col("text")
-    grams = D.ngrams_col(toks, 3)
-    hs = F.transform(grams, lambda g: F.md5(g))
+    # toks and hs get their own projections: inlined into the window
+    # lambda, every window would re-split the text and re-hash every
+    # 3-gram (quadratic in the document length).
+    hs = F.col("hs")
     wins = F.transform(
         F.sequence(F.lit(1), F.size(hs) - 3),
         lambda i: F.array_min(F.slice(hs, i, 4)),
     )
     return (
         _t(spark, sf_dir, "documents")
-        .filter(F.size(toks) >= 6)
+        .select("doc_id", D.tokens_col("text").alias("toks"))
+        .filter(F.size("toks") >= 6)
+        .select(
+            "doc_id",
+            F.transform(
+                D.ngrams_col(F.col("toks"), 3), lambda g: F.md5(g)
+            ).alias("hs"),
+        )
         .select(
             "doc_id",
             F.size(F.array_distinct(wins)).cast("long").alias("n_fingerprints"),
@@ -3972,11 +3980,11 @@ def pagerank_ranks(
     on the high-cardinality dst node. `ranks` is consumed twice per
     round (contrib join + dangling anti-join), so the loop body ends
     with a lazy ``localCheckpoint`` — the same per-round lineage cut
-    as the BPE trainer (operators/bpe.py) and connected components
-    (operators/dedup.py). Without it the recompute tree doubles per
-    iteration (2^iters join/agg passes); with it each round is
-    evaluated exactly once and the final plan depth is one round,
-    independent of ``iters`` (pinned by tests/test_round4_ops.py).
+    as connected components (operators/dedup.py:cc_clusters). Without
+    it the recompute tree doubles per iteration (2^iters join/agg
+    passes); with it each round is evaluated exactly once and the
+    final plan depth is one round, independent of ``iters`` (pinned by
+    tests/test_round4_ops.py).
     """
     edges = _event_edges(spark, sf_dir, mod)
     nodes = tracked_cache(_event_nodes(edges))
@@ -4897,7 +4905,7 @@ def hits_frames(
     and the final output) all read the checkpointed RDD, so the
     expensive join+agg runs exactly once per half-step — the same
     per-round lineage-cut discipline as pagerank_ranks /
-    operators/bpe.py (plan depth pinned flat by
+    operators/dedup.py:cc_clusters (plan depth pinned flat by
     tests/test_round4c_ops.py). Returns (node, auth, hub) at full
     10-dp precision.
     """

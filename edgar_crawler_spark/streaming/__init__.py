@@ -1,23 +1,13 @@
 from .jobs import (
-    stream_attribution,
-    stream_dedup_docs,
     stream_sessionize,
     stream_extract,
     stream_fetch_rate,
     stream_frontier_foreachbatch,
-    stream_cms_counters,
-    stream_hll_registers,
-    stream_moment_sums,
 )
 
 __all__ = [
-    "stream_attribution",
-    "stream_dedup_docs",
     "stream_sessionize",
     "stream_extract",
     "stream_fetch_rate",
     "stream_frontier_foreachbatch",
-    "stream_cms_counters",
-    "stream_hll_registers",
-    "stream_moment_sums",
 ]

@@ -1,5 +1,5 @@
-"""Bucketed-table co-located joins: the write-time layout that
-removes recurring shuffles at 100 TB (see sources/bucketed.py)."""
+"""Partitioned layout: a filter on the partition column prunes whole
+directories at planning time."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
-from edgar_crawler_spark.sources.bucketed import colocated_join, write_bucketed
 from edgar_crawler_spark.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -20,67 +19,6 @@ def _plan(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-class TestBucketedJoin:
-    def test_colocated_join_has_no_exchange(self, spark):
-        docs = load_table(spark, SF, "documents")
-        stats = docs.select(
-            "doc_id", F.length("text").alias("n_chars2")
-        )
-        write_bucketed(docs.select("doc_id", "source"), "b_docs", 8,
-                       ["doc_id"], ["doc_id"])
-        write_bucketed(stats, "b_stats", 8, ["doc_id"], ["doc_id"])
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            # force a non-broadcast join so the distribution requirement
-            # is real; bucketing must satisfy it from the scan
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = colocated_join(spark, "b_docs", "b_stats", ["doc_id"])
-            plan = _plan(joined)
-            assert re.search(r"SortMergeJoin|ShuffledHashJoin", plan)
-            assert not re.search(r"\(\d+\) Exchange", plan), plan
-            assert "SelectedBucketsCount" in plan
-            # correctness: one row per doc
-            n = load_table(spark, SF, "documents").count()
-            assert joined.count() == n
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-            spark.sql("DROP TABLE IF EXISTS b_docs")
-            spark.sql("DROP TABLE IF EXISTS b_stats")
-
-    def test_unbucketed_side_costs_exactly_one_exchange(self, spark):
-        """Control: joining a bucketed table with a plain DataFrame
-        shuffles ONLY the unbucketed side."""
-        docs = load_table(spark, SF, "documents")
-        write_bucketed(docs.select("doc_id", "source"), "b_docs2", 8,
-                       ["doc_id"], ["doc_id"])
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            plain = docs.select("doc_id", F.length("text").alias("n2"))
-            joined = spark.table("b_docs2").join(plain, "doc_id")
-            plan = _plan(joined)
-            assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-            spark.sql("DROP TABLE IF EXISTS b_docs2")
-
-    def test_bucketed_aggregation_no_exchange(self, spark):
-        """A groupBy on the bucket key also satisfies its distribution
-        from the scan — per-wave rollups on a bucketed pages table
-        never shuffle."""
-        docs = load_table(spark, SF, "documents")
-        write_bucketed(docs.select("doc_id", "n_chars"), "b_docs3", 8,
-                       ["doc_id"], ["doc_id"])
-        try:
-            agg = spark.table("b_docs3").groupBy("doc_id").agg(
-                F.sum("n_chars").alias("s")
-            )
-            plan = _plan(agg)
-            assert not re.search(r"\(\d+\) Exchange", plan), plan
-        finally:
-            spark.sql("DROP TABLE IF EXISTS b_docs3")
 
 
 class TestPartitionPruning:

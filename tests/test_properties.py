@@ -75,93 +75,3 @@ class TestTokenBucketProperties:
                 sends = j - i + 1
                 assert sends <= 1.0 + rate * window + 1e-6
 
-
-class TestTopKMergeProperties:
-    """The streaming frontier top-k state kernel
-    (streaming/stateful.py:_topk_merge). The operator's exactly-right
-    semantics rest on one algebraic fact: folding batches through a
-    k-bounded state equals one global pass — otherwise a restart or a
-    different micro-batch slicing would change the dispatch order."""
-
-    pairs_st = st.lists(
-        st.tuples(
-            st.sampled_from([f"u{i}" for i in range(8)]),  # force dups
-            st.integers(min_value=-50, max_value=50).map(float),
-        ),
-        max_size=40,
-    )
-
-    @given(pairs_st, st.integers(min_value=1, max_value=5))
-    @settings(max_examples=200, deadline=None)
-    def test_bounded_sorted_keep_best(self, pairs, k):
-        from edgar_crawler_spark.streaming.stateful import _topk_merge
-
-        best = _topk_merge(list(pairs), k)
-        assert len(best) <= k
-        assert len({u for u, _ in best}) == len(best)  # unique urls
-        assert best == sorted(best, key=lambda t: (-t[1], t[0]))
-        mx = {}
-        for u, p in pairs:
-            mx[u] = max(mx.get(u, p), p)
-        for u, p in best:
-            assert p == mx[u]  # keep-best per url
-        # exactly the k best of the deduped set
-        want = sorted(mx.items(), key=lambda t: (-t[1], t[0]))[:k]
-        assert best == want
-
-    @given(pairs_st, pairs_st, st.integers(min_value=1, max_value=5))
-    @settings(max_examples=200, deadline=None)
-    def test_incremental_merge_equals_global(self, a, b, k):
-        from edgar_crawler_spark.streaming.stateful import _topk_merge
-
-        incremental = _topk_merge(_topk_merge(list(a), k) + list(b), k)
-        assert incremental == _topk_merge(list(a) + list(b), k)
-
-
-class TestRecrawlFoldLaws:
-    """Pure-kernel laws for the streaming re-crawl estimator
-    (streaming/stateful.py:_recrawl_fold)."""
-
-    @given(
-        obs=st.lists(
-            st.integers(min_value=0, max_value=10**9), min_size=0,
-            max_size=60,
-        ),
-        cuts=st.lists(
-            st.integers(min_value=0, max_value=60), min_size=0, max_size=4
-        ),
-    )
-    @settings(max_examples=200, deadline=None)
-    def test_any_micro_batch_slicing_equals_global_fold(self, obs, cuts):
-        from edgar_crawler_spark.streaming.stateful import _recrawl_fold
-
-        obs = sorted(obs)  # the operator sorts within batch; order is
-        # guaranteed ACROSS batches by the time-ordered source
-        whole = _recrawl_fold(obs, (0, 0, None, None, 0))
-        bounds = sorted({min(c, len(obs)) for c in cuts} | {0, len(obs)})
-        st_acc = (0, 0, None, None, 0)
-        for a, b in zip(bounds, bounds[1:]):
-            st_acc = _recrawl_fold(obs[a:b], st_acc)
-        assert st_acc == whole
-
-    @given(
-        obs=st.lists(
-            st.integers(min_value=0, max_value=10**9), min_size=2,
-            max_size=60, unique=True,
-        )
-    )
-    @settings(max_examples=200, deadline=None)
-    def test_statistics_invariants(self, obs):
-        from edgar_crawler_spark.streaming.stateful import _recrawl_fold
-
-        obs = sorted(obs)
-        n, x, last_v, last_sec, sum_gap = _recrawl_fold(
-            obs, (0, 0, None, None, 0)
-        )
-        assert n == len(obs) - 1
-        assert 0 <= x <= n
-        assert sum_gap == obs[-1] - obs[0]
-        assert last_sec == obs[-1] and last_v == obs[-1] // 86400
-        # change count equals the day-boundary crossings exactly
-        days = [s // 86400 for s in obs]
-        assert x == sum(1 for a, b in zip(days, days[1:]) if a != b)

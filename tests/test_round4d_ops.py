@@ -214,89 +214,6 @@ class TestContentDrift:
         assert got == want
 
 
-class TestStreamingContentDrift:
-    """Streaming drift twin: fold-equals-batch law against the
-    oracled batch query, five-integer state per URL."""
-
-    def test_final_emission_matches_batch_query(self, spark, tmp_path):
-        import time as _time
-
-        from edgar_crawler_spark.operators.dedup import simhash16
-        from edgar_crawler_spark.streaming.stateful import (
-            run_content_drift_stream,
-        )
-
-        sf = SF_SMALL
-        snap_dir = str(tmp_path / "snaps")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        sh = simhash16(
-            spark.read.parquet(f"{sf}/documents.parquet"), max_tokens=4096
-        ).select(
-            (F.col("doc_id") % 97).alias("url_id"), "doc_id", "simhash"
-        )
-        mid = sh.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
-        # two snapshot-ordered deliveries; distinct mtimes pin order
-        sh.filter(F.col("doc_id") <= mid).coalesce(1).write.mode(
-            "append"
-        ).parquet(snap_dir)
-        _time.sleep(2)
-        sh.filter(F.col("doc_id") > mid).coalesce(1).write.mode(
-            "append"
-        ).parquet(snap_dir)
-
-        q = run_content_drift_stream(spark, snap_dir, out_dir, ckpt)
-        q.awaitTermination(120)
-
-        out = spark.read.parquet(out_dir).collect()
-        last: dict[int, tuple] = {}
-        for r in out:
-            cur = last.get(r.url_id)
-            if cur is None or r.n_snapshots > cur[0]:
-                last[r.url_id] = (
-                    r.n_snapshots, r.drift_total, r.drift_max,
-                    r.n_big_changes,
-                )
-        batch = {
-            r.url_id: (r.n_snapshots, r.drift_total, r.drift_max,
-                       r.n_big_changes)
-            for r in QUERIES["content_drift_simhash"]
-            .fn(spark, sf).collect()
-        }
-        assert last == batch
-
-    def test_fold_is_incremental(self):
-        from edgar_crawler_spark.streaming.stateful import _drift_fold
-
-        hs = [0xF00D, 0xF00D, 0xBEEF, 0x0000, 0xFFFF, 0xFFFE]
-        whole = _drift_fold(hs, (0, 0, None, 0, None))
-        for cut in range(len(hs) + 1):
-            st = _drift_fold(hs[:cut], (0, 0, None, 0, None))
-            st = _drift_fold(hs[cut:], st)
-            assert st == whole, cut
-
-    def test_fold_law_hypothesis(self):
-        from hypothesis import given, settings
-        from hypothesis import strategies as st_
-
-        from edgar_crawler_spark.streaming.stateful import _drift_fold
-
-        @settings(max_examples=200, deadline=None)
-        @given(
-            st_.lists(st_.integers(0, 0xFFFF), max_size=30),
-            st_.data(),
-        )
-        def law(hs, data):
-            cut = data.draw(st_.integers(0, len(hs)))
-            whole = _drift_fold(hs, (0, 0, None, 0, None))
-            st = _drift_fold(hs[:cut], (0, 0, None, 0, None))
-            st = _drift_fold(hs[cut:], st)
-            assert st == whole
-
-        law()
-
-
 class TestChunkDedupRewrite:
     def test_matches_python_rewrite(self, spark):
         """Full python mirror of the first-occurrence-wins rewrite,
@@ -570,62 +487,3 @@ class TestKcorePeel:
         assert got == want
         assert got, "fixture must yield a non-empty core"
         assert all(d >= _KCORE_K for d in got.values())
-
-
-class TestStreamingDriftResume:
-    def test_checkpoint_resume_exactness(self, spark, tmp_path):
-        """Kill-and-resume: run the stream over delivery 1, let it
-        TERMINATE (process 'dies'), then deliver file 2 and START A
-        NEW QUERY on the same checkpoint — the resumed query must
-        fold on top of the persisted state and the final per-URL
-        emission must equal the batch answer over the full history
-        (exactly-once resume, the streaming twin of snapshot
-        exact-resume)."""
-        import time as _time
-
-        from edgar_crawler_spark.operators.dedup import simhash16
-        from edgar_crawler_spark.streaming.stateful import (
-            run_content_drift_stream,
-        )
-
-        sf = SF_SMALL
-        snap_dir = str(tmp_path / "snaps")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        sh = simhash16(
-            spark.read.parquet(f"{sf}/documents.parquet"), max_tokens=4096
-        ).select(
-            (F.col("doc_id") % 97).alias("url_id"), "doc_id", "simhash"
-        )
-        mid = sh.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
-
-        sh.filter(F.col("doc_id") <= mid).coalesce(1).write.mode(
-            "append"
-        ).parquet(snap_dir)
-        q1 = run_content_drift_stream(spark, snap_dir, out_dir, ckpt)
-        q1.awaitTermination(120)  # availableNow: drains file 1, stops
-
-        _time.sleep(2)
-        sh.filter(F.col("doc_id") > mid).coalesce(1).write.mode(
-            "append"
-        ).parquet(snap_dir)
-        q2 = run_content_drift_stream(spark, snap_dir, out_dir, ckpt)
-        q2.awaitTermination(120)  # resumes from ckpt: only file 2
-
-        out = spark.read.parquet(out_dir).collect()
-        last: dict[int, tuple] = {}
-        for r in out:
-            cur = last.get(r.url_id)
-            if cur is None or r.n_snapshots > cur[0]:
-                last[r.url_id] = (
-                    r.n_snapshots, r.drift_total, r.drift_max,
-                    r.n_big_changes,
-                )
-        batch = {
-            r.url_id: (r.n_snapshots, r.drift_total, r.drift_max,
-                       r.n_big_changes)
-            for r in QUERIES["content_drift_simhash"]
-            .fn(spark, sf).collect()
-        }
-        assert last == batch

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -165,58 +163,6 @@ class TestStreamFrontier:
         assert store.read(spark, "seen").select("url").distinct().count() == 90
 
 
-
-class TestStreamDedup:
-    def test_watermark_bounded_exact_dedup(self, spark, tmp_path):
-        """First occurrence of each content hash passes; duplicates
-        within the watermark horizon are dropped — across micro-batch
-        boundaries (state store), not just within one batch."""
-        from edgar_crawler_spark.streaming import stream_dedup_docs
-
-        src = str(tmp_path / "docs_src")
-        out = str(tmp_path / "docs_out")
-        ckpt = str(tmp_path / "docs_ckpt")
-        schema = "doc_id long, text string, event_ts timestamp"
-        from datetime import datetime
-
-        def ts(s_):
-            return datetime.fromisoformat(s_)
-
-        # batch 1: A, B, dup(A); batch 2 (later file): dup(B), C
-        spark.createDataFrame(
-            [(1, "alpha text", ts("2024-01-01 00:00:00")),
-             (2, "beta text", ts("2024-01-01 00:00:01")),
-             (3, "alpha text", ts("2024-01-01 00:00:02"))],
-            schema,
-        ).write.mode("append").parquet(src)
-        spark.createDataFrame(
-            [(4, "beta text", ts("2024-01-01 00:00:03")),
-             (5, "gamma text", ts("2024-01-01 00:00:04"))],
-            schema,
-        ).write.mode("append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)  # forces >= 2 micro-batches
-            .parquet(src)
-        )
-        q = (
-            stream_dedup_docs(stream, watermark="10 minutes")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-        rows = spark.read.parquet(out).collect()
-        kept_texts = sorted(r.text for r in rows)
-        assert kept_texts == ["alpha text", "beta text", "gamma text"]
-        # exactly one survivor per hash
-        assert len({r.text_hash for r in rows}) == len(rows) == 3
-
-
 class TestStreamSessionize:
     def test_session_windows_emit_on_watermark(self, spark, tmp_path):
         """Per-user session windows (30s gap) aggregate across
@@ -352,85 +298,6 @@ class TestSnapshotDiff:
         assert diff.filter("_change = 'update'").count() == n_upd
 
 
-class TestStreamAttribution:
-    def test_interval_join_across_batches(self, spark, tmp_path):
-        """Purchases match views of the same user within the 30s
-        horizon — including a view and purchase arriving in DIFFERENT
-        micro-batches (the state-store path)."""
-        from datetime import datetime
-
-        from edgar_crawler_spark.streaming import stream_attribution
-
-        vdir = str(tmp_path / "views")
-        pdir = str(tmp_path / "purch")
-        out = str(tmp_path / "attr_out")
-        ckpt = str(tmp_path / "attr_ckpt")
-        schema = "event_id long, user_id long, ts timestamp"
-
-        def ts(s_):
-            return datetime.fromisoformat(s_)
-
-        # views batch 1
-        spark.createDataFrame(
-            [(10, 1, ts("2024-01-01 00:00:00")),   # in horizon of p100
-             (11, 1, ts("2024-01-01 00:05:00")),   # own session, no purchase
-             (12, 2, ts("2024-01-01 00:00:05"))],  # user 2
-            schema,
-        ).write.mode("append").parquet(vdir)
-        # purchases arrive in a separate stream; p100 is 20s after view
-        # 10 (match), p101 is 45s after view 12 (outside horizon),
-        # p102 matches nothing (user 3)
-        spark.createDataFrame(
-            [(100, 1, ts("2024-01-01 00:00:20")),
-             (101, 2, ts("2024-01-01 00:00:50")),
-             (102, 3, ts("2024-01-01 00:00:10"))],
-            schema,
-        ).write.mode("append").parquet(pdir)
-        # batch-2 files: a second view+purchase pair for user 2 that
-        # must join across batch boundaries, plus watermark movers
-        spark.createDataFrame(
-            [(13, 2, ts("2024-01-01 00:01:00")),
-             (14, 9, ts("2024-01-01 01:00:00"))],  # watermark mover
-            schema,
-        ).write.mode("append").parquet(vdir)
-        spark.createDataFrame(
-            [(103, 2, ts("2024-01-01 00:01:10")),
-             (104, 9, ts("2024-01-01 01:00:01"))],
-            schema,
-        ).write.mode("append").parquet(pdir)
-
-        views = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(vdir)
-        )
-        purchases = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(pdir)
-        )
-        # watermark wider than the sentinel gap (1h): the two file
-        # streams' micro-batches interleave nondeterministically, and
-        # a purchases batch carrying the 01:00 sentinel can process
-        # BEFORE the views stream's second file — a tight watermark
-        # would then late-drop view 13 (a test artifact, not operator
-        # behavior; production watermarks bound genuine lateness)
-        q = (
-            stream_attribution(views, purchases, horizon="30 seconds",
-                               watermark="2 hours")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-        got = {(r.purchase_id, r.view_id)
-               for r in spark.read.parquet(out).collect()}
-        assert got == {(100, 10), (103, 13), (104, 14)}
-
-
 class TestSentenceUdtf:
     def test_lateral_fanout_matches_python(self, spark):
         import re
@@ -459,351 +326,3 @@ class TestSentenceUdtf:
                 want[(did, i)] = (p, len(p))
         assert got == want
         assert not any(r.doc_id == 2 for r in rows)  # null row -> no fanout
-
-
-class TestStreamCorpusIngest:
-    def test_incremental_exactly_once_and_replay_idempotent(self, spark, tmp_path):
-        from edgar_crawler_spark.frontier.state import SnapshotStore
-        from edgar_crawler_spark.streaming.ingest import (
-            ingest_batch, read_corpus, stream_corpus_ingest,
-        )
-
-        src = str(tmp_path / "raw")
-        ckpt = str(tmp_path / "ing_ckpt")
-        store = SnapshotStore(str(tmp_path / "ing_store"))
-        schema = "doc_id long, text string, lang string"
-
-        # file 1: 3 docs, one in-batch duplicate pair (1, 3)
-        spark.createDataFrame(
-            [(1, "alpha body", "en"), (2, "beta body", "en"),
-             (3, "alpha body", "en")],
-            schema,
-        ).write.mode("append").parquet(src)
-        q = stream_corpus_ingest(spark, src, store, ckpt, schema=schema)
-        assert q.awaitTermination(120), "ingest did not terminate"
-        c1 = read_corpus(spark, store)
-        assert c1.count() == 2
-        assert {r.doc_id for r in c1.collect()} == {1, 2}
-
-        # file 2: cross-batch dup of doc 2's content + one new doc
-        spark.createDataFrame(
-            [(4, "beta body", "en"), (5, "gamma body", "en")],
-            schema,
-        ).write.mode("append").parquet(src)
-        q = stream_corpus_ingest(spark, src, store, ckpt, schema=schema)
-        assert q.awaitTermination(120), "ingest did not terminate"
-        corpus = read_corpus(spark, store)
-        assert {r.doc_id for r in corpus.collect()} == {1, 2, 5}
-        # split column present + consistent
-        import hashlib
-
-        for r in corpus.collect():
-            pct = int(hashlib.md5(f"split|{r.doc_id}".encode())
-                      .hexdigest()[:8], 16) % 100
-            want = ("train" if pct < 90
-                    else "validation" if pct < 95 else "test")
-            assert r.split == want
-
-        # replay idempotency: re-processing an already-committed batch
-        # (the crash-between-commit-and-checkpoint window) appends 0
-        replayed = spark.createDataFrame(
-            [(4, "beta body", "en"), (5, "gamma body", "en")],
-            schema,
-        )
-        n = ingest_batch(spark, store, replayed)
-        assert n == 0
-        assert read_corpus(spark, store).count() == 3
-
-
-class TestStreamHll:
-    def test_streaming_registers_bit_identical_to_batch(self, spark, tmp_path):
-        """Per-window streaming HLL registers must equal the batch
-        sketch run over that window's rows — same md5/bucket/rho
-        contract, max-merged across micro-batches — and the window
-        estimates must land within HLL error of the exact counts."""
-        import random
-        import time as _time
-        from datetime import datetime
-
-        from edgar_crawler_spark.operators import sketch as SK
-        from edgar_crawler_spark.streaming import stream_hll_registers
-
-        src = str(tmp_path / "hll_src")
-        out = str(tmp_path / "hll_out")
-        ckpt = str(tmp_path / "hll_ckpt")
-        schema = "doc_id long, text string, event_ts timestamp"
-
-        def ts(s_):
-            return datetime.fromisoformat(s_)
-
-        rng = random.Random(73)
-
-        def mk_text(n, vocab):
-            return " ".join(f"tok{rng.randrange(vocab)}" for _ in range(n))
-
-        # window A (00:00) rows split across two files/micro-batches —
-        # the cross-batch max-merge is what's under test; window B at
-        # 00:01; a far sentinel advances the watermark past both.
-        rows_a1 = [(i, mk_text(40, 300), ts("2024-01-01 00:00:05"))
-                   for i in range(8)]
-        rows_a2 = [(i + 8, mk_text(40, 300), ts("2024-01-01 00:00:40"))
-                   for i in range(8)]
-        rows_b = [(i + 16, mk_text(25, 80), ts("2024-01-01 00:01:30"))
-                  for i in range(6)]
-        spark.createDataFrame(rows_a1, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        _time.sleep(2)  # distinct mtimes => deterministic batch order
-        spark.createDataFrame(
-            rows_a2 + rows_b, schema
-        ).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(2)
-        spark.createDataFrame(
-            [(99, "sentinel", ts("2024-01-01 01:00:00"))], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream_hll_registers(
-                stream, window="1 minute", watermark="1 minute"
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-        got = spark.read.parquet(out)
-        from pyspark.sql import functions as F
-
-        wins = {
-            r.win_start.isoformat(): {
-                (x.bucket, x.reg)
-                for x in got.filter(F.col("win_start") == r.win_start).collect()
-            }
-            for r in got.select("win_start").distinct().collect()
-        }
-        assert set(wins) == {"2024-01-01T00:00:00", "2024-01-01T00:01:00"}
-
-        for key, rows in (
-            ("2024-01-01T00:00:00", rows_a1 + rows_a2),
-            ("2024-01-01T00:01:00", rows_b),
-        ):
-            batch = spark.createDataFrame(rows, schema).select(
-                F.explode(
-                    F.filter(
-                        F.split(F.lower(F.col("text")), r"\s+"),
-                        lambda x: x != "",
-                    )
-                ).alias("t")
-            )
-            expected = {
-                (r.bucket, r.reg)
-                for r in SK.hll_registers(batch, "t").collect()
-            }
-            assert wins[key] == expected, key
-            exact = batch.distinct().count()
-            est = SK.hll_estimate_cols(
-                spark.createDataFrame(
-                    [(b, g) for b, g in wins[key]], "bucket long, reg long"
-                )
-            ).collect()[0].est
-            assert abs(est - exact) / exact < 0.15, (key, est, exact)
-
-
-class TestStreamCms:
-    def test_windowed_counters_match_batch_sketch(self, spark, tmp_path):
-        """Per-window streaming CMS counters must equal the batch
-        sketch over that window's rows — counts SUM across
-        micro-batches (the CMS merge law), state stays sketch-sized,
-        and every probe estimate is >= the window's true count."""
-        import random
-        import time as _time
-        from datetime import datetime
-
-        from pyspark.sql import functions as F
-
-        from edgar_crawler_spark.operators import sketch as SK
-        from edgar_crawler_spark.streaming import stream_cms_counters
-
-        src = str(tmp_path / "cms_src")
-        out = str(tmp_path / "cms_out")
-        ckpt = str(tmp_path / "cms_ckpt")
-        schema = "doc_id long, text string, event_ts timestamp"
-
-        def ts(s_):
-            return datetime.fromisoformat(s_)
-
-        rng = random.Random(41)
-
-        def mk_text(n, vocab):
-            return " ".join(f"w{rng.randrange(vocab)}" for _ in range(n))
-
-        # window A rows split across two files/micro-batches — the
-        # cross-batch SUM-merge is what's under test (HLL's analogue
-        # merges by max; a double-count bug would pass a max-merge
-        # test but fail this one); window B; sentinel closes both.
-        rows_a1 = [(i, mk_text(30, 40), ts("2024-01-01 00:00:05"))
-                   for i in range(6)]
-        rows_a2 = [(i + 6, mk_text(30, 40), ts("2024-01-01 00:00:40"))
-                   for i in range(6)]
-        rows_b = [(i + 12, mk_text(20, 25), ts("2024-01-01 00:01:30"))
-                  for i in range(4)]
-        spark.createDataFrame(rows_a1, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        _time.sleep(2)
-        spark.createDataFrame(
-            rows_a2 + rows_b, schema
-        ).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(2)
-        spark.createDataFrame(
-            [(99, "sentinel", ts("2024-01-01 01:00:00"))], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream_cms_counters(
-                stream, window="1 minute", watermark="1 minute"
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-        got = spark.read.parquet(out)
-
-        wins = {
-            r.win_start.isoformat(): {
-                (x.row, x.bucket): x.cnt
-                for x in got.filter(
-                    F.col("win_start") == r.win_start
-                ).collect()
-            }
-            for r in got.select("win_start").distinct().collect()
-        }
-        assert set(wins) == {"2024-01-01T00:00:00", "2024-01-01T00:01:00"}
-
-        for key, rows in (
-            ("2024-01-01T00:00:00", rows_a1 + rows_a2),
-            ("2024-01-01T00:01:00", rows_b),
-        ):
-            batch = spark.createDataFrame(rows, schema).select(
-                F.explode(
-                    F.filter(
-                        F.split(F.lower(F.col("text")), r"\s+"),
-                        lambda x: x != "",
-                    )
-                ).alias("t")
-            )
-            expected = {
-                (r.row, r.bucket): r.cnt
-                for r in SK.cms_counters(batch, "t").collect()
-            }
-            assert wins[key] == expected, key
-            # probe law on the emitted window: est >= true, every token
-            counters = spark.createDataFrame(
-                [(r, b, c) for (r, b), c in wins[key].items()],
-                "row int, bucket long, cnt long",
-            )
-            true = {
-                r.t: r.c
-                for r in batch.groupBy("t").agg(
-                    F.count(F.lit(1)).alias("c")
-                ).collect()
-            }
-            est = {
-                r.t: r.est_cnt
-                for r in SK.cms_estimate(
-                    counters, batch.distinct(), "t"
-                ).collect()
-            }
-            assert all(est[t] >= c for t, c in true.items()), key
-
-
-class TestStreamMoments:
-    def test_windowed_sums_match_batch_sketch(self, spark, tmp_path):
-        """Per-window streaming power sums must equal the batch
-        moments sketch over that window's rows (sum-merge across
-        micro-batches, double tolerance for addition order)."""
-        import time as _time
-        from datetime import datetime
-
-        from pyspark.sql import functions as F
-
-        from edgar_crawler_spark.operators import sketch as SK
-        from edgar_crawler_spark.streaming import stream_moment_sums
-
-        src = str(tmp_path / "mq_src")
-        out = str(tmp_path / "mq_out")
-        ckpt = str(tmp_path / "mq_ckpt")
-        schema = "doc_id long, n_chars long, event_ts timestamp"
-
-        def ts(s_):
-            return datetime.fromisoformat(s_)
-
-        rows_a1 = [(i, 100 + 13 * i, ts("2024-01-01 00:00:05"))
-                   for i in range(7)]
-        rows_a2 = [(i + 7, 500 + 7 * i, ts("2024-01-01 00:00:40"))
-                   for i in range(7)]
-        rows_b = [(i + 14, 80 + i, ts("2024-01-01 00:01:30"))
-                  for i in range(5)]
-        spark.createDataFrame(rows_a1, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        _time.sleep(2)
-        spark.createDataFrame(
-            rows_a2 + rows_b, schema
-        ).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(2)
-        spark.createDataFrame(
-            [(99, 1, ts("2024-01-01 01:00:00"))], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream_moment_sums(
-                stream, window="1 minute", watermark="1 minute"
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-        got = {
-            r.win_start.isoformat(): (r.n, r.s1, r.s2, r.s3)
-            for r in spark.read.parquet(out).collect()
-        }
-        assert set(got) == {"2024-01-01T00:00:00", "2024-01-01T00:01:00"}
-        for key, rows in (
-            ("2024-01-01T00:00:00", rows_a1 + rows_a2),
-            ("2024-01-01T00:01:00", rows_b),
-        ):
-            batch = spark.createDataFrame(rows, schema).withColumn(
-                "g", F.lit("w")
-            )
-            want = SK.moment_sums_by(batch, ["g"], "n_chars").collect()[0]
-            g = got[key]
-            assert g[0] == want.n
-            for a, b in zip(g[1:], (want.s1, want.s2, want.s3)):
-                assert abs(a - b) < 1e-9 * max(1.0, abs(b)), key
