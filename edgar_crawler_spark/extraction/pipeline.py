@@ -56,24 +56,16 @@ def _select_document(content: str) -> tuple[Any, bool]:
     content = re.sub(r"<PDF>.*?</PDF>", "", content, flags=_FLAGS_IDM)
     documents = re.findall("<DOCUMENT>.*?</DOCUMENT>", content, flags=_FLAGS_IDM)
 
-    chosen: Any = None
-    is_html = False
-    found = False
+    chosen = content
     for doc in documents:
         type_m = re.search(rf"\n{_WS}*<TYPE>(.*?)\n", doc, flags=_FLAGS_IDM)
         doc_type = type_m.group(1) if type_m else None
         if doc_type is not None and doc_type.startswith(("10", "8")):
-            tree = htmlmini.parse(doc)
-            is_html = htmlmini.looks_like_html(tree)
-            chosen = tree if is_html else doc
-            found = True
-            # no break: the reference keeps the last matching document
+            chosen = doc  # no break: the reference keeps the last match
 
-    if not found:
-        tree = htmlmini.parse(content)
-        is_html = htmlmini.looks_like_html(tree)
-        chosen = tree if is_html else content
-    return chosen, is_html
+    tree = htmlmini.parse(chosen)
+    is_html = htmlmini.looks_like_html(tree)
+    return (tree if is_html else chosen), is_html
 
 
 # ---------------------------------------------------------------------------

@@ -1,11 +1,11 @@
 """Special / nonrecurring item detection (monetary amounts, footnote
 references, keyword-scored disclosures).
 
-Mirrors /root/reference/extract_items.py:904-1156. The anchor hash
-uses crc32 by default — the reference's salted built-in hash()
-(extract_items.py:1122) is nondeterministic across interpreters
-unless PYTHONHASHSEED is pinned; pass hash_mode="pythonhash" (with
-PYTHONHASHSEED set) to reproduce it bit-for-bit.
+Mirrors the reference's extract_items.py:904-1156, except that the
+anchor hash is crc32: the reference's salted built-in hash()
+(extract_items.py:1122) differs between interpreters unless
+PYTHONHASHSEED is pinned, so its anchor hashes cannot be reproduced
+across Spark workers.
 """
 
 from __future__ import annotations
@@ -78,11 +78,7 @@ _MEDIUM = {"litigation", "unusual", "acquisition"}
 _MEDIUM_WEAK = {"asset_sale"}
 
 
-def find_special_items(
-    doc_text: str,
-    config: dict[str, Any],
-    hash_mode: str = "crc32",
-) -> list[dict[str, Any]]:
+def find_special_items(doc_text: str, config: dict[str, Any]) -> list[dict[str, Any]]:
     """Keyword-scored special items over the Item 7/8 neighbourhood
     (extract_special_items, extract_items.py:976-1156)."""
     if not config.get("enabled", False):
@@ -171,11 +167,7 @@ def find_special_items(
                 "footnote_reference": closest_fn["raw"] if closest_fn else None,
                 "footnote_id": closest_fn["note_id"] if closest_fn else None,
             }
-            anchor = context[:100]
-            if hash_mode == "pythonhash":
-                record["anchor_hash"] = hash(anchor) % 10**8
-            else:
-                record["anchor_hash"] = zlib.crc32(anchor.encode("utf-8")) % 10**8
+            record["anchor_hash"] = zlib.crc32(context[:100].encode("utf-8")) % 10**8
             found.append(record)
 
     # dedup by (type, first 100 chars of context); union keywords,

@@ -176,17 +176,15 @@ def resolve_link(base: Column | str, link: Column | str) -> Column:
     )
 
 
-def outlink_edges(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def outlink_edges(pages: DataFrame) -> DataFrame:
     """(base, dst) canonical outlink edges. explode_outer + isNotNull
     (not a bare explode) so Catalyst does not synthesize a
     size(arr)>0 filter that re-evaluates the extraction at the scan
     (PLANS.md explode note)."""
-    hrefs = extract_hrefs(F.col(html_col))
+    hrefs = extract_hrefs(F.col("html"))
     return (
         pages.select(
-            F.col(url_col).alias("base"),
+            F.col("url").alias("base"),
             F.explode_outer(hrefs).alias("href"),
         )
         .withColumn("dst_raw", resolve_link(F.col("base"), F.col("href")))

@@ -34,21 +34,16 @@ class TokenBucket:
         if self.tokens < 0:
             self.tokens = self.burst
 
-    def acquire(self, at: float | None = None) -> float:
-        """Reserve one token at or after time `at` (defaults to the
-        bucket's current clock). Returns the send time; advances the
-        clock to it. Never sleeps — callers that need real pacing
-        sleep until the returned time themselves.
+    def acquire(self) -> float:
+        """Reserve one token at or after the bucket's clock. Returns the
+        send time; advances the clock to it. Never sleeps — callers that
+        need real pacing sleep until the returned time themselves.
         """
-        t = max(self.now, at if at is not None else self.now)
-        self.tokens = min(self.burst, self.tokens + (t - self.now) * self.rate)
         if self.tokens < 1.0:
-            wait = (1.0 - self.tokens) / self.rate
-            t += wait
+            self.now += (1.0 - self.tokens) / self.rate
             self.tokens = 1.0
         self.tokens -= 1.0
-        self.now = t
-        return t
+        return self.now
 
 
 def per_bucket_rate(host_budget_per_sec: float, n_buckets: int) -> float:

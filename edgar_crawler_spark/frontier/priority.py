@@ -28,14 +28,14 @@ from .canon import host_bucket_col
 FORM_WEIGHTS = {"8-K": 10, "10-K": 8, "10-Q": 6}
 
 
-def form_weight_col(col: str = "form_type") -> F.Column:
+def form_weight_col() -> F.Column:
     w = F.lit(1)
     for form, weight in FORM_WEIGHTS.items():
-        w = F.when(F.col(col) == form, F.lit(weight)).otherwise(w)
+        w = F.when(F.col("form_type") == form, F.lit(weight)).otherwise(w)
     return w.cast("int")
 
 
-def reference_order(index_df: DataFrame, n_partitions: int | None = None) -> DataFrame:
+def reference_order(index_df: DataFrame) -> DataFrame:
     """Deterministic reference visit order. Expects columns
     (year int, quarter int, row_seq long) where row_seq is the row's
     ordinal inside its quarter TSV — (year, quarter, row_seq) is a
@@ -52,7 +52,7 @@ def reference_order(index_df: DataFrame, n_partitions: int | None = None) -> Dat
     import pandas as pd  # noqa: PLC0415
 
     keys = ["year", "quarter", "row_seq"]
-    n = n_partitions or index_df.sparkSession.sparkContext.defaultParallelism
+    n = index_df.sparkSession.sparkContext.defaultParallelism
     ordered = (
         index_df.repartitionByRange(n, *[F.col(k).asc() for k in keys])
         .sortWithinPartitions(*keys)

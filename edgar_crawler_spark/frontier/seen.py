@@ -5,10 +5,18 @@ frontier row survives iff its `html_index` URL is absent from the
 metadata ledger. Exactness is non-negotiable (a false "seen" would
 silently drop a filing), so the bloom is ONLY a pre-filter: rows the
 bloom flags as maybe-seen go through an exact left-anti join; rows the
-bloom clears skip the join entirely. At 10^10 seen URLs with a fresh
-frontier that is mostly-unseen, the anti-join input shrinks by ~99%
-(the bloom's true-positive + fpp fraction), which is the difference
-between shuffling 10^10 rows and shuffling 10^8.
+bloom clears skip the join entirely.
+
+The bloom shrinks only the frontier side of that join. Spark builds a
+LEFT ANTI join on its right side only, so `suspect ⋉̸ seen` still
+scans all of `seen`, and above the broadcast threshold it hash-shuffles
+all of it: with broadcast off, Spark 4.1.2 plans a 10-row suspect set
+anti-joined with 10^6 urls as a SortMergeJoin LeftAnti with an
+Exchange on both sides, and a `broadcast()` hint on the suspect side
+does not change that. The check therefore costs O(|seen|) per use
+whatever the bloom clears. `seen.join(broadcast(suspect), "url",
+"left_semi")` finds the suspects already seen while streaming `seen`
+with no shuffle, but it still reads all of `seen`.
 
 The sharded bloom is the only filter. It is rebuilt from `seen` for
 each use and never persisted, so it needs no deletes: `requeue_failed`

@@ -73,7 +73,6 @@ import json
 import os
 import re
 import shutil
-import time
 from dataclasses import dataclass
 
 import pyarrow.parquet as pq
@@ -352,7 +351,6 @@ class SnapshotStore:
             entries[name] = self.write(version, name, df)[1]
         manifest = {
             "version": version,
-            "committed_at": time.time(),
             "tables": entries,
             "summary": summary or {},
         }

@@ -76,15 +76,13 @@ def kmeans_fit(
     *,
     k: int = KMEANS_K,
     iters: int = KMEANS_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Run `iters` Lloyd rounds seeded from the k lowest-id vectors;
     return one row per cluster: (cluster, n_points, mean_dist,
     centroid_sum)."""
     pts = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("emb"),
+        "vec_id",
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("emb"),
     ).withColumn("pp", dot_col(F.col("emb"), F.col("emb")))
     pts = tracked_cache(pts)  # registry-routed; released in finally too
     try:
@@ -191,8 +189,6 @@ def kmeans_assignments(
     *,
     k: int = KMEANS_K,
     iters: int = KMEANS_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Final per-vector cluster assignment (vec_id, emb, pp, cl, d)
     after the same fit as kmeans_fit — the blocking structure
@@ -200,8 +196,8 @@ def kmeans_assignments(
     caller's harness releases); the same rounding contract makes the
     assignment reproducible in the SQL oracle."""
     pts = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("emb"),
+        "vec_id",
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("emb"),
     ).withColumn("pp", dot_col(F.col("emb"), F.col("emb")))
     pts = tracked_cache(pts)
     centroids = _fit_loop(pts, k, iters)
@@ -216,9 +212,7 @@ def _seq_sum(xs: list[float]) -> float:
     return acc
 
 
-def oracle_kmeans_assign_ctes(
-    k: int = KMEANS_K, iters: int = KMEANS_ITERS
-) -> list[str]:
+def oracle_kmeans_assign_ctes() -> list[str]:
     """CTE chain ending in xf(vec_id, cl, dd) — the unrolled DuckDB
     mirror of the fit + final assignment: identical seeding, rounding,
     and tie-breaks (argmin via min() over [d, cl] lists). Composable:
@@ -235,9 +229,9 @@ def oracle_kmeans_assign_ctes(
     c0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT)
                     AS cl,
                   list_transform(emb, x -> ROUND(x, 6)) AS emb
-           FROM (SELECT vec_id, emb FROM p0 ORDER BY vec_id LIMIT {k}))"""
+           FROM (SELECT vec_id, emb FROM p0 ORDER BY vec_id LIMIT {KMEANS_K}))"""
     ]
-    for i in range(iters):
+    for i in range(KMEANS_ITERS):
         nxt = i + 1
         parts.append(f"""
     a{i} AS (SELECT p.vec_id,
@@ -252,7 +246,7 @@ def oracle_kmeans_assign_ctes(
     l{i} AS (SELECT cl, list(v ORDER BY dim) AS emb FROM g{i} GROUP BY cl),
     c{nxt} AS (SELECT c.cl, COALESCE(l.emb, c.emb) AS emb
                FROM c{i} c LEFT JOIN l{i} l USING (cl))""")
-    fin = iters
+    fin = KMEANS_ITERS
     parts.append(f"""
     af AS (SELECT p.vec_id,
                   min([{d}, CAST(c.cl AS DOUBLE)]) AS m
@@ -261,12 +255,10 @@ def oracle_kmeans_assign_ctes(
     return parts
 
 
-def oracle_kmeans_sql(
-    k: int = KMEANS_K, iters: int = KMEANS_ITERS
-) -> str:
+def oracle_kmeans_sql() -> str:
     """Unrolled-iteration DuckDB mirror of kmeans_fit's summary."""
-    parts = oracle_kmeans_assign_ctes(k, iters)
-    fin = iters
+    parts = oracle_kmeans_assign_ctes()
+    fin = KMEANS_ITERS
     return (
         "WITH" + ",".join(parts) + f"""
     SELECT f.cl AS cluster,

@@ -35,6 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# alternating_cc fails after this many rounds without a fixpoint
+MAX_ROUNDS = 20
+
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
     """Both orientations of an edge list with columns (u, v)."""
@@ -78,9 +81,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def alternating_cc(
-    edges: DataFrame, max_rounds: int = 20
-) -> tuple[DataFrame, int]:
+def alternating_cc(edges: DataFrame) -> tuple[DataFrame, int]:
     """Run alternating large-star/small-star to convergence.
 
     `edges`: undirected edge list with columns (u, v), integer ids,
@@ -104,7 +105,7 @@ def alternating_cc(
         .localCheckpoint(eager=True)
     )
     rounds = 0
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         rounds += 1
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         # star edge sets converge to a fixpoint: stable when no edge
@@ -116,7 +117,7 @@ def alternating_cc(
         if grew == 0 and shrank == 0:
             break
     else:  # pragma: no cover - deterministic graphs converge well under cap
-        raise RuntimeError(f"alternating_cc: no fixpoint in {max_rounds}")
+        raise RuntimeError(f"alternating_cc: no fixpoint in {MAX_ROUNDS}")
     labels = nodes.join(
         cur.select(F.col("u").alias("node"), F.col("v").alias("lbl")),
         "node",

@@ -35,10 +35,8 @@ from pyspark.sql import functions as F
 from ..cachereg import tracked_cache
 
 
-def tokens_col(text: Column | str, *, distinct: bool = False, lower: bool = True) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    if lower:
-        c = F.lower(c)
+def tokens_col(text: Column | str, *, distinct: bool = False) -> Column:
+    c = F.lower(F.col(text) if isinstance(text, str) else text)
     toks = F.filter(F.split(c, r"\s+"), lambda t: t != "")
     return F.array_distinct(toks) if distinct else toks
 
@@ -90,7 +88,7 @@ def band_keys_col(sig: Column, bands: int, rows_per_band: int) -> Column:
     )
 
 
-def jaccard_col(a: Column, b: Column, nd: int = 4) -> Column:
+def jaccard_col(a: Column, b: Column) -> Column:
     """Exact Jaccard of two (distinct-element) arrays, rounded.
 
     One array pass: |A∪B| = |A|+|B|-|A∩B| for distinct-element
@@ -98,7 +96,7 @@ def jaccard_col(a: Column, b: Column, nd: int = 4) -> Column:
     pair) is never materialized — this runs once per CANDIDATE pair,
     the hottest expression of the near-dup verify stage."""
     inter = F.size(F.array_intersect(a, b)).cast("double")
-    return F.round(inter / (F.size(a) + F.size(b) - inter), nd)
+    return F.round(inter / (F.size(a) + F.size(b) - inter), 4)
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -120,14 +118,6 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def shingles_col(text: Column | str, ngram: int = 1) -> Column:
-    """Distinct shingle set: distinct tokens (ngram=1) or distinct word
-    n-grams (ngram>=2) — the unit both MinHash and exact Jaccard see."""
-    if ngram < 2:
-        return tokens_col(text, distinct=True)
-    return F.array_distinct(ngrams_col(tokens_col(text), ngram))
 
 
 def minhash_lsh_pairs(
@@ -215,8 +205,6 @@ def minhash_lsh_delta_pairs(
     bands: int = 4,
     jaccard_threshold: float = 0.8,
     ngram: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Incremental MinHash-LSH dedup: only the DELTA generates pairs.
 
@@ -242,7 +230,7 @@ def minhash_lsh_delta_pairs(
     )
     toks = (
         spread(docs)
-        .select(F.col(id_col).alias("_id"), tokens_col(text_col).alias("w"))
+        .select(F.col("doc_id").alias("_id"), tokens_col("text").alias("w"))
         .filter(F.size("w") >= max(ngram, 1))
         .select("_id", shingle.alias("s"))
     )
@@ -278,10 +266,7 @@ def minhash_lsh_delta_pairs(
     )
 
 
-def simhash16(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
-    max_tokens: int | None = None,
-) -> DataFrame:
+def simhash16(docs: DataFrame, *, max_tokens: int | None = None) -> DataFrame:
     """16-bit SimHash per document (frequency-weighted: repeated tokens
     vote repeatedly). Bit j = sign of Σ_tokens (±1 by the MSB of nibble
     j of md5(token)). One explode + one hash aggregate; the result is
@@ -295,11 +280,11 @@ def simhash16(
     trade (a near-dup's prefix is a near-dup); pick N ≫ the corpus
     p99 so the cap only ever touches stragglers.
     """
-    toks = tokens_col(text_col)
+    toks = tokens_col("text")
     if max_tokens is not None:
         toks = F.slice(toks, 1, max_tokens)
     tok = spread(docs).select(
-        F.col(id_col).alias("_id"), F.explode(toks).alias("t")
+        F.col("doc_id").alias("_id"), F.explode(toks).alias("t")
     ).withColumn("h", F.md5("t"))
     votes = [
         F.sum(
@@ -312,7 +297,7 @@ def simhash16(
         (F.when(F.col(f"v{j}") > 0, F.lit(2**j)).otherwise(F.lit(0)) for j in range(16)),
         F.lit(0),
     )
-    return agg.select(F.col("_id").alias(id_col), bits.cast("long").alias("simhash"))
+    return agg.select(F.col("_id").alias("doc_id"), bits.cast("long").alias("simhash"))
 
 
 def oracle_minhash_lsh_pairs_sql(
@@ -423,13 +408,11 @@ def oracle_simhash16_sql(max_tokens: int | None = None) -> str:
     """
 
 
-def cc_clusters(
-    docs: DataFrame,
-    pairs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    max_iter: int = 20,
-) -> DataFrame:
+# cc_clusters stops after this many propagation rounds, converged or not
+CC_MAX_ITER = 20
+
+
+def cc_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Connected-components dedup clustering — the pipeline stage AFTER
     pair generation: near-dup pairs induce a graph; each component
     keeps one canonical document (the min id).
@@ -455,11 +438,11 @@ def cc_clusters(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=False)
 
-    labels = docs.select(F.col(id_col).alias("id")).withColumn(
+    labels = docs.select(F.col("doc_id").alias("id")).withColumn(
         "label", F.col("id")
     ).localCheckpoint(eager=False)
 
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         neigh_min = (
             sym.join(labels, sym["v"] == labels["id"])
             .groupBy("u")
@@ -486,13 +469,13 @@ def cc_clusters(
             break
 
     return labels.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.col("label").alias("cluster_id"),
         (F.col("id") == F.col("label")).alias("keep"),
     )
 
 
-def oracle_cc_clusters_sql(pairs_sql: str, id_expr: str = "doc_id") -> str:
+def oracle_cc_clusters_sql(pairs_sql: str) -> str:
     """DuckDB oracle for `cc_clusters` over the pair query `pairs_sql`
     (must yield id_a, id_b): recursive transitive closure, component
     label = min(reachable ∪ self)."""
@@ -507,10 +490,9 @@ def oracle_cc_clusters_sql(pairs_sql: str, id_expr: str = "doc_id") -> str:
       UNION
       SELECT r.src, e.v FROM reach r JOIN e ON r.dst = e.u),
     labeled AS (
-      SELECT d.{id_expr} AS doc_id,
-             LEAST(d.{id_expr}, COALESCE(MIN(r.dst), d.{id_expr}))
-               AS cluster_id
-      FROM documents d LEFT JOIN reach r ON r.src = d.{id_expr}
-      GROUP BY d.{id_expr})
+      SELECT d.doc_id,
+             LEAST(d.doc_id, COALESCE(MIN(r.dst), d.doc_id)) AS cluster_id
+      FROM documents d LEFT JOIN reach r ON r.src = d.doc_id
+      GROUP BY d.doc_id)
     SELECT doc_id, cluster_id, doc_id = cluster_id AS keep FROM labeled
     """

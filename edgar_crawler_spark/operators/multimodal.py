@@ -7,16 +7,13 @@ Arrow-batched pandas UDFs over `mapInPandas`, so the payload bytes
 never round-trip through the driver and never explode into JVM objects
 — each task streams record batches through one Python worker.
 
-The actual codecs (PIL / ffmpeg / librosa) are NOT in this container,
-so the decode step is pluggable:
-
-- `fake_codec` (default): a DETERMINISTIC stand-in that derives
-  (format, width, height, n_frames) from md5(payload). Because md5 of
-  the same bytes is the same everywhere, the whole pipeline — schema,
-  partitioning, UDF signature, Arrow batch shape — is real and
-  oracle-checkable end-to-end; only the pixel math is fake.
-- `real_codec`: gated behind an import-try of PIL; raises
-  NotImplementedError here (clearly-marked stub per the build rules).
+No media codec (PIL / ffmpeg / librosa) is installed, so the decode
+step is `fake_codec`: a DETERMINISTIC stand-in that derives (format,
+width, height, n_frames) from md5(payload). Because md5 of the same
+bytes is the same everywhere, the whole pipeline — schema,
+partitioning, UDF signature, Arrow batch shape — is real and
+oracle-checkable end-to-end; only the pixel math is fake. A real
+decoder replaces `fake_codec` and returns the same fields.
 
 Both the per-row metadata decode (1 row → 1 row) and the frame
 sampler (1 row → N rows, the UDTF shape) are exposed.
@@ -54,41 +51,20 @@ def fake_codec(payload: bytes) -> dict:
     }
 
 
-def real_codec(payload: bytes) -> dict:
-    """Real decode — unavailable in this environment (no image libs).
-
-    STUB: wire PIL/ffmpeg here on a cluster that has them; the Spark
-    plumbing (schema, batching, partitioning) is identical."""
-    try:
-        from PIL import Image  # noqa: PLC0415, F401
-    except ImportError as e:  # pragma: no cover - always taken here
-        raise NotImplementedError(
-            "real media decode needs PIL/ffmpeg (not installed); "
-            "use fake_codec for plumbing tests"
-        ) from e
-    raise NotImplementedError("real_codec wiring is cluster-specific")
-
-
-def decode_meta(
-    media: DataFrame, id_col: str = "doc_id", payload_col: str = "payload",
-    codec=fake_codec,
-) -> DataFrame:
+def decode_meta(media: DataFrame) -> DataFrame:
     """1 row → 1 row metadata decode as Arrow-batched mapInPandas."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            metas = [codec(bytes(p)) for p in pdf[payload_col]]
+            metas = [fake_codec(bytes(p)) for p in pdf["payload"]]
             out = pd.DataFrame(metas)
-            out.insert(0, "doc_id", pdf[id_col].values)
+            out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out[["doc_id", "format", "width", "height", "n_frames", "n_bytes"]]
 
-    return media.select(id_col, payload_col).mapInPandas(run, META_SCHEMA)
+    return media.select("doc_id", "payload").mapInPandas(run, META_SCHEMA)
 
 
-def sample_frames(
-    media: DataFrame, every: int = 4, id_col: str = "doc_id",
-    payload_col: str = "payload", codec=fake_codec,
-) -> DataFrame:
+def sample_frames(media: DataFrame, every: int = 4) -> DataFrame:
     """1 row → N rows frame sampling (the UDTF shape): emit every
     `every`-th frame index with a deterministic frame fingerprint.
     A real pipeline would emit decoded frame tensors/bytes here; the
@@ -97,9 +73,9 @@ def sample_frames(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, hashes = [], [], []
-            for did, p in zip(pdf[id_col], pdf[payload_col]):
+            for did, p in zip(pdf["doc_id"], pdf["payload"]):
                 payload = bytes(p)
-                meta = codec(payload)
+                meta = fake_codec(payload)
                 h = hashlib.md5(payload).hexdigest()
                 for fi in range(0, meta["n_frames"], every):
                     ids.append(did)
@@ -109,7 +85,7 @@ def sample_frames(
                 {"doc_id": ids, "frame_idx": idxs, "frame_hash": hashes}
             )
 
-    return media.select(id_col, payload_col).mapInPandas(run, FRAME_SCHEMA)
+    return media.select("doc_id", "payload").mapInPandas(run, FRAME_SCHEMA)
 
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
@@ -164,14 +140,11 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_media(
-    media: DataFrame, box: int = 224, id_col: str = "doc_id",
-    payload_col: str = "payload", codec=fake_codec,
-) -> DataFrame:
+def resize_media(media: DataFrame, box: int = 224) -> DataFrame:
     """1 row → 1 row resize transform (the feature-extract/resize stage
     of a multimodal ingest): fit the decoded frame into a `box`×`box`
     square preserving aspect ratio. Pixel math is the deterministic
-    fake (real resize plugs into `codec`/PIL on a real cluster); the
+    fake (a real resize replaces `fake_codec` on a real cluster); the
     geometry is INTEGER arithmetic — (dim*box) // max(w,h) — so every
     engine derives identical shapes, and the output payload is
     fingerprinted, not materialized (at 100 TB the resized bytes land
@@ -183,9 +156,9 @@ def resize_media(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did, p in zip(pdf[id_col], pdf[payload_col]):
+            for did, p in zip(pdf["doc_id"], pdf["payload"]):
                 payload = bytes(p)
-                m = codec(payload)
+                m = fake_codec(payload)
                 w, h = m["width"], m["height"]
                 longest = max(w, h)
                 ow = max(1, (w * box) // longest)
@@ -202,7 +175,7 @@ def resize_media(
                 "out_width", "out_height", "out_hash",
             ])
 
-    return media.select(id_col, payload_col).mapInPandas(run, RESIZE_SCHEMA)
+    return media.select("doc_id", "payload").mapInPandas(run, RESIZE_SCHEMA)
 
 
 def oracle_resize_media_sql(box: int = 224) -> str:

@@ -28,6 +28,11 @@ from pyspark.sql import functions as F
 
 from ..cachereg import tracked_cache
 
+# lsh_topk's bucket width, embedding dimension and probe radius
+LSH_TOPK_NBITS = 8
+LSH_TOPK_DIM = 64
+LSH_TOPK_MAX_HAMMING = 1
+
 
 def dot_col(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -37,9 +42,9 @@ def dot_col(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_col(a: Column, b: Column, nd: int = 4) -> Column:
+def cosine_col(a: Column, b: Column) -> Column:
     return F.round(
-        dot_col(a, b) / (F.sqrt(dot_col(a, a)) * F.sqrt(dot_col(b, b))), nd
+        dot_col(a, b) / (F.sqrt(dot_col(a, a)) * F.sqrt(dot_col(b, b))), 4
     )
 
 
@@ -64,50 +69,43 @@ def lsh_bucket_col(emb: Column, nbits: int, dim: int) -> Column:
     return bucket.cast("int")
 
 
-def cosine_topk(
-    emb: DataFrame, query_vec_id: int, k: int = 20,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    qv = emb.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qv")
+def cosine_topk(emb: DataFrame, query_vec_id: int, k: int = 20) -> DataFrame:
+    qv = emb.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("qv")
     )
     return (
-        emb.filter(F.col(id_col) != query_vec_id)
+        emb.filter(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(qv))
-        .select(id_col, cosine_col(F.col(vec_col), F.col("qv")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        .select("vec_id", cosine_col(F.col("embedding"), F.col("qv")).alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def lsh_topk(
-    emb: DataFrame, query_vec_id: int, k: int = 20, *,
-    nbits: int = 8, dim: int = 64, max_hamming: int = 1,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k: probe the query's LSH bucket + Hamming-`max_hamming`
-    neighbors, exact cosine only within the probed set."""
+def lsh_topk(emb: DataFrame, query_vec_id: int, k: int = 20) -> DataFrame:
+    """ANN top-k: probe the query's LSH bucket + its neighbors within
+    Hamming distance LSH_TOPK_MAX_HAMMING, exact cosine only within the
+    probed set."""
     with_bucket = emb.withColumn(
-        "bucket", lsh_bucket_col(F.col(vec_col), nbits, dim)
+        "bucket", lsh_bucket_col(F.col("embedding"), LSH_TOPK_NBITS, LSH_TOPK_DIM)
     )
     qv = (
-        with_bucket.filter(F.col(id_col) == query_vec_id)
-        .select(F.col(vec_col).alias("qv"), F.col("bucket").alias("qbucket"))
+        with_bucket.filter(F.col("vec_id") == query_vec_id)
+        .select(F.col("embedding").alias("qv"), F.col("bucket").alias("qbucket"))
     )
     return (
-        with_bucket.filter(F.col(id_col) != query_vec_id)
+        with_bucket.filter(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(qv))
-        .filter(F.expr(f"bit_count(bucket ^ qbucket) <= {max_hamming}"))
-        .select(id_col, cosine_col(F.col(vec_col), F.col("qv")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        .filter(F.expr(f"bit_count(bucket ^ qbucket) <= {LSH_TOPK_MAX_HAMMING}"))
+        .select("vec_id", cosine_col(F.col("embedding"), F.col("qv")).alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
 def ivf_topk(
     emb: DataFrame, query_vec_id: int, k: int = 20, *,
-    n_cells: int = 16, n_probe: int = 4, seed: int = 42,
-    id_col: str = "vec_id", vec_col: str = "embedding",
+    n_cells: int = 16, n_probe: int = 4,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: k-means coarse quantizer -> probe the
     `n_probe` cells nearest the query -> exact cosine inside them.
@@ -127,31 +125,31 @@ def ivf_topk(
     from pyspark.ml.functions import array_to_vector  # noqa: PLC0415
 
     feats = emb.select(
-        id_col, vec_col, array_to_vector(F.col(vec_col)).alias("features")
+        "vec_id", "embedding", array_to_vector(F.col("embedding")).alias("features")
     )
-    model = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(feats)
+    model = KMeans(k=n_cells, seed=42, featuresCol="features").fit(feats)
     assigned = model.transform(feats).withColumnRenamed("prediction", "cell")
 
     centers = model.clusterCenters()
-    qrow = assigned.filter(F.col(id_col) == query_vec_id).head(1)
+    qrow = assigned.filter(F.col("vec_id") == query_vec_id).head(1)
     if not qrow:
         raise ValueError(f"query vec {query_vec_id} not found")
     import numpy as np  # noqa: PLC0415
 
-    qv = np.array(qrow[0][vec_col], dtype=float)
+    qv = np.array(qrow[0]["embedding"], dtype=float)
     dists = [float(np.linalg.norm(qv - np.asarray(c))) for c in centers]
     probe_cells = [int(i) for i in np.argsort(dists)[:n_probe]]
 
-    qdf = assigned.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qv")
+    qdf = assigned.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("qv")
     )
     return (
         assigned.filter(
-            F.col("cell").isin(probe_cells) & (F.col(id_col) != query_vec_id)
+            F.col("cell").isin(probe_cells) & (F.col("vec_id") != query_vec_id)
         )
         .crossJoin(F.broadcast(qdf))
-        .select(id_col, cosine_col(F.col(vec_col), F.col("qv")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        .select("vec_id", cosine_col(F.col("embedding"), F.col("qv")).alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -159,7 +157,6 @@ def ivf_topk(
 def ivf_topk_seeded(
     emb: DataFrame, query_vec_id: int, k: int = 20, *,
     n_cells: int = 16, n_probe: int = 4, dim: int = 64,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN with a deterministic hash-seeded codebook — the
     oracle-able variant of `ivf_topk` (VERDICT r01 #4).
@@ -180,18 +177,18 @@ def ivf_topk_seeded(
     `oracle_ivf_topk_seeded_sql`.
     """
     seeds = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        emb.select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(n_cells)
         .collect()
     )  # bounded: n_cells rows of metadata-scale payload
-    centroids = [[float(x) for x in r[vec_col]] for r in seeds]
+    centroids = [[float(x) for x in r["embedding"]] for r in seeds]
 
     def dist_to(c: list[float]) -> Column:
         cvec = F.array(*[F.lit(x) for x in c])
         return F.aggregate(
             F.zip_with(
-                F.col(vec_col), cvec,
+                F.col("embedding"), cvec,
                 lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
             ),
             F.lit(0.0),
@@ -209,27 +206,27 @@ def ivf_topk_seeded(
 
     from .dedup import spread  # noqa: PLC0415
 
-    assigned = spread(emb).select(id_col, vec_col, cell.alias("cell"))
-    qrow = assigned.filter(F.col(id_col) == query_vec_id).head(1)
+    assigned = spread(emb).select("vec_id", "embedding", cell.alias("cell"))
+    qrow = assigned.filter(F.col("vec_id") == query_vec_id).head(1)
     if not qrow:
         raise ValueError(f"query vec {query_vec_id} not found")
-    qv = [float(x) for x in qrow[0][vec_col]]
+    qv = [float(x) for x in qrow[0]["embedding"]]
     qdists = sorted(
         (sum((a - b) * (a - b) for a, b in zip(qv, c)), j)
         for j, c in enumerate(centroids)
     )
     probe_cells = [j for _, j in qdists[:n_probe]]
 
-    qdf = emb.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qv")
+    qdf = emb.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("qv")
     )
     return (
         assigned.filter(
-            F.col("cell").isin(probe_cells) & (F.col(id_col) != query_vec_id)
+            F.col("cell").isin(probe_cells) & (F.col("vec_id") != query_vec_id)
         )
         .crossJoin(F.broadcast(qdf))
-        .select(id_col, cosine_col(F.col(vec_col), F.col("qv")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        .select("vec_id", cosine_col(F.col("embedding"), F.col("qv")).alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -287,7 +284,6 @@ def oracle_ivf_topk_seeded_sql(
 def pq_adc_topk(
     emb: DataFrame, query_vec_id: int = 0, k: int = 20, *,
     m: int = 8, n_codes: int = 16, dim: int = 64,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation
     (Jégou, Douze & Schmid, TPAMI 2011) — the memory-compression scale
@@ -311,22 +307,22 @@ def pq_adc_topk(
     """
     sub = dim // m
     seeds = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        emb.select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(n_codes)
         .collect()
     )  # bounded: n_codes rows of codebook payload
     books = [
         [
-            [float(x) for x in r[vec_col][s * sub:(s + 1) * sub]]
+            [float(x) for x in r["embedding"][s * sub:(s + 1) * sub]]
             for r in seeds
         ]
         for s in range(m)
     ]
-    qrow = emb.filter(F.col(id_col) == query_vec_id).head(1)
+    qrow = emb.filter(F.col("vec_id") == query_vec_id).head(1)
     if not qrow:
         raise ValueError(f"query vec {query_vec_id} not found")
-    qv = [float(x) for x in qrow[0][vec_col]]
+    qv = [float(x) for x in qrow[0]["embedding"]]
     # query-side LUT, same left-fold order as the SQL mirror
     lut = [
         [
@@ -343,7 +339,7 @@ def pq_adc_topk(
     ]
 
     def sub_dist(s: int, cw: list[float]) -> Column:
-        sl = F.slice(F.col(vec_col), s * sub + 1, sub)
+        sl = F.slice(F.col("embedding"), s * sub + 1, sub)
         return F.aggregate(
             F.zip_with(
                 sl, F.array(*[F.lit(x) for x in cw]),
@@ -369,7 +365,7 @@ def pq_adc_topk(
     from .dedup import spread  # noqa: PLC0415
 
     coded = spread(emb).select(
-        id_col, *[code_for(s).alias(f"c{s}") for s in range(m)]
+        "vec_id", *[code_for(s).alias(f"c{s}") for s in range(m)]
     )
     adc = None
     for s in range(m):
@@ -378,9 +374,9 @@ def pq_adc_topk(
         )
         adc = term if adc is None else adc + term
     return (
-        coded.filter(F.col(id_col) != query_vec_id)
-        .select(id_col, F.round(adc, 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
+        coded.filter(F.col("vec_id") != query_vec_id)
+        .select("vec_id", F.round(adc, 6).alias("adc_dist"))
+        .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -442,8 +438,6 @@ def lsh_neardup_pairs(
     threshold: float = 0.35,
     nbits: int = 6,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding near-dup pairs blocked on the sign-LSH bucket — the
     scale-safe replacement for blocking on a low-cardinality metadata
@@ -471,9 +465,9 @@ def lsh_neardup_pairs(
     # bucket projection is referenced from three join sides; compute
     # once, in parallel (see dedup.spread on the degenerate-scan case)
     with_bucket = spread(emb).select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        lsh_bucket_col(F.col(vec_col), nbits, dim).alias("bucket"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
+        lsh_bucket_col(F.col("embedding"), nbits, dim).alias("bucket"),
     )
     with_bucket = tracked_cache(with_bucket)
     probes = with_bucket.select(
@@ -545,8 +539,8 @@ def oracle_lsh_neardup_sql(
 
 
 def oracle_lsh_topk_sql(
-    query_vec_id: int = 0, k: int = 20, *, nbits: int = 8, dim: int = 64,
-    max_hamming: int = 1,
+    query_vec_id: int = 0, k: int = 20, *, nbits: int = LSH_TOPK_NBITS,
+    dim: int = LSH_TOPK_DIM,
 ) -> str:
     """DuckDB oracle for `lsh_topk` — identical md5-derived projections."""
     def proj(i: int) -> str:
@@ -572,7 +566,7 @@ def oracle_lsh_topk_sql(
                   sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos_sim
     FROM b e CROSS JOIN q
     WHERE e.vec_id <> {query_vec_id}
-      AND bit_count(xor(e.bucket, q.qbucket)) <= {max_hamming}
+      AND bit_count(xor(e.bucket, q.qbucket)) <= {LSH_TOPK_MAX_HAMMING}
     ORDER BY cos_sim DESC, vec_id ASC
     LIMIT {k}
     """
@@ -584,8 +578,6 @@ def knn_graph(
     k: int = 5,
     nbits: int = 6,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Directed kNN graph over LSH candidates: for EVERY vector, its
     top-k exact-cosine neighbors among Hamming-<=1 bucket candidates —
@@ -610,11 +602,11 @@ def knn_graph(
 
     from pyspark.sql import Window  # noqa: PLC0415
 
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     with_bucket = spread(emb).select(
-        F.col(id_col).alias("_id"),
+        F.col("vec_id").alias("_id"),
         dbl.alias("_v"),
-        lsh_bucket_col(F.col(vec_col), nbits, dim).alias("bucket"),
+        lsh_bucket_col(F.col("embedding"), nbits, dim).alias("bucket"),
     ).withColumn("_n", F.sqrt(dot_col(F.col("_v"), F.col("_v"))))
     with_bucket = tracked_cache(with_bucket)
     probes = with_bucket.select(

@@ -84,13 +84,13 @@ def parse_warc_records(blob: bytes) -> list[tuple[str, str, int, str]]:
     return out
 
 
-def parse_warc_blobs(blobs: DataFrame, blob_col: str = "warc") -> DataFrame:
-    """blobs(blob_col: binary) → one row per WARC record."""
+def parse_warc_blobs(blobs: DataFrame) -> DataFrame:
+    """blobs(warc: binary) → one row per WARC record."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for blob in pdf[blob_col]:
+            for blob in pdf["warc"]:
                 rows.extend(parse_warc_records(bytes(blob)))
             out = pd.DataFrame(
                 rows,
@@ -101,4 +101,4 @@ def parse_warc_blobs(blobs: DataFrame, blob_col: str = "warc") -> DataFrame:
             out["content_length"] = out["content_length"].astype("int64")
             yield out
 
-    return blobs.select(blob_col).mapInPandas(run, PARSED_SCHEMA)
+    return blobs.select("warc").mapInPandas(run, PARSED_SCHEMA)

@@ -4,12 +4,13 @@ The reference has NO streaming runtime (SURVEY.md §2.9) — its
 incrementality is "skip what's on disk" resume batching. Four
 streaming duals remain:
 
-1. `stream_extract` — continuous extraction: pages land in the pages
-   table (a file/Iceberg stream source); the SAME mapInPandas
-   extraction stage runs per micro-batch; the sink checkpoint gives
-   exactly-once. `Trigger.AvailableNow` drains the backlog and stops,
-   which is also how tests and backfills run it. Because extraction is
-   stateless map-side work, a micro-batch never shuffles.
+1. `stream_extract` — incremental extraction: pages land in the pages
+   table (a file/Iceberg stream source); the SAME `extract_items_job`
+   stage runs per micro-batch; the sink checkpoint gives exactly-once.
+   Each run drains the backlog with `Trigger.AvailableNow` and stops;
+   running it again processes only the pages that landed since.
+   Because extraction is stateless map-side work, a micro-batch never
+   shuffles.
 
 2. `stream_fetch_rate` — operational metrics: windowed fetch
    throughput with a watermark bounding state for late fetch-log rows
@@ -19,7 +20,8 @@ streaming duals remain:
    micro-batch of newly-discovered URLs is admitted into the frontier
    (canonical form → URL-seen filter → priority ranking, one snapshot
    commit) and then crawled by the SAME wave loop via foreachBatch, so
-   batch and streaming share every operator and every test; the
+   batch and streaming share every operator and every test. Like
+   `stream_extract`, a run drains the available files and stops; the
    streaming checkpoint tracks source offsets while the SnapshotStore
    remains the source of truth for crawl state (idempotent commits →
    exactly-once effects even on micro-batch replay).
@@ -36,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..extraction import ExtractionOptions
-from ..operators.extract_job import RESULT_SCHEMA, make_extractor
+from ..operators.extract_job import extract_items_job
 from ..synth import PAGES_SCHEMA
 
 
@@ -46,7 +48,6 @@ def stream_extract(
     out_path: str,
     checkpoint: str,
     options: ExtractionOptions | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """File-stream the pages table → extraction → parquet sink.
     Incremental + exactly-once: the checkpoint remembers which page
@@ -60,31 +61,26 @@ def stream_extract(
         .option("maxFilesPerTrigger", 8)
         .parquet(pages_path)
     )
-    extracted = pages.mapInPandas(make_extractor(options), schema=RESULT_SCHEMA)
-    writer = (
-        extracted.writeStream.format("parquet")
+    return (
+        extract_items_job(pages, options)
+        .writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def stream_fetch_rate(
-    fetch_log: DataFrame,
-    window: str = "10 seconds",
-    watermark: str = "30 seconds",
-) -> DataFrame:
-    """Windowed fetch throughput over a streaming fetch log
-    (warc_ts, status, fetched_bytes). Watermark bounds the state store:
-    windows older than the watermark are finalized and evicted — late
-    rows beyond it are dropped, which is the correct trade for an
-    operational metric."""
+def stream_fetch_rate(fetch_log: DataFrame) -> DataFrame:
+    """10-second windowed fetch throughput over a streaming fetch log
+    (warc_ts, status, fetched_bytes). A 30-second watermark bounds the
+    state store: windows older than the watermark are finalized and
+    evicted — late rows beyond it are dropped, which is the correct
+    trade for an operational metric."""
     return (
-        fetch_log.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"))
+        fetch_log.withWatermark("warc_ts", "30 seconds")
+        .groupBy(F.window("warc_ts", "10 seconds").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_fetched"),
             F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("n_failed"),
@@ -105,7 +101,6 @@ def stream_frontier_foreachbatch(
     urls_path: str,
     checkpoint: str,
     crawl_job,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Discovered-URL stream → admission, then waves to exhaustion,
     per micro-batch.
@@ -131,13 +126,12 @@ def stream_frontier_foreachbatch(
         crawl_job.merge(batch_df, stage="stream_merge", batch_id=batch_id)
         crawl_job.run(max_waves=None)
 
-    writer = (
+    return (
         urls.writeStream.foreachBatch(admit_and_crawl)
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_sessionize(

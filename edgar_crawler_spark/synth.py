@@ -95,11 +95,11 @@ def make_filing_body(seed: int, i: int, form_type: str) -> str:
     return "\n".join(parts)
 
 
-def make_pages(seed: int, n: int, start: str = "2015-01-01") -> list[dict]:
+def make_pages(seed: int, n: int) -> list[dict]:
     """n synthetic page rows matching the input_hint schema
     (url, warc_ts, html, text, lang) + the ledger metadata columns the
     extract job needs."""
-    t0 = datetime.fromisoformat(start).replace(tzinfo=timezone.utc)
+    t0 = datetime.fromisoformat("2015-01-01").replace(tzinfo=timezone.utc)
     rows = []
     for i in range(n):
         rng = _rng(seed, "page", i)
@@ -132,10 +132,10 @@ FRONTIER_SCHEMA = (
 )
 
 
-def frontier_df(spark, seed: int, n: int, n_parts: int | None = None):
+def frontier_df(spark, seed: int, n: int):
     """Frontier-only rows (no filing bodies — cheap at any n); same
     url/metadata derivation as make_pages so the two line up."""
-    n_parts = n_parts or max(1, min(256, n // 2000))
+    n_parts = max(1, min(256, n // 2000))
     sc = spark.sparkContext
     t0 = datetime.fromisoformat("2015-01-01").replace(tzinfo=timezone.utc)
 

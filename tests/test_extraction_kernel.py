@@ -11,8 +11,9 @@ kernel. Two guards here:
 - property tests run the kernel's rewritten passes against the code
   they replaced, kept below verbatim as the oracle: the blank-run
   regex and `collapse_lines`, the ordered per-character `re.sub`
-  loop, and `Sectionizer.section`/`tail_section`/`split_10q_parts`
-  before the header index (only the class and function names differ).
+  loop, `Sectionizer.section`/`tail_section`/`split_10q_parts`
+  before the header index, and `_select_document` when it parsed
+  every report document (only the class and function names differ).
 """
 
 from __future__ import annotations
@@ -23,10 +24,17 @@ import re
 import string
 from typing import Optional
 
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from edgar_crawler_spark.extraction import ExtractionOptions, extract_filing
+from edgar_crawler_spark.extraction import (
+    ExtractionOptions,
+    extract_filing,
+    htmlmini,
+    pipeline,
+)
+from edgar_crawler_spark.extraction.pipeline import _select_document
 from edgar_crawler_spark.extraction.items import ITEMS_10Q, ROMAN
 from edgar_crawler_spark.extraction.sectionizer import (
     Sectionizer,
@@ -445,3 +453,80 @@ def test_sectionizer_8k_matches_old(text, skip_first, tail_at):
 def test_sectionizer_10q_matches_old(text, skip_first, tail_at):
     _check_sectionizer(CAT_10Q, text, skip_first, tail_at)
     assert split_10q_parts(CAT_10Q, text) == old_split_10q_parts(CAT_10Q, text)
+
+
+# ---------------------------------------------------------------------------
+# document selection: only the last report document is parsed
+# ---------------------------------------------------------------------------
+
+_FLAGS_IDM = re.IGNORECASE | re.DOTALL | re.MULTILINE
+
+
+def old_select_document(content: str):
+    """`_select_document` when it parsed every report document (its
+    `_WS` pattern inlined)."""
+    content = re.sub(r"<PDF>.*?</PDF>", "", content, flags=_FLAGS_IDM)
+    documents = re.findall("<DOCUMENT>.*?</DOCUMENT>", content, flags=_FLAGS_IDM)
+
+    chosen = None
+    is_html = False
+    found = False
+    for doc in documents:
+        type_m = re.search(r"\n[^\S\r\n]*<TYPE>(.*?)\n", doc, flags=_FLAGS_IDM)
+        doc_type = type_m.group(1) if type_m else None
+        if doc_type is not None and doc_type.startswith(("10", "8")):
+            tree = htmlmini.parse(doc)
+            is_html = htmlmini.looks_like_html(tree)
+            chosen = tree if is_html else doc
+            found = True
+
+    if not found:
+        tree = htmlmini.parse(content)
+        is_html = htmlmini.looks_like_html(tree)
+        chosen = tree if is_html else content
+    return chosen, is_html
+
+
+def _document(form: str, body: str) -> str:
+    return f"<DOCUMENT>\n<TYPE>{form}\n<SEQUENCE>1\n<TEXT>\n{body}\n</TEXT>\n</DOCUMENT>"
+
+
+_HTML_10K = _document(
+    "10-K",
+    "<HTML><BODY><TABLE><TR><TD>ITEM 1. Business</TD></TR></TABLE>"
+    "<P>We make widgets in html.</P><P>ITEM 2. Properties</P></BODY></HTML>",
+)
+_TEXT_10K = _document(
+    "10-K", "ITEM 1. Business\nWe make widgets in plain text.\nITEM 2. Properties\nNone."
+)
+_EXHIBIT = _document("EX-99", "<HTML><BODY><TABLE><TR><TD>x</TD></TR></TABLE></BODY></HTML>")
+_FILINGS = {
+    "html_then_text": _HTML_10K + "\n" + _TEXT_10K,
+    "text_then_html": _TEXT_10K + "\n" + _HTML_10K,
+    "report_then_exhibit": _HTML_10K + "\n" + _EXHIBIT,
+    "no_report": _EXHIBIT,
+    "no_envelope": "ITEM 1. Business\nplain\nITEM 2. Properties\n",
+}
+
+
+def _rendered(selected) -> tuple[str, bool]:
+    doc, is_html = selected
+    return (doc.serialize() if is_html else doc), is_html
+
+
+@pytest.mark.parametrize("name", sorted(_FILINGS))
+def test_select_document_matches_old(name, monkeypatch):
+    filing = _FILINGS[name]
+    assert _rendered(_select_document(filing)) == _rendered(old_select_document(filing))
+    md = {"CIK": "1", "Company": "C", "Type": "10-K", "Date": "2015-06-30",
+          "filename": "f.htm"}
+    new = extract_filing(filing, md, ExtractionOptions())
+    monkeypatch.setattr(pipeline, "_select_document", old_select_document)
+    assert new == extract_filing(filing, md, ExtractionOptions())
+
+
+def test_last_report_document_decides_is_html():
+    doc, is_html = _select_document(_FILINGS["html_then_text"])
+    assert not is_html and "plain text" in doc
+    doc, is_html = _select_document(_FILINGS["text_then_html"])
+    assert is_html and "widgets in html" in doc.serialize()

@@ -848,6 +848,21 @@ class TestWriteOnceWave:
             store.commit({"seen": df}, version=v, written={"pages": entry})
         assert store.latest() == 1
 
+    def test_same_commit_writes_the_same_manifest(self, spark, tmp_path):
+        """A manifest is a function of what was committed: two stores
+        given the same tables and summary write the same bytes, so the
+        bytes a commit writes are an exact count."""
+        import os
+
+        df = spark.range(5).selectExpr("cast(id as string) AS url")
+        manifests = []
+        for name in ("a", "b"):
+            store = SnapshotStore(str(tmp_path / name))
+            v = store.commit({"seen": df}, summary={"stage": "seed", "n_ok": 5})
+            with open(os.path.join(store._vdir(v), "MANIFEST.json"), "rb") as f:
+                manifests.append(f.read())
+        assert manifests[0] == manifests[1]
+
     def test_split_files_follows_the_read_split_rule(self, spark):
         from edgar_crawler_spark.frontier.state import split_files
 

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from edgar_crawler_spark.frontier import CrawlJob, SnapshotStore
@@ -39,10 +38,6 @@ class TestMultimodal:
         assert len(pdf) == want
         assert (pdf.frame_idx % 4 == 0).all()
         assert pdf.frame_hash.str.len().eq(32).all()
-
-    def test_real_codec_is_marked_stub(self):
-        with pytest.raises(NotImplementedError):
-            M.real_codec(b"\xff\xd8\xff")
 
 
 class TestStreamExtract:
