@@ -14,6 +14,11 @@ iter_tags, get_text, unwrap, replace_with_text, detach, and an
 lxml-flavoured serializer (lowercased tag/attr names, double-quoted
 attributes, minimal entity escaping, <br/> style voids).
 
+For point 4, `Node.flatten` reads the text that
+`textprep.flatten_html(node.serialize())` would return straight off
+the tree, so a filing is parsed once. `serialize` serves only the
+special-items scan and tests.
+
 Recovery rules approximate libxml2's HTML mode: implied end tags for
 p/li/tr/td/th/option etc., stray end tags dropped, unknown elements
 (SEC SGML envelope tags like <document>, <type>) treated as plain
@@ -22,7 +27,10 @@ containers.
 
 from __future__ import annotations
 
+import functools
 from html.parser import HTMLParser
+
+from .textprep import flatten_html
 
 VOID_TAGS = {
     "area", "base", "br", "col", "embed", "hr", "img", "input",
@@ -151,6 +159,13 @@ class Node:
         return any(c.has_stripped_text() for c in self.children)
 
     # -- serialization -----------------------------------------------
+    def flatten(self) -> str:
+        """`textprep.flatten_html(self.serialize())`, without the
+        round trip through markup (see `_flatten_into`)."""
+        out: list[str] = []
+        _flatten_into(self.children if self.tag == "[root]" else (self,), out)
+        return "".join(out)
+
     def serialize(self) -> str:
         out: list[str] = []
         self._ser(out)
@@ -185,6 +200,57 @@ def _escape_text(s: str) -> str:
 
 def _escape_attr(s: str) -> str:
     return s.replace("&", "&amp;").replace('"', "&quot;")
+
+
+# html.parser reads these elements' content as CDATA: it never decodes
+# their entities, so the round trip leaves their escaped text escaped
+_CDATA = HTMLParser.CDATA_CONTENT_ELEMENTS
+
+
+@functools.lru_cache(maxsize=4096)
+def _tag_text(tag: str) -> tuple[str, str]:
+    """(text `flatten_html` makes of the tag's start tag when it has no
+    attributes, text it makes of its end tag), read off the tokens the
+    serializer writes, so `textprep` alone holds the rules."""
+    start = f"<{tag}/>" if tag in VOID_TAGS else f"<{tag}>"
+    return flatten_html(start), flatten_html(f"</{tag}>")
+
+
+def _flatten_into(nodes, out: list[str]) -> None:
+    """Append the flattened text of `nodes` to `out`.
+
+    Equal to `flatten_html` over their serialization on every tree
+    `parse` builds, because that serialization is a sequence of tokens
+    the tag stripper reads back one for one, and no rule matches across
+    two tokens (a match runs from a "<" to the first ">" after it, and
+    every token that holds a "<" ends in ">"):
+    - text is escaped, so it holds no "<" and unescapes to itself;
+    - the rules' insertions inside a start tag's quoted attribute
+      values or a comment stay inside that token, and the stripper
+      drops the token;
+    - what a rule inserts after a tag's ">" (or before a cell's
+      `</td>`) is text, given by `_tag_text`;
+    - a `_CDATA` element (script, style) holds only text, since
+      html.parser reads its body as CDATA, and the stripper reads its
+      escaped body back as CDATA too, undecoded.
+    """
+    for child in nodes:
+        text = child.text
+        if text is not None:
+            out.append(text)
+            continue
+        tag = child.tag
+        if tag == "[comment]":
+            continue
+        start, end = _tag_text(tag)
+        if start and not child.attrs:
+            out.append(start)
+        if tag in _CDATA:
+            out.extend(_escape_text(c.text) for c in child.children)
+        else:
+            _flatten_into(child.children, out)
+        if end:  # never set for a void tag, which has no end tag
+            out.append(end)
 
 
 class _TreeBuilder(HTMLParser):

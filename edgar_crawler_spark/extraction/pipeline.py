@@ -115,7 +115,7 @@ def _remove_tables(doc: Any, is_html: bool, items: list[str]) -> Any:
         return re.sub(r"<TABLE>.*?</TABLE>", "", str(doc), flags=_FLAGS_IDM)
 
     for tbl in doc.find_all("table"):
-        tbl_text = normalize_text(flatten_html(tbl.serialize()))
+        tbl_text = normalize_text(tbl.flatten())
         has_item_header = False
         for item_key in items:
             if _table_header_rx(header_pattern(item_key)).search(tbl_text):
@@ -217,7 +217,7 @@ def extract_filing(
     if options.special_items.get("enabled", False):
         out["special_items"] = special
 
-    text = flatten_html(doc.serialize() if is_html else str(doc))
+    text = doc.flatten() if is_html else flatten_html(str(doc))
     text = normalize_text(text)
 
     part_texts: dict[str, str] = {}

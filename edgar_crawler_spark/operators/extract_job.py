@@ -12,12 +12,14 @@ wide operations downstream are whatever aggregations the caller adds.
 ``partitions=n`` adds a url-hash ``repartition(n)`` in front of the
 UDF: one extra stage whose shuffle carries every page body (1.8 MB for
 960 synthetic pages), traded for balanced tasks when the scan's splits
-are skewed. On those 960 pages at 4 cores (4 scan splits), n=16 took
-1.90 s against 1.43 s without it (median of 6 runs each), a 0.46 s
-cost; these figures date from a kernel at ≈4.6 ms per filing, before
-its header index. With PySpark's stock worker daemon, which spent
-≈0.2 CPU-s of import-cache refresh per Python task (see
-``session.py``), the same pair was 2.90 s against 2.06 s.
+are skewed. What that costs is the extra Python tasks, not the bytes
+shuffled. No-op ``mapInPandas`` jobs over those 960 pages at 4 cores
+(median of 7 each, with the frozen daemon heap of ``pydaemon.py``):
+the scan's own 4 tasks 0.11 s, ``repartition(4)`` 0.19 s,
+``repartition(16)`` 0.28 s, and ``repartition(16)`` without the
+``html`` column no cheaper at 0.36 s; ``spark.range`` with 16 tasks
+took 0.27 s and with 4 tasks 0.11 s. The full job with n=16 took
+0.96 s against 0.99 s without it.
 
 Scale notes (100 TB / 10^10 pages):
 - partition sizing is driven by page bytes, not rows: keep

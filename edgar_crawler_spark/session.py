@@ -16,9 +16,20 @@ archives when the same `pyspark` is installed as a directory (see its
 docstring for the rule) and otherwise leaves the path alone. The
 engine's root goes on the workers' PYTHONPATH (merged into any
 `spark.executorEnv.PYTHONPATH` the caller passes), so the daemon
-starts from wherever the driver imported the engine. When the engine
-itself is imported from an archive (spark-submit `--py-files`), the
-daemon could not be started from it, so the stock daemon runs.
+starts from wherever the driver imported the engine.
+
+The engine daemon also imports, once, what every Arrow UDF task
+imports (pandas with pyarrow, PySpark's Arrow serializers and the
+engine's extraction, frontier and extract-job modules), and freezes
+that heap (`gc.freeze()`) before it forks workers. The workers share
+those pages, and the full `gc.collect()` PySpark's daemon runs after
+every task of a reused worker does not walk them (`pydaemon.py` has
+the per-task and memory figures).
+
+When the engine itself is imported from an archive (spark-submit
+`--py-files`), the daemon could not be started from it, so the stock
+daemon runs, and those workers still pay both costs: the archive
+re-reads and the per-task collection of their whole heap.
 """
 
 from __future__ import annotations

@@ -12,8 +12,10 @@ kernel. Two guards here:
   they replaced, kept below verbatim as the oracle: the blank-run
   regex and `collapse_lines`, the ordered per-character `re.sub`
   loop, `Sectionizer.section`/`tail_section`/`split_10q_parts`
-  before the header index, and `_select_document` when it parsed
-  every report document (only the class and function names differ).
+  before the header index, `_select_document` when it parsed every
+  report document, and the serialize-then-strip round trip that
+  flattened an HTML tree before `Node.flatten` (only the class and
+  function names differ).
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ from edgar_crawler_spark.extraction.textprep import (
     _CHAR_TABLE,
     _RX_BLANK_RUN,
     collapse_lines,
+    flatten_html,
 )
 from edgar_crawler_spark.synth import FORM_TYPES, make_filing_body
 
@@ -130,6 +133,12 @@ def old_char_subs(text: str) -> str:
     for pat, repl in _CHAR_SUBS:
         text = re.sub(pat, repl, text)
     return text
+
+
+def old_flatten(tree) -> str:
+    """How `extract_filing` flattened an HTML tree (the whole document,
+    and each table in `_remove_tables`)."""
+    return flatten_html(tree.serialize())
 
 
 class OldSectionizer:
@@ -530,3 +539,105 @@ def test_last_report_document_decides_is_html():
     assert not is_html and "plain text" in doc
     doc, is_html = _select_document(_FILINGS["text_then_html"])
     assert is_html and "widgets in html" in doc.serialize()
+
+
+# ---------------------------------------------------------------------------
+# flattening: a walk of the parsed tree instead of serialize-then-strip
+# ---------------------------------------------------------------------------
+
+_ATTR_NAMES = ["class", "style", 'q"', "'q", "<x", "=e", "a=", "a/b", "x<br", "bgcolor"]
+_ATTR_VALUES = [
+    "", "x", 'say "hi"', "it's", "a<b", "a>b", "k=v", "/path/", "</p>", "<br>",
+    "<br/>", "</td>", "</ div >", "&amp;", "&nbsp;", "&bogus;", "a&b",
+]
+_TEXTS = [
+    "x", " ", "\n", "\t", "\t\n\t", "ITEM 1. Business", "a < b", "a > b", "a & b",
+    "&amp;", "&lt;p&gt;", "&nbsp;", "&#160;", "&#x41;", "&#128;", "&#0;", "&#xZZ;",
+    "&#;", "&bogus;", "&amp", "&copy", "<3", "a<", "\x0b", "\r\n", "--", "</>",
+]
+# tags whose end tag gains text, tags that gain text after their start
+# tag, other voids, containers, CDATA, raw-text elements that newer
+# html.parser releases treat apart (title, textarea), envelope tags and
+# odd names the parser accepts (a name holds anything but whitespace,
+# "/" and ">")
+_TAGS = [
+    "div", "tr", "p", "li", "td", "th", "br", "hr", "img", "table", "span", "b",
+    "script", "style", "title", "textarea", "document", "type", "font", "p\x0b", "td\x0b", "br\x0b",
+    "x<br", "a\"b", "a=b", "DIV", "Td",
+]
+_CDATA_BODIES = [
+    "a<b", "a&b", "a>b", "if (a < b && c > d) {}", "</p><br>", "&amp;&lt;", "<!-- x -->",
+    "</scriptx>", "p { color: red }", "",
+]
+_COMMENTS = ["<!-- </p> -->", "<!--<br>-->", "<!--</td>-->", "<!---->", "<!--a--->",
+             "<!--a-- b-->", "<!bogus <br>>", "<!DOCTYPE html>", "<?pi x?>", "<![CDATA[x]]>"]
+
+
+@st.composite
+def _attrs(draw) -> str:
+    out = []
+    for _ in range(draw(st.integers(0, 2))):
+        name = draw(st.sampled_from(_ATTR_NAMES))
+        value = draw(st.sampled_from(_ATTR_VALUES))
+        quote = draw(st.sampled_from(['"', "'", "", None]))
+        if quote is None:
+            out.append(f" {name}")
+        elif quote == "" and not any(c in value for c in " >\"'") and value:
+            out.append(f" {name}={value}")
+        else:
+            q = quote or '"'
+            out.append(f" {name}={q}{value.replace(q, '')}{q}")
+    return "".join(out)
+
+
+@st.composite
+def _fragment(draw) -> str:
+    kind = draw(st.sampled_from(
+        ["open", "open", "close", "close", "selfclose", "text", "text", "comment", "cdata"]))
+    tag = draw(st.sampled_from(_TAGS))
+    if kind == "open":
+        return f"<{tag}{draw(_attrs())}>"
+    if kind == "close":
+        return draw(st.sampled_from([f"</{tag}>", f"</ {tag} >", f"</{tag.upper()}>"]))
+    if kind == "selfclose":
+        return f"<{tag}{draw(_attrs())}/>"
+    if kind == "comment":
+        return draw(st.sampled_from(_COMMENTS))
+    if kind == "cdata":
+        name = draw(st.sampled_from(["script", "style", "SCRIPT", "title", "textarea"]))
+        body = draw(st.sampled_from(_CDATA_BODIES))
+        close = draw(st.sampled_from([f"</{name}>", ""]))  # "" leaves it unclosed
+        return f"<{name}{draw(_attrs())}>{body}{close}"
+    return draw(st.sampled_from(_TEXTS))
+
+
+_markup = st.lists(_fragment(), max_size=40).map("".join)
+_char_soup = st.text(alphabet=list("<>/&;#!-=\"' \t\n\x0bxabdiprltbhsc1"), max_size=80)
+
+
+def _check_flatten(markup: str) -> None:
+    tree = htmlmini.parse(markup)
+    for doc in (tree, pipeline._handle_spans(htmlmini.parse(markup), True)):
+        assert doc.flatten() == old_flatten(doc), markup
+        for tbl in doc.find_all("table"):
+            assert tbl.flatten() == old_flatten(tbl), markup
+
+
+@settings(max_examples=600, deadline=None)
+@given(_markup)
+@example("<div>a</div><tr><td>b</td><th>c</th></tr><p>d</p><li>e</li>")
+@example('<br>a<br/>b<br class="x">c<br >d<hr><div/>e')
+@example("<!-- </p> --><!--<br>-->x")
+@example("<script>if (a < b && c > d) {}</script><style>p>a{}</style>")
+@example("&amp;&nbsp;&#160;&#x41;&#128;&bogus;&")
+@example('<td a"b=\'<x>\' c="</p>" d=/>x</td>')
+@example("<table><tr><td>a<table><tr><td>b</table>c")
+@example("<x<br>a</x<br><p\x0b>b</p\x0b><td\x0b>c</td\x0b><br\x0b>d")
+def test_flatten_matches_round_trip(markup):
+    _check_flatten(markup)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_char_soup)
+def test_flatten_matches_round_trip_on_char_soup(markup):
+    _check_flatten(markup)

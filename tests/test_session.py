@@ -1,5 +1,6 @@
-"""The engine's Python worker daemon: workers carry no zip importers,
-and the path rule that decides when Spark's archives may be dropped."""
+"""The engine's Python worker daemon: workers carry no zip importers
+and fork from a frozen heap, and the path rule that decides when
+Spark's archives may be dropped."""
 
 from __future__ import annotations
 
@@ -35,6 +36,31 @@ class TestWorkerPath:
         assert row.zip_importers == 0
         # inside pyspark.zip the package "directory" would not exist
         assert os.path.isdir(os.path.dirname(row.pyspark)), row.pyspark
+
+
+def _worker_heap(batches):
+    import gc
+
+    import pandas as pd
+
+    for _ in batches:
+        pass
+    yield pd.DataFrame(
+        {"frozen": [gc.get_freeze_count()], "tracked": [len(gc.get_objects())]})
+
+
+class TestFrozenHeap:
+    def test_worker_forks_from_a_frozen_heap(self, spark):
+        # without the freeze, every task of a reused worker is followed
+        # by a full collection over the whole heap, and nothing else
+        # shows it
+        row = (
+            spark.range(1, numPartitions=1)
+            .mapInPandas(_worker_heap, "frozen long, tracked long")
+            .collect()[0]
+        )
+        assert row.frozen > 0
+        assert row.frozen > row.tracked, row
 
 
 def _installed(root, version, name="pyspark"):
