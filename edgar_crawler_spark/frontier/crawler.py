@@ -2,12 +2,11 @@
 
 One `run()` reproduces the reference's crawl entry point
 (/root/reference/download_filings.py:54-224) as an iterative batch
-loop — the Structured-Streaming dual is foreachBatch over the frontier
-table, but an explicit loop keeps each wave = one atomic snapshot,
-which is the exact-resume contract of the north rule.
+loop; each wave is one atomic snapshot, which is the exact-resume
+contract of the north rule.
 
 URLs enter the frontier only through an admission commit: `seed()`,
-`requeue_failed()` and `merge()` (the stream merge). Admission ranks
+`requeue_failed()` and `merge()` (newly discovered urls). Admission ranks
 the whole frontier once — priority + politeness waves, priority.py —
 and writes it segmented by wave (state.py), with a cursor at wave 0.
 A merge also drops already-seen URLs there (URL-seen, seen.py), so

@@ -170,23 +170,24 @@ def _fetch_buckets(
 
         transport = tf() if not isinstance(tf, SimulatedTransport) else tf
         pdf = pdf.sort_values("bucket_rank", kind="mergesort")
-        bucket = TokenBucket(rate=rate, burst=1.0)
+        bucket = TokenBucket(rate=rate)
         anchor = time.monotonic()
         out = []
         for row in pdf.itertuples(index=False):
-            attempts, body, t = 0, None, 0.0
+            attempts, body, t, ready = 0, None, 0.0, 0.0
             denied = robots is not None and not robots.allows(row.url)
             while not denied and attempts <= MAX_RETRIES and body is None:
                 attempts += 1
-                t = bucket.acquire()
+                t = bucket.acquire(ready)
                 if real_pace:
                     delay = (anchor + t) - time.monotonic()
                     if delay > 0:
                         time.sleep(delay)
                 body = transport.get(row.url, row.form_type, attempts)
                 if body is None and attempts <= MAX_RETRIES:
-                    # reference backoff schedule, charged to the clock
-                    bucket.now += BACKOFF_FACTOR * (2 ** (attempts - 1))
+                    # reference backoff schedule: the retry may go out
+                    # once it ends and the bucket has a token
+                    ready = t + BACKOFF_FACTOR * (2 ** (attempts - 1))
             status = ("robots_denied" if denied
                       else "ok" if body is not None else "failed")
             out.append(emit(row, body, attempts, float(t), status))

@@ -10,40 +10,31 @@ token bucket refills at rate/B. Worst case the buckets drift apart in
 time, but the sum of per-bucket rates never exceeds the host budget —
 the invariant the politeness test asserts from the fetch log.
 
-The bucket runs on an injected clock. Production: time.monotonic +
-real sleep. Tests/bench: a virtual clock — `acquire()` *returns* the
+The bucket runs on a virtual clock: `acquire(ready)` *returns* the
 scheduled send time instead of sleeping, so politeness logic is
-exercised (and asserted on) without 10-req/s wall-clock waits.
+exercised (and asserted on) without 10-req/s wall-clock waits; the
+real-pace fetch sleeps until that time itself. `ready` is the earliest
+moment the caller may send, e.g. the end of a retry's backoff, so time
+spent backing off counts toward the next token.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
 class TokenBucket:
-    """Classic token bucket: capacity `burst`, refill `rate`/sec."""
+    """Token bucket of capacity one: sends at least 1/`rate` s apart."""
 
     rate: float
-    burst: float = 1.0
-    now: float = 0.0
-    tokens: float = field(default=-1.0)
+    last: float = float("-inf")
 
-    def __post_init__(self) -> None:
-        if self.tokens < 0:
-            self.tokens = self.burst
-
-    def acquire(self) -> float:
-        """Reserve one token at or after the bucket's clock. Returns the
-        send time; advances the clock to it. Never sleeps — callers that
-        need real pacing sleep until the returned time themselves.
-        """
-        if self.tokens < 1.0:
-            self.now += (1.0 - self.tokens) / self.rate
-            self.tokens = 1.0
-        self.tokens -= 1.0
-        return self.now
+    def acquire(self, ready: float) -> float:
+        """Reserve the first send slot at or after `ready`. Returns the
+        send time and records it; never sleeps."""
+        self.last = max(ready, self.last + 1.0 / self.rate)
+        return self.last
 
 
 def per_bucket_rate(host_budget_per_sec: float, n_buckets: int) -> float:

@@ -107,7 +107,7 @@ def _murmur3_int32(v: int, seed: int = 42) -> int:
 
 
 @lru_cache(maxsize=None)
-def partition_slots(n_buckets: int) -> tuple[int, ...] | None:
+def partition_slots(n_buckets: int) -> tuple[int, ...]:
     """slots[bucket] = an int whose HashPartitioning hash lands on a
     DISTINCT partition per bucket (slots[b] -> partition b of
     n_buckets).
@@ -123,8 +123,9 @@ def partition_slots(n_buckets: int) -> tuple[int, ...] | None:
     buckets 1:1. Representatives are found by scanning v = 0, 1, ...
     for each residue (coupon collector, ~n ln n tries) with a pure-
     Python mirror of the partitioner hash — no Spark job needed.
-    None when a residue is not found within the scan budget (then
-    callers fall back to raw host_bucket partitioning)."""
+    Every n_buckets in 1..256 and each power of two up to 8192 finds
+    all its residues well inside the scan budget; running out of it
+    raises."""
     reps: dict[int, int] = {}
     budget = 1000 * n_buckets + 1000
     for v in range(budget):
@@ -133,14 +134,12 @@ def partition_slots(n_buckets: int) -> tuple[int, ...] | None:
             reps[t] = v
             if len(reps) == n_buckets:
                 return tuple(reps[t] for t in range(n_buckets))
-    return None
+    raise ValueError(f"no partition slot mapping for {n_buckets} buckets")
 
 
-def bucket_slot_col(host_bucket: Column | str, n_buckets: int) -> Column | None:
-    """`_pslot` expression for `host_bucket` (None = no mapping)."""
+def bucket_slot_col(host_bucket: Column | str, n_buckets: int) -> Column:
+    """`_pslot` expression for `host_bucket`."""
     slots = partition_slots(n_buckets)
-    if slots is None:
-        return None
     c = F.col(host_bucket) if isinstance(host_bucket, str) else host_bucket
     return F.element_at(F.array(*[F.lit(int(s)) for s in slots]), c + 1)
 
@@ -185,9 +184,7 @@ def assign_waves(
     # and window on _pslot — 1:1 with host_bucket but chosen so the
     # partitioner places every bucket on its OWN partition (see
     # partition_slots); groups are identical either way.
-    slot = bucket_slot_col("host_bucket", n_buckets)
-    if slot is not None:
-        df = df.withColumn("_pslot", slot)
+    df = df.withColumn("_pslot", bucket_slot_col("host_bucket", n_buckets))
     df = bucket_partitioned(df, n_buckets)
     w = Window.partitionBy(bucket_key(df)).orderBy(
         F.col("form_weight").desc(),

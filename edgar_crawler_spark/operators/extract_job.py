@@ -73,10 +73,10 @@ def _row_metadata(row: Any) -> dict[str, Any]:
     return md
 
 
-def make_extractor(options: ExtractionOptions | None = None):
-    """Build the mapInPandas function (a closure over options — small,
-    pickled once per task, not per row)."""
-    options = options or ExtractionOptions()
+def make_extractor():
+    """Build the mapInPandas function (a closure over the reference's
+    default options — small, pickled once per task, not per row)."""
+    options = ExtractionOptions()
 
     def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sys.setrecursionlimit(30000)
@@ -115,7 +115,6 @@ def make_extractor(options: ExtractionOptions | None = None):
 
 def extract_items_job(
     pages: DataFrame,
-    options: ExtractionOptions | None = None,
     partitions: int | None = None,
 ) -> DataFrame:
     """pages (url, html, cik, company, form_type, filing_date,
@@ -125,4 +124,4 @@ def extract_items_job(
         # balance by url hash when upstream partitioning is skewed
         # (e.g. pages clustered by crawl order/host)
         pages = pages.repartition(partitions, F.col("url"))
-    return pages.mapInPandas(make_extractor(options), schema=RESULT_SCHEMA)
+    return pages.mapInPandas(make_extractor(), schema=RESULT_SCHEMA)

@@ -79,14 +79,16 @@ def get_spark(
         .config("spark.python.worker.reuse", "true")
         # Deterministic hashing inside python workers (anchor_hash etc.).
         .config("spark.executorEnv.PYTHONHASHSEED", "0")
-        # Python DataSource connectors (sources/pyds.py) handle their
-        # own predicate pushdown.
-        .config("spark.sql.python.filterPushdown.enabled", "true")
     )
     extra_conf = dict(extra_conf or {})
     if os.path.isdir(_ENGINE_ROOT):
+        # `python -m` would put the JVM's working directory first on
+        # the workers' path, so a checkout the driver was started in
+        # would shadow _ENGINE_ROOT; safe_path (CPython >= 3.11) leaves
+        # it off
         builder = builder.config(
-            "spark.python.daemon.module", "edgar_crawler_spark.pydaemon")
+            "spark.python.daemon.module", "edgar_crawler_spark.pydaemon"
+        ).config("spark.executorEnv.PYTHONSAFEPATH", "1")
         env_path = extra_conf.get("spark.executorEnv.PYTHONPATH")
         extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
             [_ENGINE_ROOT] + ([env_path] if env_path else []))

@@ -1,13 +1,3 @@
-from .jobs import (
-    stream_sessionize,
-    stream_extract,
-    stream_fetch_rate,
-    stream_frontier_foreachbatch,
-)
+from .jobs import stream_fetch_rate, stream_sessionize
 
-__all__ = [
-    "stream_sessionize",
-    "stream_extract",
-    "stream_fetch_rate",
-    "stream_frontier_foreachbatch",
-]
+__all__ = ["stream_fetch_rate", "stream_sessionize"]

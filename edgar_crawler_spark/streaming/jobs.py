@@ -1,75 +1,23 @@
 """Structured Streaming jobs.
 
 The reference has NO streaming runtime (SURVEY.md §2.9) — its
-incrementality is "skip what's on disk" resume batching. Four
-streaming duals remain:
+incrementality is "skip what's on disk" resume batching, which the
+crawl keeps as committed snapshots (frontier/state.py). Two streaming
+duals remain:
 
-1. `stream_extract` — incremental extraction: pages land in the pages
-   table (a file/Iceberg stream source); the SAME `extract_items_job`
-   stage runs per micro-batch; the sink checkpoint gives exactly-once.
-   Each run drains the backlog with `Trigger.AvailableNow` and stops;
-   running it again processes only the pages that landed since.
-   Because extraction is stateless map-side work, a micro-batch never
-   shuffles.
-
-2. `stream_fetch_rate` — operational metrics: windowed fetch
+1. `stream_fetch_rate` — operational metrics: windowed fetch
    throughput with a watermark bounding state for late fetch-log rows
    (the streaming dual of the batch `sliding_event_rate` query).
 
-3. `stream_frontier_foreachbatch` — the crawl loop as a stream: each
-   micro-batch of newly-discovered URLs is admitted into the frontier
-   (canonical form → URL-seen filter → priority ranking, one snapshot
-   commit) and then crawled by the SAME wave loop via foreachBatch, so
-   batch and streaming share every operator and every test. Like
-   `stream_extract`, a run drains the available files and stops; the
-   streaming checkpoint tracks source offsets while the SnapshotStore
-   remains the source of truth for crawl state (idempotent commits →
-   exactly-once effects even on micro-batch replay).
-
-4. `stream_sessionize` — session windows over an event stream, the
+2. `stream_sessionize` — session windows over an event stream, the
    watermarked dual of the batch `sessionize` and `session_window_agg`
    queries.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from ..extraction import ExtractionOptions
-from ..operators.extract_job import extract_items_job
-from ..synth import PAGES_SCHEMA
-
-
-def stream_extract(
-    spark: SparkSession,
-    pages_path: str,
-    out_path: str,
-    checkpoint: str,
-    options: ExtractionOptions | None = None,
-) -> StreamingQuery:
-    """File-stream the pages table → extraction → parquet sink.
-    Incremental + exactly-once: the checkpoint remembers which page
-    files were processed; appending new files and re-running processes
-    only the delta (the streaming replacement for the reference's
-    skip-if-output-exists resume, extract_items.py:1484-1486)."""
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        # bound micro-batch size so executor memory is driven by
-        # config, not by however many files landed since last run
-        .option("maxFilesPerTrigger", 8)
-        .parquet(pages_path)
-    )
-    return (
-        extract_items_job(pages, options)
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_fetch_rate(fetch_log: DataFrame) -> DataFrame:
@@ -93,44 +41,6 @@ def stream_fetch_rate(fetch_log: DataFrame) -> DataFrame:
             "n_failed",
             "sum_bytes",
         )
-    )
-
-
-def stream_frontier_foreachbatch(
-    spark: SparkSession,
-    urls_path: str,
-    checkpoint: str,
-    crawl_job,
-) -> StreamingQuery:
-    """Discovered-URL stream → admission, then waves to exhaustion,
-    per micro-batch.
-
-    `crawl_job` is a frontier.CrawlJob whose SnapshotStore carries the
-    real state; foreachBatch only *feeds* it. Replayed micro-batches
-    are harmless: `CrawlJob.merge` admits a batch in canonical form
-    and drops URLs already in the committed seen set, so re-delivered
-    URLs are never fetched again (idempotent effects = streaming
-    exactly-once)."""
-    urls = (
-        spark.readStream.schema(
-            "url string, cik string, company string, form_type string, "
-            "filing_date string, accession string"
-        )
-        .option("maxFilesPerTrigger", 4)
-        .parquet(urls_path)
-    )
-
-    def admit_and_crawl(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        crawl_job.merge(batch_df, stage="stream_merge", batch_id=batch_id)
-        crawl_job.run(max_waves=None)
-
-    return (
-        urls.writeStream.foreachBatch(admit_and_crawl)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

@@ -264,9 +264,8 @@ class TestOrdering:
             _murmur3_int32, partition_slots,
         )
 
-        for n in (2, 3, 4, 8, 16, 256, 1024):
+        for n in (*range(1, 257), 1024):
             s = partition_slots(n)
-            assert s is not None
             assert len({_murmur3_int32(v) % n for v in s}) == n
 
     def test_one_bucket_per_partition(self, spark):
@@ -302,13 +301,51 @@ class TestOrdering:
 
 class TestPoliteness:
     def test_token_bucket_rate(self):
-        tb = TokenBucket(rate=2.0, burst=1.0)
-        times = [tb.acquire() for _ in range(21)]
+        tb = TokenBucket(rate=2.0)
+        times = [tb.acquire(0.0) for _ in range(21)]
         assert times == sorted(times)
-        # after the initial burst token, steady state is 1/rate gaps
+        # after the first token, steady state is 1/rate gaps
         gaps = [b - a for a, b in zip(times[1:], times[2:])]
         assert all(g >= 0.5 - 1e-9 for g in gaps)
         assert times[-1] >= 19 * 0.5 - 1e-9
+
+    def test_token_bucket_credits_time_spent_waiting(self):
+        """A send that becomes ready after the next token is due goes
+        out when it is ready, not one token interval later."""
+        tb = TokenBucket(rate=2.0)
+        assert [tb.acquire(0.0), tb.acquire(0.0)] == [0.0, 0.5]
+        assert tb.acquire(0.5 + 5.0) == 5.5
+        # ready before the next token: the token decides
+        assert tb.acquire(5.6) == 6.0
+
+    def test_retry_leaves_after_backoff_or_token(self, spark):
+        """In one bucket, a url whose first attempt fails is retried
+        max(backoff, 1/rate) after that attempt: the backoff and the
+        token interval overlap instead of adding up."""
+        from edgar_crawler_spark.frontier.fetch import BACKOFF_FACTOR, fetch_wave
+
+        wave = assign_waves(_frontier_df(spark, 6), n_buckets=1, wave_size=6)
+        urls = [r.url for r in wave.orderBy("bucket_rank").select("url").collect()]
+        flaky = urls[2]
+
+        class FlakyOnce:
+            def get(self, url, form_type, attempt):
+                return None if url == flaky and attempt == 1 else b"<html>ok</html>"
+
+        # token interval 1 s (longer than the first backoff) and 0.05 s
+        for budget in (1.0, 20.0):
+            rows = fetch_wave(
+                wave, host_budget_per_sec=budget, n_buckets=1,
+                transport_factory=FlakyOnce,
+            ).collect()
+            sched = {r.url: r.sched_ts for r in rows}
+            attempts = {r.url: r.attempts for r in rows}
+            assert attempts[flaky] == 2 and sum(attempts.values()) == 7
+            gap = 1.0 / budget
+            first_try = sched[urls[1]] + gap
+            assert sched[flaky] == pytest.approx(
+                first_try + max(BACKOFF_FACTOR, gap))
+            assert sched[urls[3]] == pytest.approx(sched[flaky] + gap)
 
     def test_crawl_respects_host_budget(self, spark, tmp_path):
         job = CrawlJob(
@@ -325,11 +362,11 @@ class TestPoliteness:
         for _, grp in log.groupby("host_bucket"):
             ts = sorted(grp.sched_ts)
             gaps = [b - a for a, b in zip(ts, ts[1:])]
-            # burst=1: beyond the first token every send is paced
+            # one token: beyond the first send every send is paced
             assert all(g >= 1 / rate - 1e-6 for g in gaps[1:] + gaps[:1] if g > 0) or all(
                 g >= 1 / rate - 1e-6 for g in gaps[1:]
             )
-        # total host throughput over the wave ≤ budget (+ burst slack)
+        # total host throughput over the wave ≤ budget (+ first-token slack)
         ts_all = sorted(log.sched_ts)
         span = max(ts_all[-1] - ts_all[0], 1e-9)
         assert (len(ts_all) - 4) / span <= 10.0 + 1e-6
@@ -958,8 +995,8 @@ class TestWriteOnceWave:
     def test_merge_version_reads_the_whole_state(self, spark, tmp_path):
         """A merge writes only the frontier, yet its version lists seen
         and company_info: reading them there equals reading them at the
-        version before, and seen's changelog across the merge is
-        empty."""
+        version before, seen's changelog across the merge is empty, and
+        the next wave appends to the inherited seen list."""
         from edgar_crawler_spark.frontier.state import snapshot_diff
 
         store = SnapshotStore(str(tmp_path / "whole"))
@@ -974,6 +1011,10 @@ class TestWriteOnceWave:
             )
         assert snapshot_diff(spark, store, "seen", v - 1, v, ["url"]).count() == 0
         assert store.read(spark, "pages", v) is None
+        # the wave after it appends to the list the merge inherited
+        job.run_wave()
+        assert store.entry("seen", v + 1)["dirs"] == (
+            store.entry("seen", v)["dirs"] + [f"v{v + 1}/seen"])
         # a rerank and a compaction version read the whole state too
         CrawlJob(
             spark, store, n_buckets=2, wave_size=7,

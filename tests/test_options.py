@@ -29,8 +29,6 @@ CALLER_PATHS = ("edgar_crawler_spark", "jobs", "tools", "perfbench", "tests",
 # Defaulted parameters that stay although nothing passes them, each with
 # its reason. Keys are "<module>:<function or Class.method>(<param>)".
 KEEP = {
-    "streaming.jobs:stream_extract(options)":
-        "carries the reference's config.json (ExtractionOptions)",
     "frontier.fetch:fetch_extract_wave(extraction_options)":
         "carries the reference's config.json (ExtractionOptions)",
     "frontier.fetch:fetch_extract_wave(robots)":

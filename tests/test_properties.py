@@ -61,14 +61,15 @@ class TestBloomProperties:
 class TestTokenBucketProperties:
     @given(
         st.floats(min_value=0.1, max_value=100.0),
-        st.integers(min_value=2, max_value=200),
+        st.lists(st.floats(min_value=0.0, max_value=50.0), min_size=2, max_size=200),
     )
     @settings(max_examples=50, deadline=None)
-    def test_rate_never_exceeded(self, rate, n):
-        tb = TokenBucket(rate=rate, burst=1.0)
-        times = [tb.acquire() for _ in range(n)]
+    def test_rate_never_exceeded(self, rate, ready):
+        tb = TokenBucket(rate=rate)
+        times = [tb.acquire(r) for r in ready]
         assert times == sorted(times)
-        # over any window, sends <= burst + rate * window
+        assert all(t >= r for t, r in zip(times, ready))
+        # over any window, sends <= 1 + rate * window
         for i in range(len(times)):
             for j in range(i + 1, len(times)):
                 window = times[j] - times[i]

@@ -38,6 +38,35 @@ class TestWorkerPath:
         assert os.path.isdir(os.path.dirname(row.pyspark)), row.pyspark
 
 
+def _worker_engine(batches):
+    import sys
+
+    import pandas as pd
+
+    import edgar_crawler_spark
+
+    for _ in batches:
+        pass
+    yield pd.DataFrame(
+        {"safe_path": [sys.flags.safe_path], "engine": [edgar_crawler_spark.__file__]})
+
+
+class TestWorkerEngine:
+    def test_worker_imports_the_engine_from_its_root(self, spark):
+        # the daemon runs as `python -m`, which without safe_path puts
+        # the JVM's working directory first on the workers' path: a
+        # driver started in another checkout would run that code
+        from edgar_crawler_spark.session import _ENGINE_ROOT
+
+        row = (
+            spark.range(1, numPartitions=1)
+            .mapInPandas(_worker_engine, "safe_path boolean, engine string")
+            .collect()[0]
+        )
+        assert row.safe_path is True
+        assert os.path.commonpath([row.engine, _ENGINE_ROOT]) == _ENGINE_ROOT, row
+
+
 def _worker_heap(batches):
     import gc
 

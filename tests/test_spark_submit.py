@@ -1,6 +1,7 @@
 """The north rule's deployment shape, executed literally: package the
 engine as a zip and launch the crawl through `spark-submit --py-files`
-in a separate JVM, then resume it the same way."""
+in a separate JVM, then resume it the same way and extract every page
+it crawled."""
 
 from __future__ import annotations
 
@@ -64,6 +65,12 @@ class TestSparkSubmitLaunch:
         )
         assert s1["waves_run"] == 2 and s1["n_fetched"] == 40
 
-        s2 = _submit(zpath, "--store", store, "--resume")
+        extracted = str(tmp_path / "extracted")
+        s2 = _submit(zpath, "--store", store, "--resume", "--extract-out", extracted)
         assert s2["n_fetched"] == 20  # exactly the remainder, no refetch
         assert s1["n_failed"] == s2["n_failed"] == 0
+        # --extract-out extracts every page of both runs
+        assert s2["extracted_rows"] == 60
+        payloads = spark.read.parquet(extracted).select("url", "payload_json").collect()
+        assert len({r.url for r in payloads}) == 60
+        assert all(r.payload_json for r in payloads)

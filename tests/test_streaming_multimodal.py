@@ -4,14 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from edgar_crawler_spark.frontier import CrawlJob, SnapshotStore
-from edgar_crawler_spark.frontier.fetch import SimulatedTransport
 from edgar_crawler_spark.operators import multimodal as M
-from edgar_crawler_spark.streaming import (
-    stream_extract,
-    stream_fetch_rate,
-    stream_frontier_foreachbatch,
-)
+from edgar_crawler_spark.streaming import stream_fetch_rate
 from edgar_crawler_spark.synth import pages_df
 from edgar_crawler_spark.tables import load_table
 
@@ -40,27 +34,7 @@ class TestMultimodal:
         assert pdf.frame_hash.str.len().eq(32).all()
 
 
-class TestStreamExtract:
-    def test_incremental_exactly_once(self, spark, tmp_path):
-        pages_dir = str(tmp_path / "pages")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        pages_df(spark, seed=11, n=40).write.mode("append").parquet(pages_dir)
-        q = stream_extract(spark, pages_dir, out_dir, ckpt)
-        q.awaitTermination(120)
-        got1 = spark.read.parquet(out_dir)
-        assert got1.count() == 40
-        assert got1.filter(F.col("n_items") > 0).count() == 40
-
-        # append a second batch of NEW pages; only the delta reruns
-        pages_df(spark, seed=12, n=25).write.mode("append").parquet(pages_dir)
-        q = stream_extract(spark, pages_dir, out_dir, ckpt)
-        q.awaitTermination(120)
-        got2 = spark.read.parquet(out_dir)
-        assert got2.count() == 65  # 40 old (not reprocessed) + 25 new
-        assert got2.select("url").distinct().count() == 65
-
+class TestStreamFetchRate:
     def test_windowed_fetch_rate_batch_parity(self, spark):
         # run the streaming aggregation logic on a static frame (the
         # streaming plan is identical; watermark is a no-op in batch)
@@ -74,88 +48,6 @@ class TestStreamExtract:
         assert pdf.n_fetched.sum() == 60
         assert (pdf.n_failed == 0).all()
         assert pdf.sum_bytes.sum() > 0
-
-
-class TestStreamFrontier:
-    def test_foreachbatch_waves_exactly_once(self, spark, tmp_path):
-        from tests.test_frontier import _frontier_df
-
-        urls_dir = str(tmp_path / "urls")
-        ckpt = str(tmp_path / "ckpt")
-        store = SnapshotStore(str(tmp_path / "store"))
-        job = CrawlJob(
-            spark, store, n_buckets=4, wave_size=50,
-            transport_factory=lambda: SimulatedTransport(transient_pct=0),
-        )
-
-        f1 = _frontier_df(spark, 60, seed=21)
-        f1.write.mode("append").parquet(urls_dir)
-        q = stream_frontier_foreachbatch(spark, urls_dir, ckpt, job)
-        assert q.awaitTermination(180), "stream query did not terminate"
-        assert job.pages().count() == 60
-
-        # second discovery batch overlaps the first: only new urls fetch
-        f2 = _frontier_df(spark, 90, seed=21)  # superset (same seed)
-        f2.write.mode("append").parquet(urls_dir)
-        q = stream_frontier_foreachbatch(spark, urls_dir, ckpt, job)
-        assert q.awaitTermination(180), "stream query did not terminate"
-        pages = job.pages()
-        assert pages.count() == 90
-        assert pages.select("url").distinct().count() == 90
-
-        # third batch: NON-canonical (/ix?doc=/) variants of already
-        # fetched urls — the merge path must canonicalize before the
-        # seen filter, so nothing is fetched twice (ADVICE r01 medium).
-        from pyspark.sql import functions as F
-        f3 = f1.withColumn(
-            "url",
-            F.regexp_replace("url", r"sec\.gov/", "sec.gov/ix?doc=/"),
-        )
-        f3.write.mode("append").parquet(urls_dir)
-        q = stream_frontier_foreachbatch(spark, urls_dir, ckpt, job)
-        assert q.awaitTermination(180), "stream query did not terminate"
-        pages = job.pages()
-        assert pages.count() == 90
-        assert pages.select("url").distinct().count() == 90
-
-    def test_stream_merge_after_waves_keeps_seen(self, spark, tmp_path):
-        """A stream merge landing after several appended waves writes
-        only the re-ranked frontier: its seen entry lists exactly its
-        parent's delta directories, and the waves after it fetch only
-        the new urls."""
-        from tests.test_frontier import _frontier_df
-
-        urls_dir = str(tmp_path / "urls")
-        ckpt = str(tmp_path / "ckpt")
-        store = SnapshotStore(str(tmp_path / "store"))
-        job = CrawlJob(
-            spark, store, n_buckets=4, wave_size=5,
-            transport_factory=lambda: SimulatedTransport(transient_pct=0),
-        )
-        _frontier_df(spark, 60, seed=23).write.mode("append").parquet(urls_dir)
-        q = stream_frontier_foreachbatch(spark, urls_dir, ckpt, job)
-        assert q.awaitTermination(180), "stream query did not terminate"
-        before = store.latest()
-        assert len(store.manifest(before)["tables"]["seen"]["dirs"]) > 2
-
-        _frontier_df(spark, 90, seed=23).write.mode("append").parquet(urls_dir)
-        q = stream_frontier_foreachbatch(spark, urls_dir, ckpt, job)
-        assert q.awaitTermination(180), "stream query did not terminate"
-        merges = [
-            v for v in store.versions()
-            if store.manifest(v)["summary"].get("stage") == "stream_merge"
-        ]
-        assert merges and merges[0] > before
-        listed = store.manifest(before)["tables"]["seen"]["dirs"]
-        merged = store.manifest(merges[0])["tables"]["seen"]
-        assert merged == store.manifest(merges[0] - 1)["tables"]["seen"]
-        after = store.manifest(merges[0] + 1)["tables"]["seen"]["dirs"]
-        assert after == listed + [f"v{merges[0] + 1}/seen"]
-        pages = job.pages()
-        assert pages.count() == 90
-        assert pages.select("url").distinct().count() == 90
-        assert store.rows("seen") == 90
-        assert store.read(spark, "seen").select("url").distinct().count() == 90
 
 
 class TestStreamSessionize:
